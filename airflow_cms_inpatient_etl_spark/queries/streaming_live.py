@@ -5,7 +5,16 @@ The tumbling and late-data runs are deterministic functions of the fixture
 their final sink tables ARE batch-SQL-expressible and carry real DuckDB
 oracles.  The stream-stream join and the custom stateful operator keep
 rows-only checks (their incremental emission has no SQL form); their
-batch-equivalence is asserted in tests/test_streaming.py instead."""
+batch-equivalence is asserted in tests/test_streaming.py instead.
+
+Contract: a live query leaves the session as it found it — no temp view,
+conf change, active stream or staging dir outlives the call.  Every drain
+goes through ``streaming.jobs.run_stream_to_memory`` (which stops its
+stream, drops its sink view and scopes ``DRAIN_CONF``) or, for foreachBatch
+sinks, through the same ``scoped_conf``; every staging, sink and checkpoint
+dir lives in a ``tempfile.TemporaryDirectory``.  Snapshots the query pins
+are the caller's to release (``sources.registry.release_snapshots``) once
+the result is consumed."""
 
 from __future__ import annotations
 
@@ -13,10 +22,11 @@ import glob
 import os
 import shutil
 import tempfile
-import uuid
 
 from airflow_cms_inpatient_etl_spark.queries.base import register
+from airflow_cms_inpatient_etl_spark.session import scoped_conf
 from airflow_cms_inpatient_etl_spark.streaming.jobs import (
+    DRAIN_CONF,
     run_stream_to_memory,
     stream_events,
     tumbling_counts,
@@ -42,27 +52,11 @@ def streaming_tumbling_live(spark, sf_dir):
     is deterministically equal to the batch tumbling aggregation — which is
     exactly the SQL oracle: a live incremental execution whose final answer
     is still hash-checkable against DuckDB."""
-    stage_dir = tempfile.mkdtemp(prefix="events_stream_")
-    # state-store task dispatch scales with shuffle partitions per stateful
-    # stage per micro-batch; scope the one-shot fixture drain to 8 state
-    # partitions like the other lives (optimization round 15 — a long-lived
-    # production stream sizes this to its cluster once, the checkpoint pins
-    # it after; window counts are associative, so the drained table is
-    # partition-count-invariant)
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with tempfile.TemporaryDirectory(prefix="events_stream_") as stage_dir:
         shutil.copy(f"{sf_dir}/events.parquet", f"{stage_dir}/part-0.parquet")
-        name = f"stream_live_{uuid.uuid4().hex[:8]}"
-        run_stream_to_memory(
-            tumbling_counts(stream_events(spark, stage_dir)), name, output_mode="complete"
+        return run_stream_to_memory(
+            tumbling_counts(stream_events(spark, stage_dir)), output_mode="complete"
         )
-        return spark.table(name)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        # the stream is stopped (run_stream_to_memory drains then stops), so
-        # the file-source staging dir is dead weight — remove it
-        shutil.rmtree(stage_dir, ignore_errors=True)
 
 
 def _stage_single_parquet(df, stage_dir: str, name: str, mtime: float) -> None:
@@ -100,9 +94,7 @@ def _stage_split_parquet(df, split_col, splits, stage_dir: str) -> None:
     # writer may keep one open file per partition; with 2-3 splits the
     # concurrent writers are free and the sort is a pure extra pass
     # (measured: it cost back the saved scan on the 600k-row lineitem split)
-    old_writers = spark.conf.get("spark.sql.maxConcurrentOutputFileWriters")
-    try:
-        spark.conf.set("spark.sql.maxConcurrentOutputFileWriters", str(len(splits) + 1))
+    with scoped_conf(spark, {"spark.sql.maxConcurrentOutputFileWriters": str(len(splits) + 1)}):
         (
             df.withColumn("_split", split_col)
             .coalesce(1)
@@ -110,8 +102,6 @@ def _stage_split_parquet(df, split_col, splits, stage_dir: str) -> None:
             .partitionBy("_split")
             .parquet(tmp)
         )
-    finally:
-        spark.conf.set("spark.sql.maxConcurrentOutputFileWriters", old_writers)
     for label, (name, mtime) in splits.items():
         parts = glob.glob(os.path.join(tmp, f"_split={label}", "part-*.parquet"))
         if not parts:
@@ -180,8 +170,7 @@ def streaming_late_data_live(spark, sf_dir):
     lo_us, hi_us = ev.agg(
         F.unix_micros(F.min("ts")), F.unix_micros(F.max("ts"))
     ).collect()[0]
-    stage_dir = tempfile.mkdtemp(prefix="events_late_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="events_late_") as stage_dir:
         # staged files carry ts as µs longs so the stream schema is explicit
         as_long = ev.withColumn("ts", F.unix_micros("ts"))
         cut_us = F.lit(lo_us + (hi_us - lo_us) // 5)
@@ -209,19 +198,7 @@ def streaming_late_data_live(spark, sf_dir):
             .parquet(stage_dir)
         )
         events = raw.withColumn("ts", F.timestamp_micros("ts"))
-        name = f"stream_late_{uuid.uuid4().hex[:8]}"
-        # 8 state partitions for the drain (see streaming_tumbling_live);
-        # watermark/late-drop semantics depend on batch boundaries
-        # (maxFilesPerTrigger=1), never on the state partition count
-        old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            run_stream_to_memory(tumbling_counts(events), name, output_mode="append")
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        return spark.table(name)
-    finally:
-        shutil.rmtree(stage_dir, ignore_errors=True)
+        return run_stream_to_memory(tumbling_counts(events), output_mode="append")
 
 
 @register(
@@ -249,25 +226,12 @@ def streaming_stream_stream_join_live(spark, sf_dir):
         stream_stream_click_view_join,
     )
 
-    stage_dir = tempfile.mkdtemp(prefix="events_ssj_")
-    # the symmetric-hash join runs one state-store task per shuffle partition
-    # per micro-batch; a vanilla session's 200 partitions would spend ~30 s on
-    # task dispatch for this one-shot fixture drain.  Scope the stream to 8
-    # state partitions (captured at query start; a long-lived production
-    # stream sizes this to its cluster once — the checkpoint pins it after).
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with tempfile.TemporaryDirectory(prefix="events_ssj_") as stage_dir:
         shutil.copy(f"{sf_dir}/events.parquet", f"{stage_dir}/part-0.parquet")
-        name = f"stream_ssj_{uuid.uuid4().hex[:8]}"
         joined = stream_stream_click_view_join(
             stream_events(spark, stage_dir), stream_events(spark, stage_dir)
         )
-        run_stream_to_memory(joined, name, output_mode="append")
-        return spark.table(name)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        shutil.rmtree(stage_dir, ignore_errors=True)
+        return run_stream_to_memory(joined, output_mode="append")
 
 
 @register(
@@ -290,24 +254,14 @@ def streaming_stateful_profile_live(spark, sf_dir):
     accumulates EXACT integer cents (see streaming/stateful.py), so the
     update-mode drain of a single batch emits one bit-deterministic row per
     user equal to the batch decimal aggregate — plain SQL.  Multi-batch
-    accumulation equivalence stays covered in tests/test_streaming.py.  Shuffle partitions
-    are scoped to 8 for the same state-store task-dispatch reason as the
-    stream-stream join above."""
+    accumulation equivalence stays covered in tests/test_streaming.py."""
     from airflow_cms_inpatient_etl_spark.streaming.stateful import running_user_profile
 
-    stage_dir = tempfile.mkdtemp(prefix="events_stateful_")
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with tempfile.TemporaryDirectory(prefix="events_stateful_") as stage_dir:
         shutil.copy(f"{sf_dir}/events.parquet", f"{stage_dir}/part-0.parquet")
-        name = f"stream_state_{uuid.uuid4().hex[:8]}"
-        run_stream_to_memory(
-            running_user_profile(stream_events(spark, stage_dir)), name, output_mode="update"
+        return run_stream_to_memory(
+            running_user_profile(stream_events(spark, stage_dir)), output_mode="update"
         )
-        return spark.table(name)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        shutil.rmtree(stage_dir, ignore_errors=True)
 
 
 @register(
@@ -341,13 +295,7 @@ def streaming_dedup_within_watermark_live(spark, sf_dir):
         F.unix_micros(F.min("ts")), F.unix_micros(F.max("ts"))
     ).collect()[0]
     horizon_min = (hi_us - lo_us) // 60_000_000 + 11
-    stage_dir = tempfile.mkdtemp(prefix="events_dedup_")
-    # stateful dedup runs one state-store task per shuffle partition per
-    # micro-batch; scope the one-shot drain to 8 state partitions (same
-    # rationale as the stream-stream join above)
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with tempfile.TemporaryDirectory(prefix="events_dedup_") as stage_dir:
         as_long = ev.withColumn("ts", F.unix_micros("ts"))
         # the redelivery file is byte-identical to the first — write once,
         # copy the file (was two identical full-scan coalesce(1) jobs)
@@ -370,12 +318,7 @@ def streaming_dedup_within_watermark_live(spark, sf_dir):
             .dropDuplicatesWithinWatermark(["event_id"])
             .select("event_id", "ts", "event_type", "value")
         )
-        name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-        run_stream_to_memory(deduped, name, output_mode="append")
-        return spark.table(name)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        shutil.rmtree(stage_dir, ignore_errors=True)
+        return run_stream_to_memory(deduped, output_mode="append")
 
 
 @register(
@@ -417,10 +360,7 @@ def streaming_session_window_live(spark, sf_dir):
 
     from airflow_cms_inpatient_etl_spark.functions.exact import dsum
 
-    stage_dir = tempfile.mkdtemp(prefix="events_sess_")
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with tempfile.TemporaryDirectory(prefix="events_sess_") as stage_dir:
         shutil.copy(f"{sf_dir}/events.parquet", f"{stage_dir}/part-0.parquet")
         ev = stream_events(spark, stage_dir)
         agg = (
@@ -435,12 +375,7 @@ def streaming_session_window_live(spark, sf_dir):
                 "sum_value",
             )
         )
-        name = f"stream_sess_{uuid.uuid4().hex[:8]}"
-        run_stream_to_memory(agg, name, output_mode="complete")
-        return spark.table(name)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        shutil.rmtree(stage_dir, ignore_errors=True)
+        return run_stream_to_memory(agg, output_mode="complete")
 
 
 @register(
@@ -466,10 +401,7 @@ def streaming_sliding_window_live(spark, sf_dir):
     sink equals the batch sliding aggregation, which is the oracle."""
     import pyspark.sql.functions as F
 
-    stage_dir = tempfile.mkdtemp(prefix="events_slide_")
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with tempfile.TemporaryDirectory(prefix="events_slide_") as stage_dir:
         shutil.copy(f"{sf_dir}/events.parquet", f"{stage_dir}/part-0.parquet")
         ev = stream_events(spark, stage_dir)
         agg = (
@@ -482,12 +414,7 @@ def streaming_sliding_window_live(spark, sf_dir):
                 "n",
             )
         )
-        name = f"stream_slide_{uuid.uuid4().hex[:8]}"
-        run_stream_to_memory(agg, name, output_mode="complete")
-        return spark.table(name)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        shutil.rmtree(stage_dir, ignore_errors=True)
+        return run_stream_to_memory(agg, output_mode="complete")
 
 
 @register(
@@ -524,10 +451,8 @@ def streaming_dedup_gate_live(spark, sf_dir):
         .distinct()
     )
     delta = d.filter(F.col("doc_id") % 10 == 0)
-    stage_dir = tempfile.mkdtemp(prefix="docs_stream_")
-    out_dir = tempfile.mkdtemp(prefix="dedup_gate_out_")
-    ckpt_dir = tempfile.mkdtemp(prefix="dedup_gate_ckpt_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="dedup_gate_") as tmp:
+        stage_dir, out_dir, ckpt_dir = (os.path.join(tmp, sub) for sub in ("stage", "out", "ckpt"))
         # both micro-batch files staged in ONE pass over the delta (guide §6)
         _stage_split_parquet(
             delta,
@@ -540,26 +465,14 @@ def streaming_dedup_gate_live(spark, sf_dir):
             .option("maxFilesPerTrigger", 1)
             .parquet(stage_dir)
         )
-        # out_dir exists but is empty; foreachBatch appends into it
-        shutil.rmtree(out_dir, ignore_errors=True)
-        # 8 shuffle partitions for the per-micro-batch gate joins (see
-        # streaming_tumbling_live) — the gate rows are join results, invariant
-        # to partitioning; the conf is restored before the sink is read back.
-        # The set/restore pair brackets stream start too, and the restore is
-        # its own finally so a q.stop() failure can't leak the setting
-        # (round-15 ADVICE).
-        old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        q = None
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
+        # the per-micro-batch gate joins drain under the same conf as every
+        # memory-sink drain; foreachBatch creates out_dir on its first batch
+        with scoped_conf(spark, DRAIN_CONF):
             q = stream_dedup_gate(stream, index, out_dir, ckpt_dir)
-            q.processAllAvailable()
-        finally:
             try:
-                spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+                q.processAllAvailable()
             finally:
-                if q is not None:
-                    q.stop()
+                q.stop()
         rows = [
             (r["doc_id"], r["n_shingles"], r["n_shared"], r["shared_frac"],
              r["near_dup_of_corpus"])
@@ -570,10 +483,6 @@ def streaming_dedup_gate_live(spark, sf_dir):
             schema="doc_id bigint, n_shingles bigint, n_shared bigint, "
             "shared_frac double, near_dup_of_corpus boolean",
         )
-    finally:
-        shutil.rmtree(stage_dir, ignore_errors=True)
-        shutil.rmtree(out_dir, ignore_errors=True)
-        shutil.rmtree(ckpt_dir, ignore_errors=True)
 
 
 # wire the batch query's oracle onto the live run (same final table by
@@ -614,14 +523,10 @@ def streaming_heavy_hitters_live(spark, sf_dir):
 
     from airflow_cms_inpatient_etl_spark.operators.sketch import cms_estimate
     from airflow_cms_inpatient_etl_spark.sources.registry import load_table
-    from airflow_cms_inpatient_etl_spark.streaming.jobs import (
-        run_stream_to_memory,
-        stream_cms_cells,
-    )
+    from airflow_cms_inpatient_etl_spark.streaming.jobs import stream_cms_cells
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "props")
-    stage_dir = tempfile.mkdtemp(prefix="events_cms_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="events_cms_") as stage_dir:
         # both micro-batch files staged in ONE pass over events (guide §6)
         _stage_split_parquet(
             ev,
@@ -637,42 +542,31 @@ def streaming_heavy_hitters_live(spark, sf_dir):
             .option("maxFilesPerTrigger", 1)
             .parquet(stage_dir)
         )
-        name = f"stream_cms_{uuid.uuid4().hex[:8]}"
-        # 8 state partitions for the drain (see streaming_tumbling_live);
-        # CMS cell updates are associative integer adds — grid invariant
-        old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            run_stream_to_memory(stream_cms_cells(raw), name, output_mode="complete")
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        sketch = spark.table(name)
+        sketch = run_stream_to_memory(stream_cms_cells(raw), output_mode="complete")
 
-        # accountability tail — identical to heavy_hitters_cms, fed by the
-        # STREAMED grid instead of a batch build
-        items = (
-            load_table(spark, sf_dir, "events")
-            .select(F.get_json_object("props", "$.k").cast("long").alias("item"))
-            .filter(F.col("item").isNotNull())
+    # accountability tail — identical to heavy_hitters_cms, fed by the
+    # STREAMED grid instead of a batch build
+    items = (
+        load_table(spark, sf_dir, "events")
+        .select(F.get_json_object("props", "$.k").cast("long").alias("item"))
+        .filter(F.col("item").isNotNull())
+    )
+    exact = items.groupBy("item").agg(F.count(F.lit(1)).alias("exact_count"))
+    est = cms_estimate(exact, sketch, "item", 4, 64)
+    total = exact.agg(F.sum("exact_count").alias("n_total"))
+    return (
+        exact.join(est, "item")
+        .crossJoin(F.broadcast(total))
+        .select(
+            "item",
+            "exact_count",
+            (F.col("cms_estimate") >= F.col("exact_count")).alias("est_ge_exact"),
+            (
+                F.col("cms_estimate") - F.col("exact_count")
+                <= F.expr("8 * n_total div 64")
+            ).alias("within_bound"),
         )
-        exact = items.groupBy("item").agg(F.count(F.lit(1)).alias("exact_count"))
-        est = cms_estimate(exact, sketch, "item", 4, 64)
-        total = exact.agg(F.sum("exact_count").alias("n_total"))
-        return (
-            exact.join(est, "item")
-            .crossJoin(F.broadcast(total))
-            .select(
-                "item",
-                "exact_count",
-                (F.col("cms_estimate") >= F.col("exact_count")).alias("est_ge_exact"),
-                (
-                    F.col("cms_estimate") - F.col("exact_count")
-                    <= F.expr("8 * n_total div 64")
-                ).alias("within_bound"),
-            )
-        )
-    finally:
-        shutil.rmtree(stage_dir, ignore_errors=True)
+    )
 
 
 from airflow_cms_inpatient_etl_spark.queries import curation2 as _curation2  # noqa: E402,F401
@@ -713,15 +607,15 @@ def streaming_percentiles_live(spark, sf_dir):
         _qdigest_flags_from_tree,
     )
     from airflow_cms_inpatient_etl_spark.operators.sketch import dyadic_tree
-    from airflow_cms_inpatient_etl_spark.sources.registry import load_table, snapshot
-    from airflow_cms_inpatient_etl_spark.streaming.jobs import (
-        run_stream_to_memory,
-        stream_qdigest_leaves,
+    from airflow_cms_inpatient_etl_spark.sources.registry import (
+        load_table,
+        snapshot,
+        spread_scan,
     )
+    from airflow_cms_inpatient_etl_spark.streaming.jobs import stream_qdigest_leaves
 
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice")
-    stage_dir = tempfile.mkdtemp(prefix="lineitem_qd_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="lineitem_qd_") as stage_dir:
         # both micro-batch files staged in ONE pass over lineitem (guide §6:
         # one scan+write instead of two — the round-15 deferred item)
         _stage_split_parquet(
@@ -741,40 +635,23 @@ def streaming_percentiles_live(spark, sf_dir):
         cents_stream = raw.select(
             F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents")
         )
-        name = f"stream_qd_{uuid.uuid4().hex[:8]}"
-        # 8 state partitions for the drain (see streaming_tumbling_live);
-        # leaf-histogram updates are associative integer adds — census
-        # invariant; the conf is restored before the batch tail executes
-        old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            run_stream_to_memory(
-                stream_qdigest_leaves(cents_stream, "cents", _QD_BITS),
-                name,
-                output_mode="complete",
-            )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        tree = snapshot(
-            dyadic_tree(spark.table(name), "v", _QD_BITS, radix=_QD_RADIX, weight_col="cnt")
+        leaves = run_stream_to_memory(
+            stream_qdigest_leaves(cents_stream, "cents", _QD_BITS), output_mode="complete"
         )
+    tree = snapshot(dyadic_tree(leaves, "v", _QD_BITS, radix=_QD_RADIX, weight_col="cnt"))
 
-        # verification tail — identical to sketch_qdigest_quantiles, fed by
-        # the STREAMED census instead of a batch build; spread the one-task
-        # fixture scan so the x5 verification expansion parallelizes (guarded
-        # no-op on a parallel production scan)
-        from airflow_cms_inpatient_etl_spark.sources.registry import spread_scan
-
-        vals = spread_scan(
-            load_table(spark, sf_dir, "lineitem").select(
-                "l_orderkey",
-                F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
-            ),
+    # verification tail — identical to sketch_qdigest_quantiles, fed by
+    # the STREAMED census instead of a batch build; spread the one-task
+    # fixture scan so the x5 verification expansion parallelizes (guarded
+    # no-op on a parallel production scan)
+    vals = spread_scan(
+        load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey",
-        ).select("cents")
-        return _qdigest_flags_from_tree(spark, tree, vals)
-    finally:
-        shutil.rmtree(stage_dir, ignore_errors=True)
+            F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
+        ),
+        "l_orderkey",
+    ).select("cents")
+    return _qdigest_flags_from_tree(spark, tree, vals)
 
 
 _REG["streaming_percentiles_live"] = _dc.replace(
@@ -809,28 +686,17 @@ def streaming_asof_live(spark, sf_dir):
     reduces the DRAINED sink — purchase-grained, not stream-grained (the
     `streaming_percentiles_live` drain-then-reduce discipline).  Purchases
     with no click inside the tolerance do not emit (inner as-of).
-    Multi-batch arrival equivalence is asserted in tests/test_round15.py.
-    Shuffle partitions are scoped to 8 for the state-store task-dispatch
-    reason documented on the stream-stream join above."""
+    Multi-batch arrival equivalence is asserted in tests/test_round15.py."""
     from pyspark.sql import functions as F
 
     from airflow_cms_inpatient_etl_spark.streaming.jobs import stream_asof_candidates
 
-    stage_dir = tempfile.mkdtemp(prefix="events_asof_")
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with tempfile.TemporaryDirectory(prefix="events_asof_") as stage_dir:
         shutil.copy(f"{sf_dir}/events.parquet", f"{stage_dir}/part-0.parquet")
-        name = f"stream_asof_{uuid.uuid4().hex[:8]}"
         cand = stream_asof_candidates(
             stream_events(spark, stage_dir), stream_events(spark, stage_dir)
         )
-        run_stream_to_memory(cand, name, output_mode="append")
-        return (
-            spark.table(name)
-            .groupBy("event_id", "user_id", "ts")
-            .agg(F.max("click_ts").alias("last_click_ts"))
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        shutil.rmtree(stage_dir, ignore_errors=True)
+        drained = run_stream_to_memory(cand, output_mode="append")
+    return drained.groupBy("event_id", "user_id", "ts").agg(
+        F.max("click_ts").alias("last_click_ts")
+    )

@@ -16,10 +16,30 @@ here are what we would ship to a real cluster, modulo local-mode sizing:
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
 DEFAULT_APP_NAME = "airflow-cms-inpatient-etl-spark"
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, conf: dict[str, str]):
+    """Set ``conf`` on the session for the body of a ``with`` block, then put
+    every key back as it was — even when the body raises.  A key that was
+    unset before is UNSET again rather than written back as its default, so
+    the session's explicit conf map ends exactly as it started."""
+    saved = {k: spark.conf.get(k, None) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, old in saved.items():
+            if old is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, old)
 
 
 def default_parallelism() -> int:

@@ -14,9 +14,13 @@ store would back this on a real cluster.
 
 from __future__ import annotations
 
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from airflow_cms_inpatient_etl_spark.session import scoped_conf
 
 EVENTS_SCHEMA = T.StructType(
     [
@@ -156,19 +160,40 @@ def stream_asof_candidates(
     ).select("event_id", "user_id", "ts", "click_ts")
 
 
-def run_stream_to_memory(df: DataFrame, name: str, output_mode: str) -> None:
-    """Drive a streaming query to completion against the memory sink (local
-    test harness: processAllAvailable drains the file source synchronously)."""
-    q = (
-        df.writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
+# The session conf every live drain runs under: 8 shuffle (= state-store)
+# partitions.  Stateful operators run one state-store task per shuffle
+# partition per stateful stage per micro-batch, so a vanilla session's 200
+# partitions spend tens of seconds on task dispatch for a one-shot fixture
+# drain.  The count is captured at query start (a long-lived production
+# stream sizes it to its cluster once and the checkpoint pins it after), and
+# every drained result here is invariant to it: window counts and sketch
+# cells are associative adds, joins and per-key state are partitioned by
+# key, and watermark late-drops depend on micro-batch boundaries only.
+DRAIN_CONF = {"spark.sql.shuffle.partitions": "8"}
+
+
+def run_stream_to_memory(df: DataFrame, output_mode: str) -> DataFrame:
+    """Drive a streaming query to completion against the memory sink and
+    return the drained rows (processAllAvailable drains the file source
+    synchronously).
+
+    The sink gets a private name, the stream runs under ``DRAIN_CONF``,
+    and before returning the query is stopped and the sink's temp view is
+    dropped: the session keeps no view, conf or active stream.  The returned
+    DataFrame was resolved from the view while it existed and holds the sink
+    itself, so it stays usable after the drop."""
+    spark = df.sparkSession
+    name = f"drain_{uuid.uuid4().hex}"
     try:
-        q.processAllAvailable()
+        with scoped_conf(spark, DRAIN_CONF):
+            q = df.writeStream.outputMode(output_mode).format("memory").queryName(name).start()
+            try:
+                q.processAllAvailable()
+            finally:
+                q.stop()
+        return spark.table(name)
     finally:
-        q.stop()
+        spark.catalog.dropTempView(name)
 
 
 def stream_upsert_to_parquet(
@@ -199,6 +224,7 @@ def stream_upsert_to_parquet(
     from pyspark.sql import Window as W
 
     from airflow_cms_inpatient_etl_spark.operators.upsert import upsert
+    from airflow_cms_inpatient_etl_spark.sources import registry
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -222,9 +248,13 @@ def stream_upsert_to_parquet(
         else:  # genuinely the first batch
             merged = compacted
         # rows must be materialized before the overwrite truncates the input
-        # (plain parquet has no snapshot isolation; Delta/Iceberg would)
-        pdf_free = merged.localCheckpoint(eager=True)
-        pdf_free.write.mode("overwrite").parquet(target_dir)
+        # (plain parquet has no snapshot isolation; Delta/Iceberg would); the
+        # pinned blocks are freed once the overwrite no longer reads them
+        pinned, ids = registry.tracked_localcheckpoint(merged, eager=True)
+        try:
+            pinned.write.mode("overwrite").parquet(target_dir)
+        finally:
+            registry.release_snapshots(spark, ids=ids)
 
     return (
         updates.writeStream.foreachBatch(merge_batch)

@@ -585,11 +585,15 @@ def main() -> None:
     # then measure engine throughput, not first-touch JIT.
     spark.range(1_000_000).selectExpr("sum(id)").collect()
     warm_dir = "/root/testdata/sf0.001"
+    # a warm-up failure must not kill the measured run, but it is never
+    # silent either: each one is recorded in BENCH_FULL_LATEST.json
+    warmup_errors: dict[str, str] = {}
     for name in HEADLINE:
         try:
             QUERY_REGISTRY[name].fn(spark, warm_dir).write.format("noop").mode("overwrite").save()
-        except Exception:
-            pass  # a warm-up failure must not kill the measured run
+        except Exception as exc:
+            first = str(exc).splitlines()[0][:200] if str(exc) else ""
+            warmup_errors[name] = f"{type(exc).__name__}: {first}"
 
     # Machine probes: fixed synthetic workloads independent of the engine
     # code, so cross-round per-query comparisons can be normalized for
@@ -841,6 +845,7 @@ def main() -> None:
         "contended": contended,
         "registry_total": len(QUERY_REGISTRY),
         "queries_omitted": len(QUERY_REGISTRY) - len(timings),
+        "warmup_errors": warmup_errors,
         **comparable,
     }
     full_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL_LATEST.json")

@@ -186,10 +186,7 @@ def test_stream_qdigest_census_equals_batch_tree(spark, tmp_path):
         .parquet(stage)
     )
     cents = raw.select(F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"))
-    run_stream_to_memory(
-        stream_qdigest_leaves(cents, "cents", 24), "qd_census_test", "complete"
-    )
-    drained = spark.table("qd_census_test")
+    drained = run_stream_to_memory(stream_qdigest_leaves(cents, "cents", 24), "complete")
     vals = load_table(spark, SF_SMOKE, "lineitem").select(
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents")
     )

@@ -254,7 +254,6 @@ def test_streaming_asof_multi_batch_equals_batch(spark, tmp_path):
     watermark never sees out-of-order files).  The drained-and-reduced
     result must equal the batch as-of-with-tolerance."""
     import shutil
-    import uuid
 
     from airflow_cms_inpatient_etl_spark.queries.streaming_live import (
         _stage_single_parquet,
@@ -275,24 +274,19 @@ def test_streaming_asof_multi_batch_equals_batch(spark, tmp_path):
     os.makedirs(stage)
     _stage_single_parquet(e.filter(F.col("ts") <= F.lit(cut)), stage, "a.parquet", 1_000)
     _stage_single_parquet(e.filter(F.col("ts") > F.lit(cut)), stage, "b.parquet", 2_000)
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
-        name = f"asof_mb_{uuid.uuid4().hex[:8]}"
-        run_stream_to_memory(
+        drained = run_stream_to_memory(
             stream_asof_candidates(stream_events(spark, stage), stream_events(spark, stage)),
-            name,
             output_mode="append",
         )
         streamed = {
             (r["event_id"], r["user_id"], r["ts"], r["last_click_ts"])
-            for r in spark.table(name)
+            for r in drained
             .groupBy("event_id", "user_id", "ts")
             .agg(F.max("click_ts").alias("last_click_ts"))
             .collect()
         }
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
         shutil.rmtree(stage, ignore_errors=True)
     p = e.filter(F.col("event_type") == "purchase").select("event_id", "user_id", "ts")
     c = e.filter(F.col("event_type") == "click").select(

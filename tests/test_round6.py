@@ -1000,8 +1000,7 @@ def test_streaming_session_window_eviction_append_mode(spark, tmp_path):
             "n_events",
         )
     )
-    run_stream_to_memory(agg, "sess_evict_test", output_mode="append")
-    out = spark.table("sess_evict_test").toPandas()
+    out = run_stream_to_memory(agg, output_mode="append").toPandas()
     # session 1 (2 events merged) closed and emitted; session 2 still open
     assert len(out) == 1
     assert out.iloc[0].n_events == 2
@@ -1234,7 +1233,7 @@ def test_session_windows_identical_under_rocksdb_state_store(spark, tmp_path):
     os.makedirs(stage)
     shutil.copy("/root/testdata/sf0.001/events.parquet", stage + "/part-0.parquet")
 
-    def drain(name):
+    def drain():
         agg = (
             stream_events(spark, stage)
             .withWatermark("ts", "10 minutes")
@@ -1247,18 +1246,17 @@ def test_session_windows_identical_under_rocksdb_state_store(spark, tmp_path):
                 "n_events",
             )
         )
-        run_stream_to_memory(agg, name, output_mode="complete")
-        return spark.table(name)
+        return run_stream_to_memory(agg, output_mode="complete")
 
     key = "spark.sql.streaming.stateStore.providerClass"
-    default = drain("sess_default_store")
+    default = drain()
     old = spark.conf.get(key, None)
     spark.conf.set(
         key,
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
     try:
-        rocks = drain("sess_rocksdb_store")
+        rocks = drain()
         assert default.count() > 0
         assert default.exceptAll(rocks).count() == 0
         assert rocks.exceptAll(default).count() == 0
@@ -1301,14 +1299,13 @@ def test_transform_with_state_profile_matches_legacy_and_batch(spark):
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
     try:
-        run_stream_to_memory(
+        drained = run_stream_to_memory(
             running_user_profile_tws(stream_events(spark, stage)),
-            "tws_profile",
             output_mode="update",
         )
         got = {
             r["user_id"]: (r["n_events"], round(r["sum_value"], 2))
-            for r in spark.table("tws_profile").collect()
+            for r in drained.collect()
         }
     finally:
         if old is None:

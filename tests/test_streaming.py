@@ -35,10 +35,9 @@ def _table(name):
 
 def test_streaming_tumbling_counts_match_batch(spark, events_stream_dir):
     events = stream_events(spark, events_stream_dir)
-    name = _table("tumbling")
-    run_stream_to_memory(tumbling_counts(events), name, output_mode="complete")
+    drained = run_stream_to_memory(tumbling_counts(events), output_mode="complete")
     streamed = {
-        (r["window_start"], r["event_type"]): r["n"] for r in spark.table(name).collect()
+        (r["window_start"], r["event_type"]): r["n"] for r in drained.collect()
     }
     batch = load_table(spark, SF_SMOKE, "events")
     expected = {
@@ -54,10 +53,9 @@ def test_streaming_append_mode_emits_closed_windows(spark, events_stream_dir):
     """Append mode with a watermark: windows closed by the final watermark are
     emitted; the still-open tail may be withheld — so streamed ⊆ batch."""
     events = stream_events(spark, events_stream_dir)
-    name = _table("append")
-    run_stream_to_memory(tumbling_counts(events), name, output_mode="append")
+    drained = run_stream_to_memory(tumbling_counts(events), output_mode="append")
     streamed = {
-        (r["window_start"], r["event_type"]): r["n"] for r in spark.table(name).collect()
+        (r["window_start"], r["event_type"]): r["n"] for r in drained.collect()
     }
     batch = load_table(spark, SF_SMOKE, "events")
     expected = {
@@ -80,14 +78,12 @@ def test_streaming_dedup_within_watermark(spark, events_stream_dir, tmp_path):
     _sh.copy(f"{events_stream_dir}/part-0.parquet", dup_dir / "a.parquet")
     _sh.copy(f"{events_stream_dir}/part-0.parquet", dup_dir / "b.parquet")
     events = stream_events(spark, str(dup_dir))
-    name = _table("dedup")
-    run_stream_to_memory(
+    drained = run_stream_to_memory(
         dedup_within_watermark(events).select("user_id", "event_type", "ts"),
-        name,
         output_mode="append",
     )
     n_unique = load_table(spark, SF_SMOKE, "events").select("user_id", "event_type", "ts").distinct().count()
-    assert spark.table(name).count() == n_unique
+    assert drained.count() == n_unique
 
 
 def test_foreach_batch_exactly_once_style_sink(spark, events_stream_dir, tmp_path):
@@ -159,16 +155,14 @@ def test_stream_stream_join_matches_batch(spark, events_stream_dir):
         stream_stream_click_view_join,
     )
 
-    name = _table("ssj")
-    run_stream_to_memory(
+    drained = run_stream_to_memory(
         stream_stream_click_view_join(
             stream_events(spark, events_stream_dir), stream_events(spark, events_stream_dir)
         ),
-        name,
         output_mode="append",
     )
     streamed = {
-        (r["click_id"], r["user_id"], r["view_ts"]) for r in spark.table(name).collect()
+        (r["click_id"], r["user_id"], r["view_ts"]) for r in drained.collect()
     }
     e = load_table(spark, SF_SMOKE, "events")
     clicks = e.filter(F.col("event_type") == "click").select(
@@ -255,10 +249,9 @@ def test_kill_mid_batch_recovery_no_loss_no_dup(spark, tmp_path):
 def test_stateful_running_profile(spark, events_stream_dir):
     """applyInPandasWithState: final per-user totals equal the batch aggregate."""
     events = stream_events(spark, events_stream_dir)
-    name = _table("profile")
-    run_stream_to_memory(running_user_profile(events), name, output_mode="update")
+    drained = run_stream_to_memory(running_user_profile(events), output_mode="update")
     # update mode with one input batch → one row per user
-    got = {r["user_id"]: (r["n_events"], round(r["sum_value"], 2)) for r in spark.table(name).collect()}
+    got = {r["user_id"]: (r["n_events"], round(r["sum_value"], 2)) for r in drained.collect()}
     batch = (
         load_table(spark, SF_SMOKE, "events")
         .groupBy("user_id")
@@ -472,9 +465,8 @@ def test_streaming_cms_cells_equal_batch_sketch(spark, events_stream_dir):
     from airflow_cms_inpatient_etl_spark.streaming.jobs import stream_cms_cells
 
     events = stream_events(spark, events_stream_dir)
-    name = _table("cms")
-    run_stream_to_memory(stream_cms_cells(events), name, output_mode="complete")
-    streamed = {(r["row"], r["col"]): r["cnt"] for r in spark.table(name).collect()}
+    drained = run_stream_to_memory(stream_cms_cells(events), output_mode="complete")
+    streamed = {(r["row"], r["col"]): r["cnt"] for r in drained.collect()}
     items = load_table(spark, SF_SMOKE, "events").select(
         F.get_json_object("props", "$.k").cast("long").alias("item")
     )
