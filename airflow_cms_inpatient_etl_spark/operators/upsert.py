@@ -241,7 +241,9 @@ def apply_change_feed(
     Plan: ONE window shuffle compacts the feed to its per-key last change
     (cost ∝ |changes|, not |snapshot|), then one anti join removes every
     touched key from the snapshot and the non-delete winners union back —
-    the same shape ``upsert`` has, plus the delete filter.  At 100 TB the
+    the same shape ``upsert`` has, plus the delete filter.  The anti join
+    takes the raw feed's keys (the compacted feed has the same key set), so
+    it needs no second window shuffle and broadcasts when small.  At 100 TB the
     anti join is the file-rewrite selector of a MERGE, and the compaction
     is why replaying a day of CDC costs one pass over the day's feed.
     """
@@ -253,6 +255,6 @@ def apply_change_feed(
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-    survived = snapshot.join(latest, key_cols, "left_anti")
+    survived = snapshot.join(changes.select(*key_cols), key_cols, "left_anti")
     landed = latest.filter(F.col(op_col) != "D").select(*snapshot.columns)
     return survived.unionByName(landed)

@@ -210,24 +210,41 @@ def stream_upsert_to_parquet(
     Spark has no native streaming writer for: each micro-batch is (1)
     compacted to one row per key with the keep-latest window (a dirty CDC
     feed can carry several updates for a key in one batch), then (2) type-1
-    merged into the current table state (``operators/upsert.upsert``) and the
-    table overwritten.  The merge is O(|target| + |batch|) per batch — at
-    100 TB the target would be bucketed on the key and the rewrite
-    partition-scoped (upsert's ``partition_pruning_keys``), making each batch
-    O(changed partitions) instead.  Restart safety comes from the checkpoint:
-    a replayed batch re-merges the same updates, and last-write-wins merging
-    is idempotent, so the table converges to the same state (asserted by the
-    crash-replay test in tests/test_streaming.py).
+    merged into the current table state (``operators/upsert.upsert``'s
+    anti-join + union; the anti join takes the batch's raw keys, the same
+    key set as the compacted rows, so only the window shuffles the batch).
+    The merge is O(|target| + |batch|) per batch — at 100 TB the target
+    would be bucketed on the key and the rewrite partition-scoped.
+
+    Commit by stage and swap: the merge is written to ``<target_dir>.next``,
+    then the target is deleted and the staged dir renamed onto it, so the
+    merge is computed once, inside its write, and nothing is pinned.  A crash
+    while staging leaves the target intact (the replayed batch overwrites
+    the staged dir); a crash between delete and rename leaves a staged dir
+    with the committer's ``_SUCCESS``, which the next batch promotes first.
+    A replayed batch re-merges the same updates, and last-write-wins merging
+    is idempotent, so the table converges to the same state (both crash
+    windows: ``test_stream_upsert_promotes_committed_staging`` and
+    ``test_stream_upsert_overwrites_uncommitted_staging`` in
+    tests/test_session_hygiene.py).  The sink owns the table, so only the
+    first read of a stream run infers its schema; later reads declare the
+    schema of the last write.
 
     Returns the started StreamingQuery (caller drains/stops it).
     """
     from pyspark.sql import Window as W
 
-    from airflow_cms_inpatient_etl_spark.operators.upsert import upsert
-    from airflow_cms_inpatient_etl_spark.sources import registry
+    staging_dir = f"{target_dir}.next"
+    target_schema = None  # of the last write of this stream run
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
+        nonlocal target_schema
         spark = batch_df.sparkSession
+        hpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+        target_path, staging_path = hpath(target_dir), hpath(staging_dir)
+        fs = target_path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+        if not fs.exists(target_path) and fs.exists(hpath(staging_path, "_SUCCESS")):
+            _rename(fs, staging_path, target_path)  # finish an interrupted swap
         w = W.partitionBy(*key_cols).orderBy(F.col(order_col).desc())
         compacted = (
             batch_df.withColumn("__rn", F.row_number().over(w))
@@ -239,22 +256,18 @@ def stream_upsert_to_parquet(
         # (corrupt footer, FS hiccup) must propagate so the batch fails and the
         # checkpoint replays it — swallowing it would silently replace the
         # accumulated table with just this micro-batch.
-        jvm = spark.sparkContext._jvm
-        target_path = jvm.org.apache.hadoop.fs.Path(target_dir)
-        fs = target_path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
         if fs.exists(target_path):
-            target = spark.read.parquet(target_dir)
-            merged = upsert(target, compacted, key_cols)
+            reader = spark.read if target_schema is None else spark.read.schema(target_schema)
+            target = reader.parquet(target_dir)
+            merged = target.join(batch_df.select(*key_cols), key_cols, "left_anti").unionByName(
+                compacted.select(*target.columns)
+            )
         else:  # genuinely the first batch
             merged = compacted
-        # rows must be materialized before the overwrite truncates the input
-        # (plain parquet has no snapshot isolation; Delta/Iceberg would); the
-        # pinned blocks are freed once the overwrite no longer reads them
-        pinned, ids = registry.tracked_localcheckpoint(merged, eager=True)
-        try:
-            pinned.write.mode("overwrite").parquet(target_dir)
-        finally:
-            registry.release_snapshots(spark, ids=ids)
+        merged.write.mode("overwrite").parquet(staging_dir)
+        fs.delete(target_path, True)
+        _rename(fs, staging_path, target_path)
+        target_schema = merged.schema
 
     return (
         updates.writeStream.foreachBatch(merge_batch)
@@ -262,6 +275,13 @@ def stream_upsert_to_parquet(
         .outputMode("update")
         .start()
     )
+
+
+def _rename(fs, src, dst) -> None:
+    """Hadoop ``rename`` reports failure by returning False; raise instead,
+    so the batch fails and the checkpoint replays it."""
+    if not fs.rename(src, dst):
+        raise OSError(f"could not rename {src} to {dst}")
 
 
 def stream_qdigest_leaves(rows: DataFrame, value_col: str, bits: int) -> DataFrame:

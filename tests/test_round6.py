@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from airflow_cms_inpatient_etl_spark.operators.graph import pagerank_integer
 from airflow_cms_inpatient_etl_spark.operators.sketch import cms_merge
+from airflow_cms_inpatient_etl_spark.session import scoped_conf
 from airflow_cms_inpatient_etl_spark.sources.registry import load_table
 from tests.conftest import SF_ORACLE
 
@@ -1212,6 +1213,12 @@ def test_text_lines_roundtrip(spark, tmp_path):
     assert got.count() == 7
 
 
+ROCKSDB_CONF = {
+    "spark.sql.streaming.stateStore.providerClass":
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+}
+
+
 @pytest.mark.slow
 def test_session_windows_identical_under_rocksdb_state_store(spark, tmp_path):
     """The 100 TB state backend: the same session-window stream drained under
@@ -1248,23 +1255,12 @@ def test_session_windows_identical_under_rocksdb_state_store(spark, tmp_path):
         )
         return run_stream_to_memory(agg, output_mode="complete")
 
-    key = "spark.sql.streaming.stateStore.providerClass"
     default = drain()
-    old = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    with scoped_conf(spark, ROCKSDB_CONF):
         rocks = drain()
         assert default.count() > 0
         assert default.exceptAll(rocks).count() == 0
         assert rocks.exceptAll(default).count() == 0
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
 
 
 def test_transform_with_state_profile_matches_legacy_and_batch(spark):
@@ -1292,26 +1288,17 @@ def test_transform_with_state_profile_matches_legacy_and_batch(spark):
 
     stage = tempfile.mkdtemp(prefix="tws_")
     shutil.copy("/root/testdata/sf0.001/events.parquet", stage + "/part-0.parquet")
-    key = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
     try:
-        drained = run_stream_to_memory(
-            running_user_profile_tws(stream_events(spark, stage)),
-            output_mode="update",
-        )
-        got = {
-            r["user_id"]: (r["n_events"], round(r["sum_value"], 2))
-            for r in drained.collect()
-        }
+        with scoped_conf(spark, ROCKSDB_CONF):
+            drained = run_stream_to_memory(
+                running_user_profile_tws(stream_events(spark, stage)),
+                output_mode="update",
+            )
+            got = {
+                r["user_id"]: (r["n_events"], round(r["sum_value"], 2))
+                for r in drained.collect()
+            }
     finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
         shutil.rmtree(stage, ignore_errors=True)
     batch = (
         load_table(spark, "/root/testdata/sf0.001", "events")

@@ -373,33 +373,18 @@ def test_stateful_sessionize_with_timeout(spark, tmp_path):
         os.rename(os.path.join(staging, part), dest)
         os.utime(dest, (1_700_000_000 + i, 1_700_000_000 + i))
 
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        stream = (
-            spark.readStream.schema("user_id long, ts long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src))
-            .withColumn("ts", SF.timestamp_micros("ts"))
-        )
-        name = _table("sessions_timeout")
-        q = (
-            sessionize_with_timeout(stream, gap="30 minutes")
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-
+    stream = (
+        spark.readStream.schema("user_id long, ts long")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(src))
+        .withColumn("ts", SF.timestamp_micros("ts"))
+    )
+    drained = run_stream_to_memory(
+        sessionize_with_timeout(stream, gap="30 minutes"), output_mode="append"
+    )
     got = {
         r["user_id"]: (r["session_start"], r["session_end"], r["n_events"])
-        for r in spark.table(name).collect()
+        for r in drained.collect()
     }
     from datetime import datetime, timezone
 
