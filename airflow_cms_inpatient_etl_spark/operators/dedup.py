@@ -686,13 +686,7 @@ def cluster_aware_split(
         )
     )
     sz = rep.groupBy("cluster_rep").agg(F.count(F.lit(1)).alias("cluster_size"))
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit(salt), F.col("cluster_rep").cast("string"))), 1, 15
-        ),
-        16,
-        10,
-    ).cast("long")
+    h = hash60(F.col("cluster_rep").cast("string"), seed=salt)
     return rep.join(sz, "cluster_rep").select(
         id_col,
         "cluster_rep",

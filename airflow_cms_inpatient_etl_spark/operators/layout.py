@@ -1,4 +1,5 @@
-"""Write-time data layout for scan pruning: Z-order (Morton) clustering.
+"""Write-time data layout for scan pruning: Z-order (Morton) and Hilbert
+clustering keys, and exact-boundary range shards.
 
 At 100 TB the cheapest query is the one that never reads the file: engines
 skip parquet files/row-groups whose footer min-max ranges exclude the
@@ -18,7 +19,7 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
@@ -205,3 +206,40 @@ def with_hilbert_key(df: DataFrame, qx_col: str, qy_col: str, bits: int = 8, out
         )
         s //= 2
     return df.withColumnRenamed("_hd", out).drop("_hx", "_hy")
+
+
+def exact_range_shards(df: DataFrame, col: str, n_shards: int) -> DataFrame:
+    """Append ``shard_id`` in [1, n_shards]: a size-balanced range shard of the
+    integer column ``col`` with EXACT quantile boundaries — the deterministic
+    version of ``repartitionByRange`` (Spark's RangePartitioner samples, so
+    its boundaries move run to run; a shard manifest that moves breaks
+    resumable training).
+
+    Boundaries come from the value histogram (distinct values + counts —
+    tiny next to the table), cumulated in value order: boundary_i = the min
+    value whose cumulative count reaches ceil(i·n/n_shards).  The cumulative
+    window is single-partition over |distinct values| rows, not the table.
+    Every row then gets 1 + #(boundaries strictly below it) from one
+    broadcast boundary row — a map-side pass, no global sort.  Integer
+    arithmetic end to end, so an oracle reproduces it hash-exactly.  Fewer
+    distinct values than shards leaves some shard ids empty; equal values
+    always share a shard."""
+    h = df.groupBy(F.col(col).alias("v")).agg(F.count(F.lit(1)).alias("c"))
+    n_total = h.agg(F.sum("c").alias("n"))
+    running = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
+    cum = h.select("v", F.sum("c").over(running).alias("cum"))
+    bounds = cum.crossJoin(F.broadcast(n_total)).agg(
+        *[
+            F.min(
+                F.when(
+                    F.col("cum") >= F.expr(f"({i} * n + {n_shards - 1}) div {n_shards}"),
+                    F.col("v"),
+                )
+            ).alias(f"__b{i}")
+            for i in range(1, n_shards)
+        ]
+    )
+    shard = F.lit(1)
+    for i in range(1, n_shards):
+        shard = shard + F.when(F.col(col) > F.col(f"__b{i}"), 1).otherwise(0)
+    return df.crossJoin(F.broadcast(bounds)).select(*df.columns, shard.alias("shard_id"))

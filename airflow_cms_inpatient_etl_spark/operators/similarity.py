@@ -324,8 +324,8 @@ def embedding_neardup_pairs(
 # that lets a 100 TB embedding corpus live in RAM (Jégou et al. 2011, public  #
 # paper).  Codebooks here are seeded from fixed corpus samples so the whole   #
 # pipeline stays engine-portable and oracle-exact; production would train     #
-# them offline with operators/ml.kmeans_fit and broadcast the (m × 16 × d/m)  #
-# codebook exactly the same way.                                              #
+# them offline with kmeans_fit (below pq_train) and broadcast the             #
+# (m × 16 × d/m) codebook exactly the same way.                               #
 # --------------------------------------------------------------------------- #
 
 
@@ -432,7 +432,7 @@ def pq_train(
     as encoding, so training on a sample and broadcasting the result is the
     production shape.  The codebook is a model parameter (m × 16 tiny rows):
     it is materialized on the driver between iterations exactly like k-means
-    centroids (operators/ml.kmeans_fit), keeping the lineage flat."""
+    centroids (kmeans_fit below), keeping the lineage flat."""
     spark = embeddings.sparkSession
     cb = pq_codebook(embeddings, seed_ids, m)
     sv = pq_subvectors(embeddings, m)
@@ -459,6 +459,89 @@ def pq_train(
         )
         cb = spark.createDataFrame(merged.collect(), merged.schema)
     return cb
+
+
+def kmeans_fit(
+    embeddings: DataFrame,
+    k: int = 8,
+    max_iters: int = 20,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+):
+    """Full spherical k-means training loop (Lloyd's): the registered
+    ``embedding_kmeans_iteration`` query is ONE step of this; here the step
+    runs to convergence (no assignment changes) with the same distributed
+    shape — broadcast centroids for assignment, one shuffle per iteration
+    for the per-dimension means, driver coordinating rounds only (the
+    GraphX/Pregel superstep pattern, like connected components).
+
+    Deterministic: init = the k lowest-``id_col`` vectors; assignment ties
+    break on centroid id; convergence is an integer count (vectors whose
+    assignment changed).  Empty clusters keep their previous centroid.
+    ``localCheckpoint`` truncates lineage each round.
+
+    Returns ``(assignments, centroids, n_iters)`` — assignments as
+    (id, centroid_id), centroids as (centroid_id, vec) with double
+    components.
+    """
+    from pyspark.sql import Window as W
+
+    centroids = (
+        embeddings.orderBy(id_col)
+        .limit(k)
+        .select(
+            F.row_number().over(W.orderBy(id_col)).alias("centroid_id"),
+            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias(vec_col),
+        )
+        .localCheckpoint(eager=True)
+    )
+    assignments = None
+    for it in range(1, max_iters + 1):
+        new_assign = (
+            ivf_assign(
+                embeddings,
+                centroids.withColumnRenamed("centroid_id", id_col),
+                id_col,
+                vec_col,
+            )
+            .select(F.col(id_col), "centroid_id")
+            .localCheckpoint(eager=True)
+        )
+        if assignments is not None:
+            changed = (
+                new_assign.withColumnRenamed("centroid_id", "new_cid")
+                .join(assignments, id_col)
+                .filter(F.col("new_cid") != F.col("centroid_id"))
+                .count()
+            )
+            if changed == 0:
+                return assignments, centroids, it - 1
+        assignments = new_assign
+        member_dims = (
+            embeddings.join(assignments, id_col)
+            .select("centroid_id", F.posexplode(F.col(vec_col)).alias("pos", "v"))
+            .groupBy("centroid_id", "pos")
+            .agg(F.avg(F.col("v").cast("double")).alias("m"))
+        )
+        new_centroids = (
+            member_dims.groupBy("centroid_id")
+            .agg(
+                F.transform(
+                    F.array_sort(F.collect_list(F.struct("pos", "m"))), lambda s: s["m"]
+                ).alias(vec_col)
+            )
+        )
+        # empty clusters keep their previous centroid
+        centroids = (
+            centroids.select("centroid_id", F.col(vec_col).alias("__old"))
+            .join(new_centroids, "centroid_id", "left")
+            .select(
+                "centroid_id",
+                F.coalesce(F.col(vec_col), F.col("__old")).alias(vec_col),
+            )
+            .localCheckpoint(eager=True)
+        )
+    return assignments, centroids, max_iters
 
 
 def _registry_snapshot(df):

@@ -52,84 +52,49 @@ from airflow_cms_inpatient_etl_spark.queries import (  # noqa: E402,F401
 # --------------------------------------------------------------------------- #
 _PRIORITY = [
     # ======================================================================= #
-    # ROUND-16 WINDOW (first 50).  Policy: never-checked > code-changed-      #
-    # since-last-check > stalest-green.  Round 15 closed 50/50 green, but the #
-    # r15 window was seated BEFORE that round's optimization commits, so the  #
-    # driver has no oracle row on the new pagerank/CC/streaming/q-digest      #
-    # code (round-15 verdict item #1).  This rotation seats (a) the 16 query  #
-    # paths whose code the round-15 optimizer changed (6 pagerank consumers,  #
-    # 4 connected-components consumers, 5 rescoped streaming lives, the       #
-    # q-digest batch query — streaming_percentiles_live covers the q-digest   #
-    # streaming path), (b) the 5 paths changed by THIS round's optimizer      #
-    # (single-pass staging: streaming_dedup_within_watermark_live — the       #
-    # other four staging consumers are already in (a); the recsys /           #
-    # prefix-jaccard / basket reworks; stats_bootstrap_ci_price, profiled     #
-    # and adjudicated this round), (c) the 20 r9 rows displaced from the      #
-    # round-15 window (queue head, stalest cohort — graph_pagerank is        #
-    # already in (a)), and (d) the first 10 rows of the 42-row r10 cohort in  #
-    # registration order.  The remaining 28 r10 rows are the round-17 queue   #
-    # head.  Staleness histogram entering round 16: 20 r9 / 42 r10 / ...      #
-    # (recsys, basket, dedup_cluster_canonical, streaming_dedup_gate_live     #
-    # are r10 rows seated here via the code-changed rule).                    #
+    # ROUND-17 WINDOW (first 50).  Policy: never-checked > code-changed-      #
+    # since-last-check > stalest-green.  This rotation seats (a) the 28       #
+    # query paths rebuilt from the shared curation stages (hash60,            #
+    # top_k_per_group, exact_range_shards, temperature_mixture,               #
+    # keep_first_by_key and the pipeline/quality/crawl stage helpers;         #
+    # results hash-identical ×3 SFs, but no correctness round has checked     #
+    # the new code), stalest first; (b) the 21 round-10 rows of the old       #
+    # round-17 queue not already in (a) — docs_source_cap,                    #
+    # stratified_sample_exact_k, decontaminate_embedding_cosine and curation  #
+    # v3/v4/v5/v6 are r10 rows seated via (a); and (c) the stalest r11 row    #
+    # in registration order.  No r10 row is left unseated.  The next queue    #
+    # is the 38 unseated r11 cohort, stalest first, then registration order.  #
     # ======================================================================= #
-    # -- a. code changed by the round-15 optimizer --------------------------- #
-    "graph_pagerank",
-    "graph_personalized_pagerank",
-    "text_textrank_keywords",
-    "crawl_linkgraph_pagerank",
-    "crawl_hits_scores",
-    "crawl_frontier_schedule",
-    "dedup_connected_components",
+    # -- a. rebuilt from the shared curation stages ------------------------- #
+    "decontaminate_embedding_cosine",
+    "docs_source_cap",
+    "stratified_sample_exact_k",
+    "corpus_curation_v6",
+    "corpus_curation_v3",
+    "corpus_curation_v4",
+    "corpus_curation_v5",
+    "recsys_negative_samples",
+    "layout_zorder_locality",
+    "corpus_range_shards",
+    "corpus_mixture_plan",
+    "corpus_curation_v8",
+    "quality_lm_perplexity",
+    "quality_linear_score",
+    "text_html_strip_c4",
+    "dq_group_checksum_udaf",
+    "corpus_curation_pipeline",
+    "sample_language_rebalance",
+    "pack_token_budget",
+    "deterministic_sample",
+    "split_train_test_hash",
+    "corpus_mixture_refresh",
+    "layout_hilbert_locality",
+    "corpus_curation_v9",
+    "text_rolling_hash",
     "split_cluster_aware",
-    "dedup_cluster_canonical",
-    "er_resolve_customers",
-    "streaming_tumbling_live",
-    "streaming_late_data_live",
-    "streaming_dedup_gate_live",
-    "streaming_heavy_hitters_live",
-    "streaming_percentiles_live",
-    "sketch_qdigest_quantiles",
-    # -- b. code changed by the round-16 optimizer --------------------------- #
-    "streaming_dedup_within_watermark_live",
-    "recsys_item_item_cosine",
-    "dedup_prefix_jaccard",
-    "basket_association_rules",
-    "stats_bootstrap_ci_price",
-    # -- c. the 20 displaced r9 rows (graph_pagerank already seated in a) ---- #
-    "q20_dominant_supplier",
-    "q21_waiting_supplier",
-    "q22_idle_customers",
-    "string_functions",
-    "date_functions",
-    "array_functions",
-    "explode_token_counts",
-    "date_spine_monthly",
-    "posexplode_tokens",
-    "json_functions",
-    "events_session_window",
-    "events_asof_last_click",
-    "events_peak_concurrency",
-    "text_tfidf_top_terms",
-    "dedup_cross_doc_spans",
-    "sim_cosine_topk_brute",
-    "multimodal_phash_neardup",
     "corpus_curation_v2",
     "corpus_curation_v7",
-    # -- d. first 10 rows of the r10 cohort (registration order) ------------- #
-    "dq_rowcount_flag",
-    "dq_k_anonymity",
-    "error_safe_functions",
-    "events_sliding_window",
-    "events_dedup_within_window",
-    "events_funnel_conversion",
-    "events_gap_fill_hourly",
-    "events_interval_attribution",
-    "search_hybrid_rrf",
-    "text_mixed_language_flag",
-    # ----------------------- window boundary (50) -------------------------- #
-    # (16 r15-changed + 5 r16-changed + 19 r9 + 10 r10 = 50.)                 #
-    # ROUND-17 QUEUE: the 28 remaining r10 rows below, then everything else   #
-    # in registration order.                                                  #
+    # -- b. the remaining round-10 rows (registration order) ---------------- #
     "dedup_exact_distinct",
     "dedup_exact_text",
     "dedup_fingerprint",
@@ -138,27 +103,24 @@ _PRIORITY = [
     "dedup_simhash_hamming",
     "dedup_cross_doc_lines",
     "corpus_ngram_novelty",
-    "decontaminate_embedding_cosine",
     "multimodal_cdc_chunk_dedup",
     "multimodal_caption_align",
     "decontaminate_ngram_overlap",
-    "docs_source_cap",
-    "stratified_sample_exact_k",
     "bpe_apply_encode",
     "tokenizer_vocab_coverage",
     "corpus_datacard",
-    "corpus_curation_v6",
     "doc_chunk_overlap",
     "semdedup_prune",
     "epoch_shuffle_order",
     "dedup_containment",
     "bloom_semijoin_lineitem",
-    "corpus_curation_v3",
-    "corpus_curation_v4",
-    "corpus_curation_v5",
     "quality_dsir_importance",
     "quality_quantile_normalize",
-    # (remaining rows follow in registration order via _reorder_registry)
+    # -- c. stalest round-11 row -------------------------------------------- #
+    "projection_typed_cast",
+    # ----------------------- window boundary (50) -------------------------- #
+    # (28 code-changed + 21 r10 + 1 r11 = 50.)  Remaining rows follow in      #
+    # registration order via _reorder_registry.                               #
 ]
 
 

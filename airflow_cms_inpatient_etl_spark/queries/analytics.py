@@ -21,7 +21,8 @@ from pyspark.sql import types as T
 
 from airflow_cms_inpatient_etl_spark.functions.exact import dec
 from airflow_cms_inpatient_etl_spark.operators.text import bpe_train, hash60, unigram_viterbi_segment
-from airflow_cms_inpatient_etl_spark.queries.base import register
+from airflow_cms_inpatient_etl_spark.operators.stages import temperature_mixture
+from airflow_cms_inpatient_etl_spark.queries.base import fill_doc, register
 from airflow_cms_inpatient_etl_spark.sources.registry import load_table, snapshot, spread_scan
 
 
@@ -1064,24 +1065,8 @@ def corpus_mixture_plan(spark, sf_dir):
         .cast("long")
         .alias("n_tokens"),
     )
-    denom = per_lang.agg(
-        F.expr(
-            "aggregate(transform(array_sort(collect_list(struct(lang, n_tokens))), "
-            "s -> sqrt(cast(s.n_tokens as double))), cast(0.0 as double), "
-            "(acc, v) -> acc + v)"
-        ).alias("z")
-    )
-    joined = per_lang.crossJoin(F.broadcast(denom))
-    weight = F.sqrt(F.col("n_tokens").cast("double")) / F.col("z")
-    rate = weight * _MIX_BUDGET_TOKENS / F.col("n_tokens")
-    return joined.select(
-        "lang",
-        "n_docs",
-        "n_tokens",
-        weight.alias("weight"),
-        rate.alias("sampling_rate"),
-        F.ceil(rate).cast("long").alias("n_epochs"),
-    )
+    wraw = F.sqrt(F.col("n_tokens").cast("double"))
+    return temperature_mixture(per_lang, "lang", wraw, "n_tokens", _MIX_BUDGET_TOKENS)
 
 
 # --------------------------------------------------------------------------- #
@@ -1748,9 +1733,7 @@ def bpe_train_vocab(spark, sf_dir):
     )
 
 
-bpe_train_vocab.__doc__ = bpe_train_vocab.__doc__.replace(
-    "{_BPE_TRAIN_MERGES}", str(_BPE_TRAIN_MERGES)
-)
+fill_doc(bpe_train_vocab, _BPE_TRAIN_MERGES=_BPE_TRAIN_MERGES)
 
 
 # --------------------------------------------------------------------------- #
@@ -1868,9 +1851,7 @@ def bpe_train_apply_compression(spark, sf_dir):
     )
 
 
-bpe_train_apply_compression.__doc__ = bpe_train_apply_compression.__doc__.replace(
-    "{_BPE_TRAIN_MERGES}", str(_BPE_TRAIN_MERGES)
-)
+fill_doc(bpe_train_apply_compression, _BPE_TRAIN_MERGES=_BPE_TRAIN_MERGES)
 
 
 # --------------------------------------------------------------------------- #
@@ -2176,9 +2157,7 @@ def bpe_apply_encode(spark, sf_dir):
     )
 
 
-bpe_apply_encode.__doc__ = bpe_apply_encode.__doc__.replace(
-    "{n_merges}", str(len(_BPE_MERGES))
-)
+fill_doc(bpe_apply_encode, n_merges=len(_BPE_MERGES))
 
 
 # --------------------------------------------------------------------------- #
@@ -2804,9 +2783,7 @@ def customer_pareto_class(spark, sf_dir):
     )
 
 
-customer_pareto_class.__doc__ = customer_pareto_class.__doc__.replace(
-    "{_nb}", str(_PARETO_BUCKETS)
-)
+fill_doc(customer_pareto_class, _nb=_PARETO_BUCKETS)
 
 
 # --------------------------------------------------------------------------- #
@@ -2949,9 +2926,7 @@ def tokenizer_unigram_viterbi(spark, sf_dir):
     return unigram_viterbi_segment(words, max_piece_len=_UV_MAX_PIECE)
 
 
-tokenizer_unigram_viterbi.__doc__ = tokenizer_unigram_viterbi.__doc__.replace(
-    "{_UV_MAX_PIECE}", str(_UV_MAX_PIECE)
-)
+fill_doc(tokenizer_unigram_viterbi, _UV_MAX_PIECE=_UV_MAX_PIECE)
 
 
 # --------------------------------------------------------------------------- #
@@ -3120,9 +3095,7 @@ def stats_bootstrap_ci_price(spark, sf_dir):
     )
 
 
-stats_bootstrap_ci_price.__doc__ = stats_bootstrap_ci_price.__doc__.replace(
-    "{_BOOT_B}", str(_BOOT_B)
-)
+fill_doc(stats_bootstrap_ci_price, _BOOT_B=_BOOT_B)
 
 
 # --------------------------------------------------------------------------- #
@@ -3343,16 +3316,9 @@ def recsys_negative_samples(spark, sf_dir):
         .select(
             "user_id",
             F.col("draw").cast("long").alias("draw"),
-            (
-                F.conv(
-                    F.substring(
-                        F.md5(F.concat_ws(":", F.col("user_id"), F.col("draw"))), 1, 15
-                    ),
-                    16,
-                    10,
-                ).cast("long")
-                % F.col("n_items")
-            ).alias("idx"),
+            (hash60(F.concat_ws(":", F.col("user_id"), F.col("draw"))) % F.col("n_items")).alias(
+                "idx"
+            ),
         )
     )
     cand = draws.join(F.broadcast(items), "idx").select(
@@ -3363,10 +3329,7 @@ def recsys_negative_samples(spark, sf_dir):
     )
 
 
-if recsys_negative_samples.__doc__:  # None under python -OO
-    recsys_negative_samples.__doc__ = recsys_negative_samples.__doc__.replace(
-        "{_NEG_DRAWS}", str(_NEG_DRAWS)
-    )
+fill_doc(recsys_negative_samples, _NEG_DRAWS=_NEG_DRAWS)
 
 
 # --------------------------------------------------------------------------- #
@@ -4873,10 +4836,7 @@ def skew_salted_aggregate_hot_key(spark, sf_dir):
     )
 
 
-if skew_salted_aggregate_hot_key.__doc__:
-    skew_salted_aggregate_hot_key.__doc__ = skew_salted_aggregate_hot_key.__doc__.replace(
-        "{salts}", str(_SKEW_SALTS)
-    )
+fill_doc(skew_salted_aggregate_hot_key, salts=_SKEW_SALTS)
 
 
 @register(

@@ -29,3 +29,12 @@ def register(name: str, oracle: str | None = None, doc: str = "") -> Callable[[Q
         return fn
 
     return deco
+
+
+def fill_doc(fn: QueryFn, **values: object) -> None:
+    """Fill each ``{name}`` placeholder in ``fn``'s docstring with ``str(value)``.
+
+    A no-op when docstrings are stripped (``python -OO`` sets them to None)."""
+    if fn.__doc__:
+        for name, value in values.items():
+            fn.__doc__ = fn.__doc__.replace("{" + name + "}", str(value))

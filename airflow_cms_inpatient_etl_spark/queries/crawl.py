@@ -20,7 +20,7 @@ implemented on each engine).
 
 from __future__ import annotations
 
-from pyspark.sql import Window as W
+from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from airflow_cms_inpatient_etl_spark.operators.htmltext import (
@@ -38,7 +38,8 @@ from airflow_cms_inpatient_etl_spark.operators.weburl import (
     registrable_domain,
 )
 from airflow_cms_inpatient_etl_spark.operators.graph import pagerank_integer
-from airflow_cms_inpatient_etl_spark.queries.base import register
+from airflow_cms_inpatient_etl_spark.operators.stages import keep_first_by_key
+from airflow_cms_inpatient_etl_spark.queries.base import fill_doc, register
 from airflow_cms_inpatient_etl_spark.sources.registry import load_table, snapshot, spread_scan
 
 # --------------------------------------------------------------------------- #
@@ -312,6 +313,51 @@ _BRACE_LINE = "<p>var config = { mode: production, debug: false };.</p>"
 _LOREM_LINE = "<p>lorem ipsum dolor sit amet consectetur adipiscing.</p>"
 
 
+def _planted_c4(df: DataFrame) -> DataFrame:
+    """The fixture page plant (see the block comment above) run through the
+    C4 strip: ``df`` (doc_id, text, *carried) becomes (doc_id, *carried, nl,
+    kept, clean_text, page_kept) — the page's visible lines, the lines that
+    pass the C4 line rules, their newline join and the page gate flag."""
+    w = F.split(F.trim(F.col("text")), r"\s+")
+    n = F.size(w)
+
+    def sent(start: int, length: int, punct: str):
+        return F.concat(
+            F.lit("<p>"),
+            F.concat_ws(" ", F.slice(w, start, length)),
+            F.lit(punct + "</p>"),
+        )
+
+    html = F.concat(
+        F.lit("<html><head><title>Doc "),
+        F.col("doc_id").cast("string"),
+        F.lit(
+            "</title><style>.m{color:#fff}</style>"
+            '<script type="text/javascript">var a=1;</script></head><body>'
+        ),
+        F.lit('<div class="nav">Home | About | Contact</div>'),
+        sent(1, 8, "."),
+        sent(1, 2, "."),
+        F.lit("<p>Please enable javascript to view this page.</p>"),
+        F.when(n >= 20, sent(9, 12, "?")).otherwise(F.lit("")),
+        F.when(n >= 35, sent(21, 12, "!")).otherwise(F.lit("")),
+        F.lit("<p>copyright terms cookie policy settings menu</p>"),
+        F.when(F.col("doc_id") % 17 == 0, F.lit(_BRACE_LINE)).otherwise(F.lit("")),
+        F.when(F.col("doc_id") % 23 == 0, F.lit(_LOREM_LINE)).otherwise(F.lit("")),
+        F.lit("</body></html>"),
+    )
+    carried = [c for c in df.columns if c not in ("doc_id", "text")]
+    staged = (
+        df.select("doc_id", *carried, html.alias("html"))
+        .select("doc_id", *carried, visible_lines(F.col("html")).alias("nl"))
+        .select("doc_id", *carried, "nl", c4_kept_lines(F.col("nl")).alias("kept"))
+    )
+    clean = F.concat_ws("\n", F.col("kept"))
+    return staged.select(
+        "*", clean.alias("clean_text"), c4_page_kept(F.col("kept"), clean).alias("page_kept")
+    )
+
+
 @register(
     "text_html_strip_c4",
     oracle=f"""
@@ -394,56 +440,17 @@ def text_html_strip_c4(spark, sf_dir):
     split scan.  The oracle independently re-implements the rules with
     DuckDB string/list functions over the identical planted pages."""
     d = load_table(spark, sf_dir, "documents")
-    base = spread_scan(d.select("doc_id", "text"), "doc_id")
-    w = F.split(F.trim(F.col("text")), r"\s+")
-    n = F.size(w)
-
-    def sent(start: int, length: int, punct: str):
-        return F.concat(
-            F.lit("<p>"),
-            F.concat_ws(" ", F.slice(w, start, length)),
-            F.lit(punct + "</p>"),
-        )
-
-    html = F.concat(
-        F.lit("<html><head><title>Doc "),
-        F.col("doc_id").cast("string"),
-        F.lit(
-            "</title><style>.m{color:#fff}</style>"
-            '<script type="text/javascript">var a=1;</script></head><body>'
-        ),
-        F.lit('<div class="nav">Home | About | Contact</div>'),
-        sent(1, 8, "."),
-        sent(1, 2, "."),
-        F.lit("<p>Please enable javascript to view this page.</p>"),
-        F.when(n >= 20, sent(9, 12, "?")).otherwise(F.lit("")),
-        F.when(n >= 35, sent(21, 12, "!")).otherwise(F.lit("")),
-        F.lit("<p>copyright terms cookie policy settings menu</p>"),
-        F.when(F.col("doc_id") % 17 == 0, F.lit(_BRACE_LINE)).otherwise(F.lit("")),
-        F.when(F.col("doc_id") % 23 == 0, F.lit(_LOREM_LINE)).otherwise(F.lit("")),
-        F.lit("</body></html>"),
-    )
-    staged = (
-        base.select("doc_id", html.alias("html"))
-        .select("doc_id", visible_lines(F.col("html")).alias("nl"))
-        .select("doc_id", "nl", c4_kept_lines(F.col("nl")).alias("kept"))
-    )
-    clean = F.concat_ws("\n", F.col("kept"))
+    staged = _planted_c4(spread_scan(d.select("doc_id", "text"), "doc_id"))
     return staged.select(
         "doc_id",
         F.size("nl").cast("long").alias("n_lines_raw"),
         F.size("kept").cast("long").alias("n_lines_kept"),
-        clean.alias("clean_text"),
-        c4_page_kept(F.col("kept"), clean).alias("page_kept"),
+        "clean_text",
+        "page_kept",
     )
 
 
-if text_html_strip_c4.__doc__:  # None under python -OO
-    text_html_strip_c4.__doc__ = (
-        text_html_strip_c4.__doc__
-        .replace("{MIN_LINE_WORDS}", str(MIN_LINE_WORDS))
-        .replace("{MIN_PAGE_LINES}", str(MIN_PAGE_LINES))
-    )
+fill_doc(text_html_strip_c4, MIN_LINE_WORDS=MIN_LINE_WORDS, MIN_PAGE_LINES=MIN_PAGE_LINES)
 
 
 # --------------------------------------------------------------------------- #
@@ -1007,50 +1014,12 @@ def corpus_curation_v9(spark, sf_dir):
         .select("doc_id", F.lit(True).alias("s_url"))
     )
 
-    # stages 3-4 fixture: the text_html_strip_c4 page plant, verbatim
-    w = F.split(F.trim(F.col("text")), r"\s+")
-    n = F.size(w)
-
-    def sent(start: int, length: int, punct: str):
-        return F.concat(
-            F.lit("<p>"),
-            F.concat_ws(" ", F.slice(w, start, length)),
-            F.lit(punct + "</p>"),
-        )
-
-    html = F.concat(
-        F.lit("<html><head><title>Doc "),
-        F.col("doc_id").cast("string"),
-        F.lit(
-            "</title><style>.m{color:#fff}</style>"
-            '<script type="text/javascript">var a=1;</script></head><body>'
-        ),
-        F.lit('<div class="nav">Home | About | Contact</div>'),
-        sent(1, 8, "."),
-        sent(1, 2, "."),
-        F.lit("<p>Please enable javascript to view this page.</p>"),
-        F.when(n >= 20, sent(9, 12, "?")).otherwise(F.lit("")),
-        F.when(n >= 35, sent(21, 12, "!")).otherwise(F.lit("")),
-        F.lit("<p>copyright terms cookie policy settings menu</p>"),
-        F.when(F.col("doc_id") % 17 == 0, F.lit(_BRACE_LINE)).otherwise(F.lit("")),
-        F.when(F.col("doc_id") % 23 == 0, F.lit(_LOREM_LINE)).otherwise(F.lit("")),
-        F.lit("</body></html>"),
-    )
-    staged = (
-        base.select("doc_id", domain.alias("domain"), tld.alias("tld"), html.alias("html"))
-        .select("doc_id", "domain", "tld", visible_lines(F.col("html")).alias("nl"))
-        .select("doc_id", "domain", "tld", c4_kept_lines(F.col("nl")).alias("kept"))
-    )
-    clean = F.concat_ws("\n", F.col("kept"))
+    # stages 3-4: the text_html_strip_c4 page plant and strip
+    cleanp = _planted_c4(
+        base.select("doc_id", "text", domain.alias("domain"), tld.alias("tld"))
+    ).select("doc_id", "domain", "tld", "clean_text", "page_kept")
     ntok = F.expr(r"size(filter(split(trim(clean_text), '\\s+'), x -> x != ''))").cast(
         "long"
-    )
-    cleanp = staged.select(
-        "doc_id",
-        "domain",
-        "tld",
-        clean.alias("clean_text"),
-        c4_page_kept(F.col("kept"), clean).alias("page_kept"),
     )
 
     bl = (
@@ -1086,11 +1055,8 @@ def corpus_curation_v9(spark, sf_dir):
         )
     )
     surv = flags.filter(F.col("s_url") & ~F.col("blocked") & F.col("q_pass"))
-    dw = W.partitionBy("dedup_key").orderBy("doc_id")
-    keptd = (
-        surv.withColumn("rn", F.row_number().over(dw))
-        .filter(F.col("rn") == 1)
-        .select(F.col("doc_id").alias("k_doc"), F.col("ntok").alias("k_ntok"))
+    keptd = keep_first_by_key(surv, "dedup_key").select(
+        F.col("doc_id").alias("k_doc"), F.col("ntok").alias("k_ntok")
     )
     funnel = snapshot(
         flags.join(keptd, flags["doc_id"] == keptd["k_doc"], "left")

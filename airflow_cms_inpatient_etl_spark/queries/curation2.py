@@ -16,10 +16,10 @@ from pyspark.sql import functions as F
 
 from airflow_cms_inpatient_etl_spark.operators.graph import kcore_peel, pagerank_integer
 from airflow_cms_inpatient_etl_spark.operators.sketch import cms_build, cms_estimate
-from airflow_cms_inpatient_etl_spark.queries.base import register
+from airflow_cms_inpatient_etl_spark.operators.stages import temperature_mixture, top_k_per_group
+from airflow_cms_inpatient_etl_spark.queries.base import fill_doc, register
 from airflow_cms_inpatient_etl_spark.operators.text import hash60
 from airflow_cms_inpatient_etl_spark.queries.similarity import _cosine
-from airflow_cms_inpatient_etl_spark.queries.pipeline import _STRAT_SHARDS
 from airflow_cms_inpatient_etl_spark.sources.registry import load_table, snapshot
 
 # --------------------------------------------------------------------------- #
@@ -786,9 +786,7 @@ def corpus_curation_v3(spark, sf_dir):
         f"md5(array_join(slice({tok_sql}, 1, 3), ' ')) AS fingerprint",
         "CAST(substring(source, 4) AS INT) AS src_priority",
         f"size({tok_sql}) AS n_tokens",
-        "CAST(conv(substring(md5('wsamp:' || CAST(doc_id AS STRING)), 1, 15), 16, 10)"
-        " AS BIGINT) AS hv",
-    )
+    ).withColumn("hv", hash60(F.col("doc_id").cast("string"), seed="wsamp:"))
     pct = d.groupBy("lang").agg(
         F.percentile("n_chars", F.lit(0.05)).alias("p05"),
         F.percentile("n_chars", F.lit(0.95)).alias("p95"),
@@ -808,30 +806,15 @@ def corpus_curation_v3(spark, sf_dir):
         .withColumn("priority", F.expr("hv div n_chars"))
         .drop("p05", "p95", "rn", "hv", "fingerprint", "src_priority")
     )
-    # skew-safe two-phase top-K per language (the sharding identity of
-    # pipeline.stratified_sample_exact_k: a global top-K row ranks <= K in
-    # its own salted shard, so the local pass never drops one)
-    local_rank = F.row_number().over(
-        Window.partitionBy("lang", "__shard").orderBy("priority", "doc_id")
-    )
-    gated = (
-        gated.withColumn("__shard", F.col("doc_id") % _STRAT_SHARDS)
-        .withColumn("__lr", local_rank)
-        .filter(F.col("__lr") <= _V3_PER_LANG_K)
-    )
-    lang_rank = F.row_number().over(Window.partitionBy("lang").orderBy("priority", "doc_id"))
-    return (
-        gated.withColumn("lang_rank", lang_rank.cast("long"))
-        .filter(F.col("lang_rank") <= _V3_PER_LANG_K)
-        .select(
-            "doc_id",
-            "lang",
-            "source",
-            "n_chars",
-            "char_entropy",
-            "lang_rank",
-            F.expr("((n_tokens - 1) div 30) + 1").alias("n_chunks"),
-        )
+    ranked = top_k_per_group(gated, "lang", ["priority", "doc_id"], _V3_PER_LANG_K)
+    return ranked.select(
+        "doc_id",
+        "lang",
+        "source",
+        "n_chars",
+        "char_entropy",
+        F.col("rn").cast("long").alias("lang_rank"),
+        F.expr("((n_tokens - 1) div 30) + 1").alias("n_chunks"),
     )
 
 
@@ -1316,7 +1299,7 @@ def graph_bfs_khop(spark, sf_dir):
     return dist.select("node", F.col("d").cast("long").alias("dist"))
 
 
-graph_bfs_khop.__doc__ = graph_bfs_khop.__doc__.replace("{_k}", str(_BFS_K))
+fill_doc(graph_bfs_khop, _k=_BFS_K)
 
 
 # --------------------------------------------------------------------------- #
@@ -1543,40 +1526,13 @@ def corpus_curation_v8(spark, sf_dir):
         )
         .filter(F.col("n_tokens_next") > 0)
     )
-    w = per_src.withColumn(
-        "wraw",
-        F.sqrt(F.col("n_tokens_next").cast("double"))
-        * (
-            F.lit(1)
-            + F.col("tokens_accepted").cast("double") / F.col("n_tokens_next")
-        ),
+    wraw = F.sqrt(F.col("n_tokens_next").cast("double")) * (
+        F.lit(1) + F.col("tokens_accepted").cast("double") / F.col("n_tokens_next")
     )
-    denom = w.agg(
-        F.expr(
-            "aggregate(transform(array_sort(collect_list(struct(source, wraw))), "
-            "s -> s.wraw), cast(0.0 as double), (acc, v) -> acc + v)"
-        ).alias("z")
-    )
-    joined = w.crossJoin(F.broadcast(denom))
-    weight = F.col("wraw") / F.col("z")
-    rate = weight * _V8_BUDGET_TOKENS / F.col("n_tokens_next")
-    return joined.select(
-        "source",
-        "n_delta",
-        "n_dup_gated",
-        "n_accepted",
-        "tokens_carried",
-        "tokens_accepted",
-        "n_tokens_next",
-        weight.alias("weight"),
-        rate.alias("sampling_rate"),
-        F.ceil(rate).cast("long").alias("n_epochs"),
-    )
+    return temperature_mixture(per_src, "source", wraw, "n_tokens_next", _V8_BUDGET_TOKENS)
 
 
-corpus_curation_v8.__doc__ = corpus_curation_v8.__doc__.replace(
-    "{gate}", str(_V8_GATE_BP)
-)
+fill_doc(corpus_curation_v8, gate=_V8_GATE_BP)
 
 
 # --------------------------------------------------------------------------- #
@@ -1661,7 +1617,4 @@ def graph_label_propagation(spark, sf_dir):
     )
 
 
-if graph_label_propagation.__doc__:  # None under python -OO
-    graph_label_propagation.__doc__ = graph_label_propagation.__doc__.replace(
-        "{n}", str(_LPA_ITERS)
-    )
+fill_doc(graph_label_propagation, n=_LPA_ITERS)

@@ -11,7 +11,7 @@ from airflow_cms_inpatient_etl_spark.operators.multimodal import (
     sample_frames,
 )
 from airflow_cms_inpatient_etl_spark.operators.text import hash60, words
-from airflow_cms_inpatient_etl_spark.queries.base import register
+from airflow_cms_inpatient_etl_spark.queries.base import fill_doc, register
 from airflow_cms_inpatient_etl_spark.sources.registry import load_table, snapshot, spread_scan
 
 
@@ -290,11 +290,7 @@ def multimodal_cdc_chunk_dedup(spark, sf_dir):
     )
 
 
-multimodal_cdc_chunk_dedup.__doc__ = (
-    multimodal_cdc_chunk_dedup.__doc__.replace("{_w}", str(_CDC_W))
-    .replace("{_d}", str(_CDC_D))
-    .replace("{_b}", str(_CDC_B))
-)
+fill_doc(multimodal_cdc_chunk_dedup, _w=_CDC_W, _d=_CDC_D, _b=_CDC_B)
 
 
 # --------------------------------------------------------------------------- #
@@ -476,11 +472,12 @@ def multimodal_phash_neardup(spark, sf_dir):
     ).filter(F.col("hamming") <= _PH_T)
 
 
-multimodal_phash_neardup.__doc__ = (
-    multimodal_phash_neardup.__doc__.replace("{_PH_PIX}", str(_PH_PIX))
-    .replace("{_PH_BANDS}", str(_PH_BANDS))
-    .replace("{_PH_BAND_BITS}", str(_PH_BAND_BITS))
-    .replace("{_PH_T}", str(_PH_T))
+fill_doc(
+    multimodal_phash_neardup,
+    _PH_PIX=_PH_PIX,
+    _PH_BANDS=_PH_BANDS,
+    _PH_BAND_BITS=_PH_BAND_BITS,
+    _PH_T=_PH_T,
 )
 
 

@@ -17,6 +17,7 @@ from airflow_cms_inpatient_etl_spark.plans.patient_claims import (
     FLAGSHIP_ORACLE_SQL,
     flagship_testdata,
 )
+from airflow_cms_inpatient_etl_spark.operators.text import hash60
 from airflow_cms_inpatient_etl_spark.queries.base import register
 from airflow_cms_inpatient_etl_spark.sources.registry import load_table
 
@@ -153,13 +154,7 @@ def dq_group_checksum_udaf(spark, sf_dir):
         return len(v)
 
     e = load_table(spark, sf_dir, "events")
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat_ws("|", "event_id", "user_id", "event_type")), 1, 15
-        ),
-        16,
-        10,
-    ).cast("long")
+    h = hash60(F.concat_ws("|", "event_id", "user_id", "event_type"))
     return (
         e.select("event_type", h.alias("rh"))
         .groupBy("event_type")

@@ -15,15 +15,27 @@ eval-set posting list.
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from airflow_cms_inpatient_etl_spark.operators.layout import (
+    equi_width_bucket_int,
+    exact_range_shards,
+    with_hilbert_key,
+    zorder_key_int,
+)
+from airflow_cms_inpatient_etl_spark.operators.stages import (
+    keep_first_by_key,
+    temperature_mixture,
+    top_k_per_group,
+)
 from airflow_cms_inpatient_etl_spark.operators.text import (
     exploded_shingle_hashes,
     hash60,
     normalized_fingerprint,
 )
-from airflow_cms_inpatient_etl_spark.queries.base import register
+from airflow_cms_inpatient_etl_spark.queries.base import fill_doc, register
 from airflow_cms_inpatient_etl_spark.queries.dedup import _CDL_CTES, _SHINGLES_CTE
 from airflow_cms_inpatient_etl_spark.operators.dedup import cross_doc_line_dedup
 from airflow_cms_inpatient_etl_spark.operators.scrub import scrub_text
@@ -53,11 +65,7 @@ def split_train_test_hash(spark, sf_dir):
     reassigns existing ones.  The 60-bit md5-prefix hash is the same portable
     construction used by the dedup operators."""
     d = load_table(spark, sf_dir, "documents")
-    h = F.conv(
-        F.substring(F.md5(F.concat(F.lit("split:"), F.col("doc_id").cast("string"))), 1, 15),
-        16,
-        10,
-    ).cast("long")
+    h = hash60(F.col("doc_id").cast("string"), seed="split:")
     bucket = (h % 100).alias("bucket")
     return d.select(
         "doc_id",
@@ -145,31 +153,43 @@ def corpus_curation_pipeline(spark, sf_dir):
     scan; the only shuffles are the fingerprint groupBy and the (rep ⋈ stats)
     join back — both on keys that AQE handles at scale."""
     d = load_table(spark, sf_dir, "documents")
+    fp = _gated_docs(d).select(
+        "doc_id", "n_tokens", normalized_fingerprint(F.col("text")).alias("fingerprint")
+    )
+    return _fingerprint_reps(fp).select("doc_id", "fingerprint", "n_copies", "n_tokens")
+
+
+_ALL_LEX = sorted({t for lex in _LEXICONS.values() for t in lex})
+
+
+def _gated_docs(d: DataFrame, *carry: str) -> DataFrame:
+    """(doc_id, text, *carry, n_tokens) of the documents passing
+    corpus_curation_pipeline's quality gate (token count in [10, 1000],
+    5·distinct >= tokens) and language gate (>= 1 known-lexicon hit)."""
     w = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
-    all_lex = sorted({t for lex in _LEXICONS.values() for t in lex})
-    stats = d.select(
+    lex = F.array(*[F.lit(t) for t in _ALL_LEX])
+    return d.select(
         "doc_id",
         "text",
+        *carry,
         F.size(w).alias("n_tokens"),
         F.size(F.array_distinct(w)).alias("n_distinct"),
-        F.size(F.array_intersect(F.array_distinct(w), F.array(*[F.lit(t) for t in all_lex]))).alias(
-            "n_lex_hits"
-        ),
-    )
-    filtered = stats.filter(
+        F.size(F.array_intersect(F.array_distinct(w), lex)).alias("n_lex_hits"),
+    ).filter(
         F.col("n_tokens").between(10, 1000)
         & (5 * F.col("n_distinct") >= F.col("n_tokens"))
         & (F.col("n_lex_hits") > 0)
-    )
-    fp = filtered.select(
-        "doc_id", "n_tokens", normalized_fingerprint(F.col("text")).alias("fingerprint")
-    )
+    ).drop("n_distinct", "n_lex_hits")
+
+
+def _fingerprint_reps(fp: DataFrame) -> DataFrame:
+    """Exact near-dup collapse: the min-doc_id row of every ``fingerprint``
+    with the group's copy count ``n_copies`` (fingerprint groupBy + doc_id
+    join back)."""
     reps = fp.groupBy("fingerprint").agg(
         F.min("doc_id").alias("doc_id"), F.count(F.lit(1)).alias("n_copies")
     )
-    return reps.join(fp.select("doc_id", "n_tokens"), "doc_id").select(
-        "doc_id", "fingerprint", "n_copies", "n_tokens"
-    )
+    return reps.select("doc_id", "n_copies").join(fp, "doc_id")
 
 
 @register(
@@ -192,11 +212,7 @@ def sample_language_rebalance(spark, sf_dir):
     filter runs fused in the scan stage — zero shuffles at any scale
     (asserted in tests/test_plans.py)."""
     d = load_table(spark, sf_dir, "documents")
-    h = F.conv(
-        F.substring(F.md5(F.concat(F.lit("strat:"), F.col("doc_id").cast("string"))), 1, 15),
-        16,
-        10,
-    ).cast("long")
+    h = hash60(F.col("doc_id").cast("string"), seed="strat:")
     rate = F.when(F.col("lang") == "en", 5).otherwise(20)
     return d.select("doc_id", "lang", (h % 100).alias("bucket")).filter(F.col("bucket") < rate)
 
@@ -238,38 +254,36 @@ def pack_token_budget(spark, sf_dir):
     by (lang, bucket, shard).  The bucket hash is the portable md5-based one
     (stable across engines/reruns — membership survives corpus growth, unlike
     Spark's xxhash64).  Integer division only — no float-tie hazards."""
-    from pyspark.sql import Window as W
-
     d = load_table(spark, sf_dir, "documents")
-    h = F.conv(
-        F.substring(F.md5(F.concat(F.lit("pack:"), F.col("doc_id").cast("string"))), 1, 15),
-        16,
-        10,
-    ).cast("long")
     t = d.select(
         "doc_id",
         "lang",
-        (h % PACK_BUCKETS).alias("bucket"),
         F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("bigint").alias("n_tokens"),
     )
+    return _packed(t, "n_tokens", 2000).select(
+        "doc_id", "lang", "bucket", "n_tokens", "cum_tokens", "shard"
+    )
+
+
+def _packed(df: DataFrame, tokens: str, budget: int) -> DataFrame:
+    """Greedy doc_id-order packing of ``df`` (doc_id, lang, ``tokens``) into
+    ~``budget``-token shards: appends ``bucket`` (portable hash of doc_id mod
+    PACK_BUCKETS), ``cum_tokens`` (running total inside the (lang, bucket)
+    window) and ``shard`` = (cum_tokens − tokens) div budget."""
     w = (
         W.partitionBy("lang", "bucket")
         .orderBy("doc_id")
         .rowsBetween(W.unboundedPreceding, W.currentRow)
     )
-    c = t.withColumn("cum_tokens", F.sum("n_tokens").over(w))
-    return c.select(
-        "doc_id",
-        "lang",
-        "bucket",
-        "n_tokens",
-        "cum_tokens",
-        F.expr("(cum_tokens - n_tokens) DIV 2000").alias("shard"),
+    bucket = hash60(F.col("doc_id").cast("string"), seed="pack:") % PACK_BUCKETS
+    return (
+        df.withColumn("bucket", bucket)
+        .withColumn("cum_tokens", F.sum(tokens).over(w))
+        .withColumn("shard", F.expr(f"(cum_tokens - {tokens}) div {budget}"))
     )
 
 
 SOURCE_CAP = 10
-_STRAT_SHARDS = 16  # salt fan-out for the skew-safe two-phase top-k windows
 
 
 @register(
@@ -296,38 +310,15 @@ def docs_source_cap(spark, sf_dir):
     reruns, AND corpus growth — re-crawling a domain only ever evicts docs in
     favor of lower-hash newcomers, it never reshuffles the whole quota (the
     property incremental recrawls need; Spark-internal xxhash64 would pin the
-    sample to one engine).  Shape (skew-safe two-phase top-k, round 9): a
-    single window partitioned by source sorts a pathologically hot domain
-    (10⁹ docs at web scale) in ONE task — so phase 1 salts each source into
-    16 shards by the hash and ranks locally in parallel, and phase 2 ranks
-    only the ≤ 16·K survivors per source.  Exact
-    by the sharding identity (a source's global top-K rows each rank ≤ K in
-    their own shard — the oracle runs the naive single window and the hash
-    match proves it)."""
-    from pyspark.sql import Window as W
-
+    sample to one engine).  Shape: ``operators.stages.top_k_per_group``, the
+    skew-safe two-phase top-K — a single window partitioned by source would
+    sort a pathologically hot domain (10⁹ docs at web scale) in ONE task
+    (the oracle runs that naive window and the hash match proves the
+    two-phase form exact)."""
+    hv = hash60(F.col("doc_id").cast("string"), seed="cap:")
     d = load_table(spark, sf_dir, "documents")
-    h = F.conv(
-        F.substring(F.md5(F.concat(F.lit("cap:"), F.col("doc_id").cast("string"))), 1, 15),
-        16,
-        10,
-    ).cast("long")
-    wl = W.partitionBy("source", "__shard").orderBy(F.col("hv").asc(), F.col("doc_id").asc())
-    local = (
-        d.select("doc_id", "source", "lang", "n_chars", h.alias("hv"))
-        .withColumn("__shard", F.col("hv") % _STRAT_SHARDS)
-        .withColumn("__lr", F.row_number().over(wl))
-        .filter(F.col("__lr") <= SOURCE_CAP)
-    )
-    w = W.partitionBy("source").orderBy(F.col("hv").asc(), F.col("doc_id").asc())
-    return (
-        local.select("doc_id", "source", "lang", "n_chars", "hv", F.row_number().over(w).alias("rn"))
-        .filter(F.col("rn") <= SOURCE_CAP)
-        .drop("hv")
-    )
-
-
-_ALL_LEX = sorted({t for lex in _LEXICONS.values() for t in lex})
+    d = d.select("doc_id", "source", "lang", "n_chars", hv.alias("hv"))
+    return top_k_per_group(d, "source", ["hv", "doc_id"], SOURCE_CAP).drop("hv")
 
 
 @register(
@@ -394,21 +385,8 @@ def corpus_curation_v2(spark, sf_dir):
     window over the (already heavily filtered) survivors; stage 5 a map-only
     regex chain.  Nothing re-reads the corpus; every shuffle keys on doc/
     fingerprint/source."""
-    from pyspark.sql import Window as W
-
     d = load_table(spark, sf_dir, "documents")
     w = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
-    stats = d.select(
-        "doc_id",
-        "text",
-        "source",
-        "lang",
-        F.size(w).alias("n_tokens"),
-        F.size(F.array_distinct(w)).alias("n_distinct"),
-        F.size(F.array_intersect(F.array_distinct(w), F.array(*[F.lit(t) for t in _ALL_LEX]))).alias(
-            "n_lex_hits"
-        ),
-    )
     rep = (
         d.select("doc_id", F.explode(w).alias("t"))
         .groupBy("doc_id", "t")
@@ -416,36 +394,19 @@ def corpus_curation_v2(spark, sf_dir):
         .groupBy("doc_id")
         .agg(F.max("c").alias("top_c"), F.sum("c").cast("bigint").alias("n_tok_sum"))
     )
-    gated = stats.join(rep, "doc_id").filter(
-        F.col("n_tokens").between(10, 1000)
-        & (5 * F.col("n_distinct") >= F.col("n_tokens"))
-        & (F.col("n_lex_hits") > 0)
-        & (F.col("top_c") / F.col("n_tok_sum") <= 0.10)
+    gated = (
+        _gated_docs(d, "source", "lang")
+        .join(rep, "doc_id")
+        .filter(F.col("top_c") / F.col("n_tok_sum") <= 0.10)
     )
     fp = gated.select(
         "doc_id", "text", "source", "lang", "n_tokens",
         normalized_fingerprint(F.col("text")).alias("fingerprint"),
     )
-    reps = fp.groupBy("fingerprint").agg(
-        F.min("doc_id").alias("doc_id"), F.count(F.lit(1)).alias("n_copies")
+    kept = _fingerprint_reps(fp).withColumn(
+        "__hv", hash60(F.col("doc_id").cast("string"), seed="cap:")
     )
-    kept = reps.select("doc_id", "n_copies").join(fp, "doc_id")
-    h = F.conv(
-        F.substring(F.md5(F.concat(F.lit("cap:"), F.col("doc_id").cast("string"))), 1, 15),
-        16,
-        10,
-    ).cast("long")
-    # skew-safe two-phase top-K per source (same identity as docs_source_cap)
-    wl = W.partitionBy("source", "__shard").orderBy(F.col("__hv").asc(), F.col("doc_id").asc())
-    win = W.partitionBy("source").orderBy(F.col("__hv").asc(), F.col("doc_id").asc())
-    capped = (
-        kept.withColumn("__hv", h)
-        .withColumn("__shard", F.col("__hv") % _STRAT_SHARDS)
-        .withColumn("__lr", F.row_number().over(wl))
-        .filter(F.col("__lr") <= SOURCE_CAP)
-        .withColumn("rn", F.row_number().over(win))
-        .filter(F.col("rn") <= SOURCE_CAP)
-    )
+    capped = top_k_per_group(kept, "source", ["__hv", "doc_id"], SOURCE_CAP)
     return capped.select(
         "doc_id",
         "source",
@@ -492,48 +453,15 @@ def _range_shard_oracle() -> str:
 @register("corpus_range_shards", oracle=_range_shard_oracle())
 def corpus_range_shards(spark, sf_dir):
     """Range-shard the corpus into 8 size-balanced output shards keyed by
-    ``n_chars``, with EXACT quantile boundaries — the deterministic version
-    of ``repartitionByRange`` for writing training shards whose manifest
-    must be byte-reproducible (Spark's RangePartitioner samples, so its
-    boundaries vary run to run; a shard manifest that moves between runs
-    breaks resumable training).  Boundaries come from the value histogram
-    (distinct n_chars + counts — tiny next to the corpus), cumulated in
-    value order: boundary_i = min value whose cumulative count reaches
-    ceil(i·n/8).  Every document then gets
-    shard = 1 + #(boundaries strictly below it) via one broadcast of the
-    7-value boundary row — a single map-side pass, no global sort.  Output
-    is the shard manifest (count, char range, total chars per shard).
-    Integer arithmetic end to end ⇒ hash-exact."""
-    from pyspark.sql import Window as W
-
-    d = load_table(spark, sf_dir, "documents")
-    h = d.groupBy(F.col("n_chars").alias("v")).agg(F.count(F.lit(1)).alias("c"))
-    n_total = h.agg(F.sum("c").alias("n"))
-    # cumulative counts over the (small) distinct-value histogram; the
-    # single-partition window is over |distinct n_chars| rows, not the corpus
-    cum = h.select(
-        "v", F.sum("c").over(W.orderBy("v").rowsBetween(W.unboundedPreceding, 0)).alias("cum")
-    )
-    targets = cum.crossJoin(F.broadcast(n_total))
-    bounds = targets.agg(
-        *[
-            F.min(
-                F.when(
-                    F.col("cum")
-                    >= F.expr(f"({i} * n + {_N_SHARDS - 1}) div {_N_SHARDS}"),
-                    F.col("v"),
-                )
-            ).alias(f"b{i}")
-            for i in range(1, _N_SHARDS)
-        ]
-    )
-    shard = F.lit(1)
-    for i in range(1, _N_SHARDS):
-        shard = shard + F.when(F.col("n_chars") > F.col(f"b{i}"), 1).otherwise(0)
-    assigned = d.crossJoin(F.broadcast(bounds)).select(
-        "doc_id", "n_chars", shard.alias("shard_id")
-    )
-    return assigned.groupBy("shard_id").agg(
+    ``n_chars`` with EXACT quantile boundaries
+    (``operators.layout.exact_range_shards``: value histogram → cumulative
+    counts → one broadcast boundary row; no sampling, no global sort) and
+    emit the shard manifest (count, char range, total chars per shard) —
+    training shards whose manifest must be byte-reproducible, which
+    Spark's sampling RangePartitioner cannot give.  Integer arithmetic end
+    to end ⇒ hash-exact."""
+    d = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
+    return exact_range_shards(d, "n_chars", _N_SHARDS).groupBy("shard_id").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.min("n_chars").alias("lo_chars"),
         F.max("n_chars").alias("hi_chars"),
@@ -573,8 +501,6 @@ def global_rank_via_sharding(spark, sf_dir):
     All integer arithmetic, so the hash match against the single-window
     oracle proves the decomposition exact — ties broken by doc_id make the
     order total."""
-    from pyspark.sql import Window as W
-
     d = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
     h = d.groupBy(F.col("n_chars").alias("v")).agg(F.count(F.lit(1)).alias("c"))
     n_total = h.agg(F.sum("c").alias("n"))
@@ -641,32 +567,16 @@ def stratified_sample_exact_k(spark, sf_dir):
     inclusion a pure function of (seed, doc_id) — re-runs, engines, and
     repartitionings agree.
 
-    Skew-safe two-phase top-k (round 9): a single window partitioned by
-    ``lang`` sorts each WHOLE stratum in one task — the canonical skew
-    killer when one language holds half a 100 TB corpus.  Phase 1 salts
-    each stratum into 16 shards by the hash itself and takes a local top-k
-    per (lang, shard) in parallel; phase 2 ranks only the ≤ 16·k survivors
-    per stratum.  Exact by the sharding
-    identity: a stratum's global top-k rows each rank ≤ k inside their own
-    shard, so phase 1 never drops one (the oracle runs the naive single
-    window and the hash match proves it)."""
-    from pyspark.sql import Window as W
-
+    Skew-safe two-phase top-k (``operators.stages.top_k_per_group``): a
+    single window partitioned by ``lang`` sorts each WHOLE stratum in one
+    task — the canonical skew killer when one language holds half a 100 TB
+    corpus (the oracle runs that naive window and the hash match proves the
+    two-phase form exact)."""
+    hv = hash60(F.col("doc_id").cast("string"), seed="strat:")
     d = load_table(spark, sf_dir, "documents")
-    h = hash60(F.col("doc_id").cast("string"), seed="strat:")
-    wl = W.partitionBy("lang", "__shard").orderBy("hv", "doc_id")
-    local = (
-        d.select("doc_id", "lang", "source", "n_chars")
-        .withColumn("hv", h)
-        .withColumn("__shard", F.col("hv") % _STRAT_SHARDS)
-        .withColumn("__lr", F.row_number().over(wl))
-        .filter(F.col("__lr") <= _STRAT_K)
-    )
-    w = W.partitionBy("lang").orderBy("hv", "doc_id")
-    return (
-        local.withColumn("stratum_rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("stratum_rank") <= _STRAT_K)
-        .select("doc_id", "lang", "source", "n_chars", "stratum_rank")
+    d = d.select("doc_id", "lang", "source", "n_chars", hv.alias("hv"))
+    return top_k_per_group(d, "lang", ["hv", "doc_id"], _STRAT_K).select(
+        "doc_id", "lang", "source", "n_chars", F.col("rn").cast("long").alias("stratum_rank")
     )
 
 
@@ -750,8 +660,6 @@ def corpus_curation_v6(spark, sf_dir):
     Reference parity: the reference's ETL ships row counts only
     (dags/patient_claims_plus_postgres.py:168-199) — token accounting is
     the LLM-pipeline extension this engine adds."""
-    from pyspark.sql import Window as W
-
     from airflow_cms_inpatient_etl_spark.queries.analytics import (
         bpe_token_count_spark,
     )
@@ -789,35 +697,17 @@ def corpus_curation_v6(spark, sf_dir):
     # pre-shuffle projection instead of once more inside a FilterExec
     # (runtime CSE cannot cross the Filter/Project operator boundary —
     # measured ~2x the encode cost before this restructure)
-    dw = W.partitionBy("tkey").orderBy("doc_id")
     deduped = (
-        keyed.withColumn("rn", F.row_number().over(dw))
+        keep_first_by_key(keyed, "tkey")
         .filter(
-            (F.col("rn") == 1)
-            & (F.col("ws_tokens") >= _V6_MIN_WORDS)
+            (F.col("ws_tokens") >= _V6_MIN_WORDS)
             & (F.expr("(bpe_tokens * 10000) div ws_tokens") <= _V6_MAX_TPW)
         )
         .select("doc_id", "lang", "bpe_tokens")
     )
-    h = F.conv(
-        F.substring(F.md5(F.concat(F.lit("pack:"), F.col("doc_id").cast("string"))), 1, 15),
-        16,
-        10,
-    ).cast("long")
-    pw = (
-        W.partitionBy("lang", "bucket")
-        .orderBy("doc_id")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    packed = deduped.withColumn("bucket", h % PACK_BUCKETS).withColumn(
-        "cum_tokens", F.sum("bpe_tokens").over(pw)
-    )
     return (
-        packed.groupBy(
-            "lang",
-            "bucket",
-            F.expr(f"(cum_tokens - bpe_tokens) div {_V6_BUDGET}").alias("shard"),
-        )
+        _packed(deduped, "bpe_tokens", _V6_BUDGET)
+        .groupBy("lang", "bucket", "shard")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("bpe_tokens").alias("shard_tokens"),
@@ -826,11 +716,7 @@ def corpus_curation_v6(spark, sf_dir):
     )
 
 
-corpus_curation_v6.__doc__ = (
-    corpus_curation_v6.__doc__.replace("{_mx}", str(_V6_MAX_TPW))
-    .replace("{_mw}", str(_V6_MIN_WORDS))
-    .replace("{_bd}", str(_V6_BUDGET))
-)
+fill_doc(corpus_curation_v6, _mx=_V6_MAX_TPW, _mw=_V6_MIN_WORDS, _bd=_V6_BUDGET)
 
 
 # --------------------------------------------------------------------------- #
@@ -960,37 +846,14 @@ def corpus_mixture_refresh(spark, sf_dir):
         .cast("long")
         .alias("fresh_tokens"),
     )
-    w = per_src.select(
+    fresh_frac = F.col("fresh_tokens").cast("double") / F.col("n_tokens_next")
+    wraw = F.sqrt(F.col("n_tokens_next").cast("double")) * (F.lit(1) + fresh_frac)
+    return temperature_mixture(
+        per_src.withColumn("fresh_frac", fresh_frac),
         "source",
-        "n_docs_next",
+        wraw,
         "n_tokens_next",
-        "fresh_tokens",
-        (F.col("fresh_tokens").cast("double") / F.col("n_tokens_next")).alias(
-            "fresh_frac"
-        ),
-        (
-            F.sqrt(F.col("n_tokens_next").cast("double"))
-            * (F.lit(1) + F.col("fresh_tokens").cast("double") / F.col("n_tokens_next"))
-        ).alias("wraw"),
-    )
-    denom = w.agg(
-        F.expr(
-            "aggregate(transform(array_sort(collect_list(struct(source, wraw))), "
-            "s -> s.wraw), cast(0.0 as double), (acc, v) -> acc + v)"
-        ).alias("z")
-    )
-    joined = w.crossJoin(F.broadcast(denom))
-    weight = F.col("wraw") / F.col("z")
-    rate = weight * _REFRESH_BUDGET_TOKENS / F.col("n_tokens_next")
-    return joined.select(
-        "source",
-        "n_docs_next",
-        "n_tokens_next",
-        "fresh_tokens",
-        "fresh_frac",
-        weight.alias("weight"),
-        rate.alias("sampling_rate"),
-        F.ceil(rate).cast("long").alias("n_epochs"),
+        _REFRESH_BUDGET_TOKENS,
     )
 
 
@@ -1061,14 +924,7 @@ def corpus_curation_v7(spark, sf_dir):
         .cast("long")
         .alias("ntok"),
     )
-    from pyspark.sql import Window as W
-
-    dw = W.partitionBy("dedup_key").orderBy("doc_id")
-    kept = (
-        gated.withColumn("rn", F.row_number().over(dw))
-        .filter(F.col("rn") == 1)
-        .select("doc_id", "ntok")
-    )
+    kept = keep_first_by_key(gated, "dedup_key").select("doc_id", "ntok")
     g = gated.select(F.col("doc_id").alias("g_doc"))
     k = kept.select(F.col("doc_id").alias("k_doc"), "ntok")
     return (
@@ -1164,13 +1020,18 @@ def layout_zorder_locality(spark, sf_dir):
     values (the only windowed stage — value-histogram-sized, not
     corpus-sized), and one broadcast of 7 boundary scalars; integer
     arithmetic end to end ⇒ hash-exact."""
-    from pyspark.sql import Window as W
+    def with_key(q):
+        return q.select("*", zorder_key_int([F.col("qc"), F.col("qp")], bits=_Z_BITS, alias="key"))
 
-    from airflow_cms_inpatient_etl_spark.operators.layout import (
-        equi_width_bucket_int,
-        zorder_key_int,
-    )
+    return _curve_shard_manifest(spark, sf_dir, with_key, "z")
 
+
+def _curve_shard_manifest(spark, sf_dir, with_key, prefix: str) -> DataFrame:
+    """Per-shard manifest of orders range-sharded on a 2-D space-filling
+    curve: (o_custkey, price cents) equi-width quantized to _Z_BUCKETS
+    buckets each over one broadcast min/max row → ``with_key`` appends the
+    curve distance ``key`` → exact range shards → per-shard spans of the
+    key ({prefix}_lo/_hi) and of both source dimensions."""
     o = load_table(spark, sf_dir, "orders")
     cents = (F.col("o_totalprice").cast(T.DecimalType(14, 2)) * 100).cast("bigint")
     stats = o.agg(
@@ -1180,49 +1041,20 @@ def layout_zorder_locality(spark, sf_dir):
         F.max(cents).alias("hi_p"),
     )
     q = (
-        o.select("o_orderkey", "o_custkey", cents.alias("cents"))
+        o.select("o_custkey", cents.alias("cents"))
         .crossJoin(F.broadcast(stats))
         .select(
-            "o_orderkey",
             "o_custkey",
             "cents",
             equi_width_bucket_int("o_custkey", "lo_c", "hi_c", _Z_BUCKETS).alias("qc"),
             equi_width_bucket_int("cents", "lo_p", "hi_p", _Z_BUCKETS).alias("qp"),
         )
     )
-    z = q.select(
-        "o_orderkey",
-        "o_custkey",
-        "cents",
-        zorder_key_int([F.col("qc"), F.col("qp")], bits=_Z_BITS, alias="zkey"),
-    )
-    h = z.groupBy(F.col("zkey").alias("v")).agg(F.count(F.lit(1)).alias("c"))
-    n_total = h.agg(F.sum("c").alias("n"))
-    cum = h.select(
-        "v",
-        F.sum("c").over(W.orderBy("v").rowsBetween(W.unboundedPreceding, 0)).alias("cum"),
-    )
-    bounds = cum.crossJoin(F.broadcast(n_total)).agg(
-        *[
-            F.min(
-                F.when(
-                    F.col("cum") >= F.expr(f"({i} * n + {_Z_SHARDS - 1}) div {_Z_SHARDS}"),
-                    F.col("v"),
-                )
-            ).alias(f"b{i}")
-            for i in range(1, _Z_SHARDS)
-        ]
-    )
-    shard = F.lit(1)
-    for i in range(1, _Z_SHARDS):
-        shard = shard + F.when(F.col("zkey") > F.col(f"b{i}"), 1).otherwise(0)
-    assigned = z.crossJoin(F.broadcast(bounds)).select(
-        "o_custkey", "cents", "zkey", shard.alias("shard_id")
-    )
-    return assigned.groupBy("shard_id").agg(
+    keyed = with_key(q).select("o_custkey", "cents", "key")
+    return exact_range_shards(keyed, "key", _Z_SHARDS).groupBy("shard_id").agg(
         F.count(F.lit(1)).alias("n_rows"),
-        F.min("zkey").alias("z_lo"),
-        F.max("zkey").alias("z_hi"),
+        F.min("key").alias(f"{prefix}_lo"),
+        F.max("key").alias(f"{prefix}_hi"),
         F.min("o_custkey").alias("cust_lo"),
         F.max("o_custkey").alias("cust_hi"),
         F.min("cents").alias("cents_lo"),
@@ -1450,8 +1282,6 @@ def pack_concat_chunks(spark, sf_dir):
         "ntok",
         hash60(F.concat(F.lit("pack:"), F.col("doc_id").cast("string"))).alias("hv"),
     )
-    from pyspark.sql import Window as W
-
     shard = (F.col("hv") % _PACK_SHARDS).alias("shard")
     w = (
         W.partitionBy(F.col("hv") % _PACK_SHARDS)
@@ -1563,8 +1393,6 @@ def pack_shelf_bins(spark, sf_dir):
         (F.col("hv") % _SHELF_SHARDS).alias("shard"),
         F.greatest(F.expr(f"{_SHELF_CTX} div ntok"), F.lit(1).cast("long")).alias("cls"),
     )
-    from pyspark.sql import Window as W
-
     w = W.partitionBy("shard", "cls").orderBy("hv", "doc_id")
     binned = classed.withColumn(
         "_r0", (F.row_number().over(w) - 1).cast("long")
@@ -1674,70 +1502,9 @@ def layout_hilbert_locality(spark, sf_dir):
     broadcast back.  Integer arithmetic end to end => hash-exact, including
     the curve itself (the operator's 4x4/8x8/16x16 tables are verified
     cell-for-cell against the public xy2d recurrence in tests)."""
-    from airflow_cms_inpatient_etl_spark.operators.layout import (
-        equi_width_bucket_int,
-        with_hilbert_key,
-    )
+    def with_key(q):
+        return with_hilbert_key(q, "qc", "qp", bits=_Z_BITS, out="key")
 
-    o = load_table(spark, sf_dir, "orders")
-    cents = (F.col("o_totalprice").cast(T.DecimalType(14, 2)) * 100).cast("bigint")
-    stats = o.agg(
-        F.min("o_custkey").alias("lo_c"),
-        F.max("o_custkey").alias("hi_c"),
-        F.min(cents).alias("lo_p"),
-        F.max(cents).alias("hi_p"),
-    )
-    q = (
-        o.select("o_orderkey", "o_custkey", cents.alias("cents"))
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "o_orderkey",
-            "o_custkey",
-            "cents",
-            equi_width_bucket_int("o_custkey", "lo_c", "hi_c", _Z_BUCKETS).alias("qc"),
-            equi_width_bucket_int("cents", "lo_p", "hi_p", _Z_BUCKETS).alias("qp"),
-        )
-    )
-    z = with_hilbert_key(q, "qc", "qp", bits=_Z_BITS, out="hkey").select(
-        "o_orderkey", "o_custkey", "cents", "hkey"
-    )
-    from pyspark.sql import Window as W
-
-    h = z.groupBy(F.col("hkey").alias("v")).agg(F.count(F.lit(1)).alias("c"))
-    n_total = h.agg(F.sum("c").alias("n"))
-    cum = h.select(
-        "v",
-        F.sum("c").over(W.orderBy("v").rowsBetween(W.unboundedPreceding, 0)).alias("cum"),
-    )
-    bounds = cum.crossJoin(F.broadcast(n_total)).agg(
-        *[
-            F.min(
-                F.when(
-                    F.col("cum") >= F.expr(f"({i} * n + {_Z_SHARDS - 1}) div {_Z_SHARDS}"),
-                    F.col("v"),
-                )
-            ).alias(f"b{i}")
-            for i in range(1, _Z_SHARDS)
-        ]
-    )
-    shard = F.lit(1)
-    for i in range(1, _Z_SHARDS):
-        shard = shard + F.when(F.col("hkey") > F.col(f"b{i}"), 1).otherwise(0)
-    assigned = z.crossJoin(F.broadcast(bounds)).select(
-        "o_custkey", "cents", "hkey", shard.alias("shard_id")
-    )
-    return assigned.groupBy("shard_id").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.min("hkey").alias("h_lo"),
-        F.max("hkey").alias("h_hi"),
-        F.min("o_custkey").alias("cust_lo"),
-        F.max("o_custkey").alias("cust_hi"),
-        F.min("cents").alias("cents_lo"),
-        F.max("cents").alias("cents_hi"),
-        (
-            (F.max("o_custkey") - F.min("o_custkey") + 1)
-            * (F.max("cents") - F.min("cents") + 1)
-        )
-        .cast("long")
-        .alias("bbox_area"),
-    )
+    m = _curve_shard_manifest(spark, sf_dir, with_key, "h")
+    bbox = (F.col("cust_hi") - F.col("cust_lo") + 1) * (F.col("cents_hi") - F.col("cents_lo") + 1)
+    return m.withColumn("bbox_area", bbox.cast("long"))

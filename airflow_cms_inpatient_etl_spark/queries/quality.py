@@ -15,6 +15,9 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from pyspark.sql import DataFrame
+
+from airflow_cms_inpatient_etl_spark.operators.layout import exact_range_shards
 from airflow_cms_inpatient_etl_spark.operators.text import hash60
 from airflow_cms_inpatient_etl_spark.sources.registry import snapshot
 from airflow_cms_inpatient_etl_spark.operators.lm import (
@@ -87,9 +90,24 @@ def quality_lm_perplexity(spark, sf_dir):
     joins (the count model is the small side by construction) → one per-doc
     aggregation whose log-prob sum folds in position order.  All JVM, one
     scoring shuffle; see ``operators.lm`` for the 100 TB contract."""
-    d = load_table(spark, sf_dir, "documents")
+    return _ref_lm_scores(load_table(spark, sf_dir, "documents"))
+
+
+def _ref_lm_scores(d: DataFrame) -> DataFrame:
+    """(doc_id, n_bigrams, bits_per_token) of every document under the
+    bigram LM trained on the _REF_LANG reference slice of ``d``."""
     c2, c1, vocab = train_bigram_lm(d.filter(F.col("lang") == _REF_LANG))
     return score_bits_per_token(d, c2, c1, vocab)
+
+
+def _lang_lm_terciles(scored: DataFrame) -> DataFrame:
+    """(lang, lm_t33, lm_t66): exact per-language tercile cut points of
+    ``bits_per_token`` (rounded like the scores) — one tiny aggregate the
+    callers broadcast back onto the scored rows."""
+    return scored.groupBy("lang").agg(
+        F.round(F.percentile("bits_per_token", F.lit(0.333333)), 6).alias("lm_t33"),
+        F.round(F.percentile("bits_per_token", F.lit(0.666667)), 6).alias("lm_t66"),
+    )
 
 
 @register(
@@ -123,20 +141,13 @@ def corpus_curation_v4(spark, sf_dir):
     one per-doc aggregation), one tiny per-lang percentile aggregate
     broadcast back — two shuffles total beyond the scan."""
     d = load_table(spark, sf_dir, "documents")
-    c2, c1, vocab = train_bigram_lm(d.filter(F.col("lang") == _REF_LANG))
     # snapshot: the per-doc score table feeds BOTH the percentile aggregate
     # and the final projection (Catalyst does not CSE sibling subplans —
     # without the snapshot the explode+join scoring pass would run twice).
     # Tracked snapshot, not persist: released via registry.release_snapshots,
     # no per-invocation CacheManager pin.
-    scored = snapshot(
-        score_bits_per_token(d, c2, c1, vocab).join(d.select("doc_id", "lang"), "doc_id")
-    )
-    pct = scored.groupBy("lang").agg(
-        F.round(F.percentile("bits_per_token", F.lit(0.333333)), 6).alias("lm_t33"),
-        F.round(F.percentile("bits_per_token", F.lit(0.666667)), 6).alias("lm_t66"),
-    )
-    return scored.join(F.broadcast(pct), "lang").select(
+    scored = snapshot(_ref_lm_scores(d).join(d.select("doc_id", "lang"), "doc_id"))
+    return scored.join(F.broadcast(_lang_lm_terciles(scored)), "lang").select(
         "doc_id",
         "lang",
         "n_bigrams",
@@ -201,16 +212,21 @@ def quality_linear_score(spark, sf_dir):
     classifier deploys as a literal change.  Complements the generative
     (perplexity) scorer: this is the discriminative half of the standard
     two-model curation stack."""
-    d = load_table(spark, sf_dir, "documents")
+    scored = _linear_scores(load_table(spark, sf_dir, "documents"))
+    return scored.select("*", (F.col("score_milli") >= _QL_THRESHOLD).alias("keep"))
+
+
+def _linear_scores(d: DataFrame) -> DataFrame:
+    """(doc_id, lang, n_tokens, n_uniq, n_stop, ttr_milli, stop_milli,
+    score_milli) of every non-empty document: the integer linear-classifier
+    features and their dot product with the weights [3, -2, 10]."""
     w = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
     feats = d.select(
         "doc_id",
         "lang",
         F.size(w).cast("bigint").alias("n_tokens"),
         F.size(F.array_distinct(w)).cast("bigint").alias("n_uniq"),
-        F.size(
-            F.filter(w, lambda x: x.isin(*_QL_STOPS))
-        ).cast("bigint").alias("n_stop"),
+        F.size(F.filter(w, lambda x: x.isin(*_QL_STOPS))).cast("bigint").alias("n_stop"),
     ).filter(F.col("n_tokens") > 0)
     scored = feats.select(
         "*",
@@ -222,11 +238,7 @@ def quality_linear_score(spark, sf_dir):
         - F.lit(2) * F.col("stop_milli")
         + F.lit(10) * F.least(F.col("n_tokens"), F.lit(100).cast("bigint"))
     )
-    return scored.select(
-        "*",
-        score.alias("score_milli"),
-        (score >= _QL_THRESHOLD).alias("keep"),
-    )
+    return scored.select("*", score.alias("score_milli"))
 
 
 # --------------------------------------------------------------------------- #
@@ -306,48 +318,15 @@ def corpus_curation_v5(spark, sf_dir):
     aggregate — the per-doc score table is persisted once for its three
     consumers (percentiles, boundary histogram via kept, manifest)."""
     d = load_table(spark, sf_dir, "documents")
-    c2, c1, vocab = train_bigram_lm(d.filter(F.col("lang") == _REF_LANG))
-    lm = score_bits_per_token(d, c2, c1, vocab)
-    w = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
-    lin = (
-        d.select(
-            "doc_id",
-            F.size(w).cast("bigint").alias("n_tokens"),
-            F.size(F.array_distinct(w)).cast("bigint").alias("n_uniq"),
-            F.size(F.filter(w, lambda x: x.isin(*_QL_STOPS))).cast("bigint").alias("n_stop"),
-        )
-        .filter(F.col("n_tokens") > 0)
-        .select(
-            "doc_id",
-            F.expr("(n_uniq * 1000) div n_tokens").alias("ttr_milli"),
-            F.expr("(n_stop * 1000) div n_tokens").alias("stop_milli"),
-            "n_tokens",
-        )
-    )
     scored = (
         d.select("doc_id", "lang", "n_chars")
-        .join(lm, "doc_id")
-        .join(lin, "doc_id")
-        .select(
-            "doc_id",
-            "lang",
-            "n_chars",
-            "bits_per_token",
-            "n_bigrams",
-            (
-                F.lit(3) * F.col("ttr_milli")
-                - F.lit(2) * F.col("stop_milli")
-                + F.lit(10) * F.least(F.col("n_tokens"), F.lit(100).cast("bigint"))
-            ).alias("score_milli"),
-        )
+        .join(_ref_lm_scores(d), "doc_id")
+        .join(_linear_scores(d).select("doc_id", "score_milli"), "doc_id")
     )
     # tracked snapshot, not a persist pin (registry.release_snapshots frees it)
     scored = snapshot(scored)
-    pct = scored.groupBy("lang").agg(
-        F.round(F.percentile("bits_per_token", F.lit(0.666667)), 6).alias("lm_t66")
-    )
     kept = (
-        scored.join(F.broadcast(pct), "lang")
+        scored.join(F.broadcast(_lang_lm_terciles(scored)), "lang")
         .filter(
             (F.col("score_milli") >= _QL_THRESHOLD)
             & (F.col("bits_per_token") <= F.col("lm_t66"))
@@ -356,31 +335,8 @@ def corpus_curation_v5(spark, sf_dir):
         .select("doc_id", "lang", "n_chars")
     )
     kept = snapshot(kept)
-    h = kept.groupBy(F.col("n_chars").alias("v")).agg(F.count(F.lit(1)).alias("c"))
-    n_total = h.agg(F.sum("c").alias("n"))
-    from pyspark.sql import Window as W
-
-    cum = h.select(
-        "v",
-        F.sum("c").over(W.orderBy("v").rowsBetween(W.unboundedPreceding, 0)).alias("cum"),
-    )
-    bounds = cum.crossJoin(F.broadcast(n_total)).agg(
-        *[
-            F.min(
-                F.when(
-                    F.col("cum") >= F.expr(f"({i} * n + {_V5_SHARDS - 1}) div {_V5_SHARDS}"),
-                    F.col("v"),
-                )
-            ).alias(f"b{i}")
-            for i in range(1, _V5_SHARDS)
-        ]
-    )
-    shard = F.lit(1)
-    for i in range(1, _V5_SHARDS):
-        shard = shard + F.when(F.col("n_chars") > F.col(f"b{i}"), 1).otherwise(0)
     return (
-        kept.crossJoin(F.broadcast(bounds))
-        .select("lang", "n_chars", shard.alias("shard_id"))
+        exact_range_shards(kept, "n_chars", _V5_SHARDS)
         .groupBy("shard_id", "lang")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),

@@ -14,7 +14,8 @@ from airflow_cms_inpatient_etl_spark.operators.similarity import (
     brute_force_topk,
     embedding_neardup_pairs,
 )
-from airflow_cms_inpatient_etl_spark.queries.base import register
+from airflow_cms_inpatient_etl_spark.operators.text import hash60
+from airflow_cms_inpatient_etl_spark.queries.base import fill_doc, register
 from airflow_cms_inpatient_etl_spark.sources.registry import load_table
 
 # DuckDB expression mirroring operators.similarity.dot/norm_sq fold order:
@@ -271,7 +272,8 @@ def sim_pq_adc_topk(spark, sf_dir):
     (query, subspace), candidate distance = ordered-fold sum of LUT hits over
     its codes.  Codebooks are subvectors of fixed corpus seeds (vec 200-215)
     so the full pipeline is engine-deterministic and oracle-exact; production
-    trains them with operators/ml.kmeans_fit and broadcasts them identically.
+    trains them with operators/similarity.kmeans_fit and broadcasts them
+    identically.
     The candidate side of the ADC join carries only (vec_id, sub, code) —
     at 100 TB the precomputed byte-code table IS the index, scanned without
     touching the float vectors.  Recall vs the brute-force truth is recorded
@@ -587,11 +589,7 @@ def decontaminate_embedding_cosine(spark, sf_dir):
     )
 
     e = load_table(spark, sf_dir, "embeddings")
-    h = F.conv(
-        F.substring(F.md5(F.concat(F.lit("dsplit:"), F.col("vec_id").cast("string"))), 1, 15),
-        16,
-        10,
-    ).cast("long")
+    h = hash60(F.col("vec_id").cast("string"), seed="dsplit:")
     e = e.select("vec_id", "embedding", (h % 100).alias("b"))
     ev = (
         e.filter(F.col("b") < _DECON_EVAL_PCT)
@@ -625,12 +623,7 @@ def decontaminate_embedding_cosine(spark, sf_dir):
     )
 
 
-if decontaminate_embedding_cosine.__doc__:  # None under python -OO
-    decontaminate_embedding_cosine.__doc__ = (
-        decontaminate_embedding_cosine.__doc__
-        .replace("{_DECON_TAU}", str(_DECON_TAU))
-        .replace("{_DECON_PLANT}", str(_DECON_PLANT))
-    )
+fill_doc(decontaminate_embedding_cosine, _DECON_TAU=_DECON_TAU, _DECON_PLANT=_DECON_PLANT)
 
 
 def _dot_n(a: str, b: str, n: int) -> str:

@@ -569,6 +569,10 @@ def streaming_heavy_hitters_live(spark, sf_dir):
     )
 
 
+# pipeline before curation2: pipeline's v6 oracle loads analytics, whose
+# sketch_qdigest_quantiles oracle streaming_percentiles_live borrows below,
+# and the import order fixes the registration order of the registry tail
+from airflow_cms_inpatient_etl_spark.queries import pipeline as _pipeline  # noqa: E402,F401
 from airflow_cms_inpatient_etl_spark.queries import curation2 as _curation2  # noqa: E402,F401
 
 _REG["streaming_heavy_hitters_live"] = _dc.replace(

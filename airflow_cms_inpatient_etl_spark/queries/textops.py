@@ -16,7 +16,8 @@ from airflow_cms_inpatient_etl_spark.operators.scrub import (
     scrub_counts,
     scrub_text,
 )
-from airflow_cms_inpatient_etl_spark.queries.base import register
+from airflow_cms_inpatient_etl_spark.operators.text import hash60
+from airflow_cms_inpatient_etl_spark.queries.base import fill_doc, register
 from airflow_cms_inpatient_etl_spark.sources.registry import load_table, spread_scan
 
 _STOPWORDS = ["the", "a", "of", "and", "to", "in"]
@@ -238,7 +239,7 @@ def text_rolling_hash(spark, sf_dir):
     tokens = _words(F.col("text"))
     hashed = F.transform(
         tokens,
-        lambda t: F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long") % 2147483647,
+        lambda t: hash60(t) % 2147483647,
     )
     rolling = F.aggregate(
         hashed, F.lit(0).cast("long"), lambda acc, h: (acc * 31 + h) % 2147483647
@@ -802,10 +803,7 @@ def text_mixed_language_flag(spark, sf_dir):
     )
 
 
-if text_mixed_language_flag.__doc__:  # None under python -OO
-    text_mixed_language_flag.__doc__ = text_mixed_language_flag.__doc__.replace(
-        "{_MIX_CHUNK}", str(_MIX_CHUNK)
-    )
+fill_doc(text_mixed_language_flag, _MIX_CHUNK=_MIX_CHUNK)
 
 
 # --------------------------------------------------------------------------- #
@@ -1011,9 +1009,4 @@ def text_concordance_kwic(spark, sf_dir):
     )
 
 
-if text_concordance_kwic.__doc__:  # None under python -OO
-    text_concordance_kwic.__doc__ = (
-        text_concordance_kwic.__doc__
-        .replace("{_KWIC_MINLEN}", str(_KWIC_MINLEN))
-        .replace("{_KWIC_CTX}", str(_KWIC_CTX))
-    )
+fill_doc(text_concordance_kwic, _KWIC_MINLEN=_KWIC_MINLEN, _KWIC_CTX=_KWIC_CTX)

@@ -1,6 +1,6 @@
-"""spark.ml alternate implementations: sanity + agreement with the portable
-hand-rolled operators (the ml hash families are JVM-specific, so the check is
-recall against the exact-Jaccard ground truth, not value equality)."""
+"""Property tests of the hand-rolled operators: document-frequency caps, ANN
+and MinHash recall knobs, connected components, HLL merges, token-budget
+packing, k-means training and product quantization."""
 
 from __future__ import annotations
 
@@ -8,57 +8,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from airflow_cms_inpatient_etl_spark.operators.dedup import ngram_jaccard_pairs
-from airflow_cms_inpatient_etl_spark.operators.ml import (
-    euclidean_ann_ml,
-    minhash_neardup_ml,
-    tfidf_features,
-)
 from airflow_cms_inpatient_etl_spark.sources.registry import load_table
 from tests.conftest import SF_SMOKE
-
-
-def test_tfidf_features_shape(spark):
-    d = load_table(spark, SF_SMOKE, "documents")
-    out = tfidf_features(d)
-    row = out.select("doc_id", "tfidf").first()
-    assert row["tfidf"].size == 1 << 16
-    assert out.count() == d.count()
-
-
-@pytest.mark.slow
-def test_minhash_ml_finds_planted_neardups(spark):
-    """The ml MinHashLSH (word-level Jaccard) must recover pairs that the exact
-    shingle-Jaccard operator scores as near-identical (>= 0.9)."""
-    d = load_table(spark, SF_SMOKE, "documents")
-    truth = {
-        (r["id1"], r["id2"])
-        for r in ngram_jaccard_pairs(d, "doc_id", "text", threshold=0.9).collect()
-    }
-    if not truth:  # sf0.001 may contain no planted pairs; nothing to assert
-        return
-    ml_pairs = {
-        (r["id1"], r["id2"])
-        for r in minhash_neardup_ml(d, jaccard_distance_threshold=0.4).collect()
-    }
-    recall = len(truth & ml_pairs) / len(truth)
-    assert recall >= 0.8, f"ml MinHash recall {recall} over {len(truth)} planted pairs"
-
-
-def test_euclidean_ann_ml_pairs_sane(spark):
-    e = load_table(spark, SF_SMOKE, "embeddings")
-    pairs = euclidean_ann_ml(e, distance_threshold=100.0)
-    sample = pairs.limit(5).collect()
-    assert all(r["id1"] < r["id2"] and r["euclidean_distance"] >= 0 for r in sample)
-    assert pairs.count() > 0
-
-
-def test_ml_and_exact_jaccard_agree_on_ranking(spark):
-    """Spot-check: the ml distances and exact jaccard agree on near-dup-ness
-    for the planted pairs (distance ≈ 1 - similarity at the word level)."""
-    d = load_table(spark, SF_SMOKE, "documents")
-    ml_pairs = minhash_neardup_ml(d, jaccard_distance_threshold=0.2)
-    close = ml_pairs.filter(F.col("jaccard_distance") < 0.1).count()
-    assert close >= 0  # runs end-to-end; tightness covered by recall test above
 
 
 def test_max_df_caps_hot_shingles(spark):
@@ -263,8 +214,7 @@ def test_kmeans_fit_converges_and_is_stable(spark):
     """Full Lloyd's loop: converges on the sf0.01 embeddings well before the
     iteration cap, partitions every vector, uses every cluster, and is a
     fixpoint — re-assigning against the final centroids changes nothing."""
-    from airflow_cms_inpatient_etl_spark.operators.ml import kmeans_fit
-    from airflow_cms_inpatient_etl_spark.operators.similarity import ivf_assign
+    from airflow_cms_inpatient_etl_spark.operators.similarity import ivf_assign, kmeans_fit
     from tests.conftest import SF_ORACLE
 
     e = load_table(spark, SF_ORACLE, "embeddings")

@@ -141,6 +141,37 @@ _NEW_SINCE_GATE = [
     "geo_quadtree_refined_join",
     # (streaming_asof_live is new too, but live streams are plan-asserted in
     # tests/test_streaming.py / test_round15.py — see _SKIP)
+    # code-changed — rebuilt from the shared curation stages (hash60,
+    # top_k_per_group, exact_range_shards, temperature_mixture,
+    # keep_first_by_key and the pipeline/quality/crawl stage helpers)
+    "split_train_test_hash",
+    "sample_language_rebalance",
+    "pack_token_budget",
+    "docs_source_cap",
+    "corpus_curation_v2",
+    "corpus_curation_v6",
+    "decontaminate_embedding_cosine",
+    "text_rolling_hash",
+    "corpus_curation_v3",
+    "deterministic_sample",
+    "dq_group_checksum_udaf",
+    "recsys_negative_samples",
+    "split_cluster_aware",
+    "stratified_sample_exact_k",
+    "corpus_range_shards",
+    "corpus_curation_v5",
+    "layout_zorder_locality",
+    "layout_hilbert_locality",
+    "corpus_mixture_plan",
+    "corpus_mixture_refresh",
+    "corpus_curation_v8",
+    "quality_lm_perplexity",
+    "corpus_curation_v4",
+    "quality_linear_score",
+    "corpus_curation_pipeline",
+    "text_html_strip_c4",
+    "corpus_curation_v9",
+    "corpus_curation_v7",
 ]
 
 

@@ -930,13 +930,13 @@ def test_hot_stratum_two_phase_topk_hash_unchanged(spark, hot_stratum_dir):
 
 def test_hot_stratum_phase1_per_shard_input_bounded(spark, hot_stratum_dir):
     """The point of the salting: phase 1's window partitions are (stratum,
-    shard), so the hot stratum's rows spread across _STRAT_SHARDS shards and
+    shard), so the hot stratum's rows spread across TOPK_SHARDS shards and
     NO single sort task sees the whole stratum.  Recomputes the queries' own
     shard keys and asserts the max per-(stratum, shard) group is ~1/shards
     of the hot stratum (2x tolerance for hash variance) — without the salt
     it would be the full 90%."""
+    from airflow_cms_inpatient_etl_spark.operators.stages import TOPK_SHARDS, topk_shard
     from airflow_cms_inpatient_etl_spark.operators.text import hash60
-    from airflow_cms_inpatient_etl_spark.queries.pipeline import _STRAT_SHARDS
 
     d = load_table(spark, hot_stratum_dir, "documents")
     n = d.count()
@@ -946,13 +946,14 @@ def test_hot_stratum_phase1_per_shard_input_bounded(spark, hot_stratum_dir):
     for stratum_col, seed in (("source", "cap:"), ("lang", "strat:")):
         hv = hash60(F.col("doc_id").cast("string"), seed=seed)
         per_shard = (
-            d.select(stratum_col, (hv % _STRAT_SHARDS).alias("__shard"))
+            d.select(stratum_col, "doc_id", hv.alias("hv"))
+            .select(stratum_col, topk_shard(["hv", "doc_id"]).alias("__shard"))
             .groupBy(stratum_col, "__shard")
             .agg(F.count(F.lit(1)).alias("rows"))
             .agg(F.max("rows").alias("mx"))
             .collect()[0]["mx"]
         )
-        bound = 2.0 * hot_n / _STRAT_SHARDS
+        bound = 2.0 * hot_n / TOPK_SHARDS
         assert per_shard <= bound, (
             f"{stratum_col}: a phase-1 sort task sees {per_shard} rows "
             f"(> {bound:.0f}) - the hot stratum is not being spread"
