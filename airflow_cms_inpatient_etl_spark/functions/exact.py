@@ -52,11 +52,6 @@ def davg(col: Column | str, alias: str, scale: int = 6, precision: int = 27) -> 
     return (F.sum(dec(col, scale, precision)).cast("double") / F.count(F.lit(1))).alias(alias)
 
 
-def oracle_dsum(expr: str, alias: str, scale: int = 6, precision: int = 27) -> str:
-    """The ANSI-SQL text DuckDB runs for the same order-independent sum."""
-    return f"CAST(SUM(CAST(({expr}) AS DECIMAL({precision},{scale}))) AS DOUBLE) AS {alias}"
-
-
 def oracle_davg(expr: str, alias: str, scale: int = 6, precision: int = 27) -> str:
     return (
         f"CAST(SUM(CAST(({expr}) AS DECIMAL({precision},{scale}))) AS DOUBLE) / COUNT(*) AS {alias}"

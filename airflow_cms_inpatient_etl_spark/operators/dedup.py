@@ -135,7 +135,6 @@ def ngram_jaccard_pairs(
     threshold: float,
     k: int = 3,
     max_df: int | None = None,
-    cache_shingles: bool = True,
 ) -> DataFrame:
     """Exact n-gram-Jaccard near-dup pairs (id1 < id2, jaccard ≥ threshold).
 
@@ -144,20 +143,18 @@ def ngram_jaccard_pairs(
     which slightly *raises* scores for boilerplate-heavy pairs — acceptable:
     the cap exists to bound the join, not to be invisible.
 
-    ``cache_shingles``: the posting list feeds THREE consumers inside
-    ``_pair_jaccard`` (size census + both sides of the inverted-index
-    self-join), so by default it is materialized once as a tracked snapshot
-    (same contract and rationale as ``minhash_lsh_pairs``).  **Caller
-    obligation**: with the default True, the snapshot pins executor storage
-    until ``sources.registry.release_snapshots(spark)`` is called — library
-    callers outside the bench/driver loop (which both release per query) must
-    either call it when done or pass ``cache_shingles=False`` (correct, just
-    re-derives the posting list per consumer)."""
-    ex = cap_stop_shingles(exploded_shingle_hashes(df, id_col, text_col, k), max_df)
-    if cache_shingles:
-        from airflow_cms_inpatient_etl_spark.sources.registry import snapshot
+    The posting list feeds THREE consumers inside ``_pair_jaccard`` (size
+    census + both sides of the inverted-index self-join), so it is
+    materialized once as a tracked snapshot (same contract as
+    ``minhash_lsh_pairs``).  **Caller obligation**: the snapshot pins
+    executor storage until ``sources.registry.release_snapshots(spark)`` is
+    called once the result is consumed (the bench/driver loops release per
+    query)."""
+    from airflow_cms_inpatient_etl_spark.sources.registry import snapshot
 
-        ex = snapshot(ex)
+    ex = snapshot(
+        cap_stop_shingles(exploded_shingle_hashes(df, id_col, text_col, k), max_df)
+    )
     return (
         _pair_jaccard(ex, id_col)
         .filter(F.col("jaccard") >= threshold)
@@ -188,7 +185,6 @@ def minhash_lsh_pairs(
     n_hashes: int = N_MINHASHES,
     n_bands: int = N_BANDS,
     max_df: int | None = None,
-    cache_shingles: bool = True,
 ) -> DataFrame:
     """MinHash + banded LSH near-dup join, verified with exact Jaccard.
 
@@ -199,24 +195,21 @@ def minhash_lsh_pairs(
 
     ``max_df`` caps stop-shingles before signatures AND verification (both
     stages see the same capped sets, so scores stay internally consistent).
-    ``cache_shingles`` snapshots the exploded posting lists (lazy
-    ``localCheckpoint``), which are read three times (signatures, pair
-    intersection ×2); the blocks are released by the ContextCleaner once the
-    caller drops the result, so nothing stays pinned in a long-lived
-    session.  Pass False to recompute instead of storing (tiny inputs).
+    The exploded posting lists are read three times (signatures, pair
+    intersection ×2), so they are materialized once as a tracked snapshot
+    (lazy ``localCheckpoint``).  The ContextCleaner never frees those
+    blocks from PySpark (see ``sources.registry``): **caller obligation** —
+    call ``sources.registry.release_snapshots(spark)`` once the result is
+    consumed, or the blocks stay pinned for the life of the session.
     """
-    rows_per_band = n_hashes // n_bands
-    ex = cap_stop_shingles(exploded_shingle_hashes(df, id_col, text_col, k), max_df)
-    if cache_shingles:
-        # tracked snapshot, not .cache(): a CacheManager pin has no safe
-        # release point in a lazily-returned plan, silently serves REPEAT
-        # invocations (it fakes bench numbers), and survives until session
-        # end; snapshot blocks are freed by sources.registry.release_snapshots.
-        # Lazy import: operators stay importable without the sources package
-        # (operators/text.py convention).
-        from airflow_cms_inpatient_etl_spark.sources.registry import snapshot
+    # lazy import: operators stay importable without the sources package
+    # (operators/text.py convention)
+    from airflow_cms_inpatient_etl_spark.sources.registry import snapshot
 
-        ex = snapshot(ex)
+    rows_per_band = n_hashes // n_bands
+    ex = snapshot(
+        cap_stop_shingles(exploded_shingle_hashes(df, id_col, text_col, k), max_df)
+    )
     sigs = minhash_signatures(ex, id_col, n_hashes)
     band_cols = [
         F.md5(

@@ -96,66 +96,38 @@ def _small_star_directed(directed: DataFrame) -> DataFrame:
     return out.filter(F.col("src") != F.col("dst")).distinct()
 
 
-def _lineage_snapshot(df: DataFrame, checkpoint_dir: str | None) -> DataFrame:
-    """Truncate plan lineage between iterations.
-
-    ``checkpoint_dir=None`` → ``localCheckpoint``: blocks live in executor
-    storage — fast, but an executor loss loses the only copy and the
-    truncated lineage cannot recompute it (fine on local[], unsafe for
-    long-running cluster jobs).  With a directory → reliable ``checkpoint``:
-    blocks are written to the (fault-tolerant) filesystem, surviving
-    executor loss and any cache eviction — the mode a 100 TB cluster run
-    should use.  The caller sets the context's checkpoint dir once up front.
-    """
-    if checkpoint_dir is None:
-        # registry-tracked (registry.tracked_localcheckpoint), so snapshots
-        # that outlive the operator — the final round backing the returned
-        # result — are freed by the caller's release_snapshots instead of
-        # waiting on a ContextCleaner drain that in practice never fires
-        # from PySpark.  Lazy import: operators stay importable without the
-        # sources package (operators/text.py convention).
-        from airflow_cms_inpatient_etl_spark.sources.registry import (
-            tracked_localcheckpoint,
-        )
-
-        return tracked_localcheckpoint(df, eager=True)[0]
-    return df.checkpoint(eager=True)
-
-
 def _snapshot_tracked(
     df: DataFrame, checkpoint_dir: str | None
 ) -> tuple[DataFrame, frozenset[int]]:
-    """``_lineage_snapshot`` plus the ids of the persistent RDDs the snapshot
-    pinned (empty for reliable checkpoints, which live on the filesystem).
+    """Truncate plan lineage between iterations; returns the snapshot plus
+    the ids of the persistent RDDs it pinned.
 
-    Iterative operators use the ids to free round N-1's blocks the moment
-    round N is materialized (``_free_snapshot``), so live executor storage
-    stays O(one round's state) no matter how many rounds run — without this,
-    every round's localCheckpoint stays pinned until driver GC happens to
-    collect the dropped DataFrame, and a many-round peel on a long-lived
-    session accumulates blocks until storage eviction thrash.
+    ``checkpoint_dir=None`` → registry-tracked eager ``localCheckpoint``:
+    blocks live in executor storage — fast, but an executor loss loses the
+    only copy and the truncated lineage cannot recompute it (fine on
+    local[], unsafe for long-running cluster jobs).  Snapshots that outlive
+    the operator (the final round backing the returned result) are freed by
+    the caller's ``release_snapshots``; iterative operators pass the ids to
+    ``release_snapshots(spark, ids=...)`` to free round N-1's blocks the
+    moment round N is materialized, so live executor storage stays O(one
+    round's state) however many rounds run.  That free is DESTRUCTIVE (no
+    lineage to recompute from), so it runs only after the next round's
+    eager snapshot has consumed the old one.
+
+    With a directory → reliable ``checkpoint`` (empty id set): blocks are
+    written to the fault-tolerant filesystem, surviving executor loss and
+    any cache eviction — the mode a 100 TB cluster run should use.  The
+    caller sets the context's checkpoint dir once up front.
     """
     if checkpoint_dir is not None:
         return df.checkpoint(eager=True), frozenset()
+    # lazy import: operators stay importable without the sources package
+    # (operators/text.py convention)
     from airflow_cms_inpatient_etl_spark.sources.registry import (
         tracked_localcheckpoint,
     )
 
     return tracked_localcheckpoint(df, eager=True)
-
-
-def _free_snapshot(df: DataFrame, ids: frozenset[int]) -> None:
-    """Unpersist the localCheckpoint blocks behind ``ids``.
-
-    DESTRUCTIVE: a localCheckpointed RDD has no lineage to recompute from, so
-    this must only run once nothing live depends on the snapshot — i.e. after
-    the NEXT round's eager snapshot (which consumed it) is materialized.
-    Routed through the registry's scoped release so the tracked-id set stays
-    exact (no stale ids accumulate across a many-round peel).
-    """
-    from airflow_cms_inpatient_etl_spark.sources.registry import release_snapshots
-
-    release_snapshots(df.sparkSession, ids=ids)
 
 
 def connected_components(
@@ -175,7 +147,7 @@ def connected_components(
 
     ``checkpoint_dir`` switches per-round lineage truncation from
     ``localCheckpoint`` (executor-loss-unsafe) to reliable ``checkpoint``
-    into that directory — see ``_lineage_snapshot``.
+    into that directory — see ``_snapshot_tracked``.
     """
     labels, _ = connected_components_with_rounds(
         pairs, id1, id2, max_iters, checkpoint_dir
@@ -192,13 +164,16 @@ def connected_components_with_rounds(
 ) -> tuple[DataFrame, int]:
     """``connected_components`` plus the number of large+small-star rounds it
     took — exposed so tests can assert the O(log n) convergence property."""
+    from airflow_cms_inpatient_etl_spark.sources.registry import release_snapshots
+
+    spark = pairs.sparkSession
     if checkpoint_dir is not None:
-        pairs.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
+        spark.sparkContext.setCheckpointDir(checkpoint_dir)
     e = pairs.select(F.col(id1).alias("src"), F.col(id2).alias("dst"))
-    # every local snapshot is registry-tracked inside _snapshot_tracked /
-    # _lineage_snapshot, so the ones that outlive this function (the node
-    # set and the final edge round backing the returned labels) are freed
-    # by the caller's release_snapshots
+    # every local snapshot is registry-tracked inside _snapshot_tracked, so
+    # the ones that outlive this function (the node set and the final edge
+    # round backing the returned labels) are freed by the caller's
+    # release_snapshots
     #
     # The input pair list is snapshotted ONCE before the node-set and
     # edge-set derivations (optimization round 15, guide §1/§2): both are
@@ -217,7 +192,7 @@ def connected_components_with_rounds(
     edges, prev_ids = _snapshot_tracked(
         base.filter(F.col("src") != F.col("dst")).distinct(), checkpoint_dir
     )
-    _free_snapshot(base, base_ids)
+    release_snapshots(spark, ids=base_ids)
     if max_iters is None:
         n_nodes = max(nodes.count(), 2)
         max_iters = 2 * math.ceil(math.log2(n_nodes)) + 8
@@ -236,7 +211,7 @@ def connected_components_with_rounds(
         # an unchanged edge set after a full round means a fixed point (stars)
         n_new = new_edges.count()
         converged = n_new == n_edges and new_edges.exceptAll(edges).isEmpty()
-        _free_snapshot(new_edges, prev_ids)  # round r-1 dead once r exists + compared
+        release_snapshots(spark, ids=prev_ids)  # round r-1 dead once r exists + compared
         edges, prev_ids, n_edges = new_edges, new_ids, n_new
     if not converged:
         raise RuntimeError(
@@ -258,7 +233,6 @@ def pagerank_integer(
     n_iter: int = 6,
     scale: int = 10**12,
     damping_pct: int = 85,
-    materialize_every: int | None = 2,
     seeds: DataFrame | None = None,
 ) -> DataFrame:
     """Weighted PageRank with INTEGER arithmetic — bit-reproducible across
@@ -275,17 +249,15 @@ def pagerank_integer(
     identically on both sides.  Truncation bias is ≤ outdeg ulps of 1e-12
     per node per round: irrelevant for ranking, priceless for determinism.
 
-    Spark shape: ``edges``/``nodes``/out-degree are computed once and
-    cached; each iteration is one shuffle (the groupBy on dst).  With
-    ``materialize_every`` set (the long-run default), ranks are snapshotted
-    (persist + materialize) on that cadence and the previous snapshot
-    released — live storage bounded at one snapshot, everything
-    ``clearCache``-releasable.  With ``materialize_every=None`` the whole
-    n_iter recurrence stays ONE lazy unrolled plan (the right mode for
-    small fixed iteration budgets: no per-round job overhead; each stage
-    is still shuffle-bounded, AQE plans the chain end-to-end) — reserve
-    the snapshot mode for deep budgets where mid-flight failure recompute
-    or plan growth matters.
+    Spark shape: the out-degree-joined edges, the nodes, the seeds and the
+    teleport table — each read by every iteration — are materialized once
+    as registry-tracked snapshots (``sources.registry.snapshot``; the
+    caller's ``release_snapshots`` frees them once the result is consumed),
+    and the n_iter recurrence stays ONE lazy unrolled plan: no per-round
+    job overhead, each iteration one shuffle (the groupBy on dst), AQE
+    plans the chain end-to-end.  The budgets here are small and fixed; a
+    deep budget would want per-round lineage truncation like
+    ``connected_components``.
 
     ``edges``: (src, dst, w) BIGINT columns.  ``nodes``: (node,) — must
     cover every src/dst.  Returns (node, rank) with SUM(rank) <= scale.
@@ -304,9 +276,11 @@ def pagerank_integer(
     each; zero elsewhere), so ranks measure proximity to the seeds — the
     "similar pages / related users" primitive.  Same integer exactness.
     """
+    from airflow_cms_inpatient_etl_spark.sources.registry import snapshot
+
     outd = edges.groupBy("src").agg(F.sum("w").alias("wsum"))
-    edges = edges.join(outd, "src").persist()
-    nodes = nodes.persist()
+    edges = snapshot(edges.join(outd, "src"))
+    nodes = snapshot(nodes)
     # ONE driver-side scalar: the node count is a model parameter, the same
     # legitimate driver coordination connected_components uses for its
     # convergence check — it folds the teleport term into integer literals
@@ -314,7 +288,7 @@ def pagerank_integer(
     if seeds is None:
         n_tele = nodes.count()
     else:
-        seeds = seeds.select("node").distinct().persist()
+        seeds = snapshot(seeds.select("node").distinct())
         n_tele = seeds.count()
     if n_tele == 0:
         raise ValueError(
@@ -335,7 +309,7 @@ def pagerank_integer(
         ranks = nodes.join(flag, "node", "left").select(
             "node", F.when(F.col("__s").isNotNull(), init).otherwise(0).alias("rank")
         )
-    teleport = teleport.persist()
+    teleport = snapshot(teleport)
     # Teleport leg folded into the per-iteration aggregate (optimization
     # round 15, guide §2.4): instead of LEFT-JOINing the node-sized teleport
     # table onto the contribution aggregate every iteration (a SortMergeJoin
@@ -352,8 +326,7 @@ def pagerank_integer(
         F.lit(0).cast("long").alias("c"),
         F.col("tele").cast("long").alias("t"),
     )
-    pinned = None
-    for i in range(n_iter):
+    for _ in range(n_iter):
         contrib = edges.join(ranks.withColumnRenamed("node", "src"), "src").select(
             "dst",
             F.expr("rank * w div wsum").alias("c"),
@@ -368,32 +341,6 @@ def pagerank_integer(
                 (F.col("tele") + F.expr(f"{damping_pct} * inbound div 100")).alias("rank"),
             )
         )
-        # materialize every other round (persist + count), then drop the
-        # previous pin: bounds live storage at one rank snapshot while
-        # keeping everything catalog-releasable (localCheckpoint blocks
-        # survive clearCache and would pin executor storage for the life
-        # of the session; persist does not).  Note persist does NOT
-        # truncate lineage — fine at this iteration count; for deep
-        # iteration budgets on a real cluster, swap the snapshot for a
-        # reliable checkpoint dir (which does truncate).
-        if materialize_every and (i % materialize_every == materialize_every - 1 or i == n_iter - 1):
-            ranks = ranks.persist()
-            ranks.count()
-            if pinned is not None:
-                pinned.unpersist(blocking=False)
-            pinned = ranks
-    if materialize_every:
-        # snapshot mode materialized every iteration — the edge/node caches
-        # have served all their reads; release them now
-        edges.unpersist(blocking=False)
-        nodes.unpersist(blocking=False)
-        teleport.unpersist(blocking=False)
-        if seeds is not None:
-            seeds.unpersist(blocking=False)
-    # unrolled mode: nothing has executed yet, so unpersisting here would
-    # cancel the cache BEFORE its first use and recompute the out-degree
-    # join once per iteration — leave both pinned (tiny: the aggregated
-    # edge list + node list); the caller releases via clearCache
     return ranks
 
 
@@ -422,7 +369,7 @@ def kcore_peel(
     really is the k-core).
 
     Iteration shape: the live node set is LINEAGE-SNAPSHOTTED each round
-    (``_lineage_snapshot`` — localCheckpoint, or reliable ``checkpoint``
+    (``_snapshot_tracked`` — localCheckpoint, or reliable ``checkpoint``
     when ``checkpoint_dir`` is given, the 100 TB mode shared with
     connected_components).  Each round consumes the previous set twice (one
     alive-filter per endpoint), so a merely-persisted recurrence would
@@ -434,18 +381,21 @@ def kcore_peel(
     round: two shuffle-bounded semi joins + one groupBy — cost proportional
     to the CURRENT edge set, which only shrinks as nodes peel.
     """
+    from airflow_cms_inpatient_etl_spark.sources.registry import release_snapshots
+
+    spark = edges.sparkSession
     if checkpoint_dir is not None:
-        edges.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
+        spark.sparkContext.setCheckpointDir(checkpoint_dir)
     und = (
         edges.select(F.col(a).alias("s"), F.col(b).alias("t"))
         .filter(F.col("s") != F.col("t"))
         .distinct()
     )
-    adj = _lineage_snapshot(
+    adj, _ = _snapshot_tracked(
         und.union(und.select(F.col("t").alias("s"), F.col("s").alias("t"))),
         checkpoint_dir,
     )
-    nodes = _lineage_snapshot(
+    nodes, _ = _snapshot_tracked(
         adj.select(F.col("s").alias("node")).distinct(), checkpoint_dir
     )
 
@@ -464,7 +414,7 @@ def kcore_peel(
             _deg(alive).filter(F.col("deg") >= k).select(F.col("s").alias("node")),
             checkpoint_dir,
         )
-        _free_snapshot(alive, prev_ids)  # round r-1's alive set dead once r exists
+        release_snapshots(spark, ids=prev_ids)  # round r-1's alive set dead once r exists
         prev_ids = new_ids
     final_deg = _deg(alive)
     return (
@@ -513,8 +463,11 @@ def ancestor_closure(
     appears in ``parents`` at all) — pass it whenever the hierarchy can
     have singletons.
     """
+    from airflow_cms_inpatient_etl_spark.sources.registry import release_snapshots
+
+    spark = parents.sparkSession
     if checkpoint_dir is not None:
-        parents.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
+        spark.sparkContext.setCheckpointDir(checkpoint_dir)
     p = parents.select(F.col(node).alias("d"), F.col(parent).alias("a"))
     if max_depth is None:
         max_depth = max(p.count(), 1)
@@ -544,8 +497,7 @@ def ancestor_closure(
             ),
             checkpoint_dir,
         )
-        _free_snapshot(new_cl, cl_ids)
-        _free_snapshot(new_jmp, jmp_ids)
+        release_snapshots(spark, ids=cl_ids | jmp_ids)
         cl, cl_ids = new_cl, new_cl_ids
         jmp, jmp_ids = new_jmp, new_jmp_ids
         if jmp.isEmpty():  # every pointer has sailed past its root: converged
@@ -575,8 +527,8 @@ def label_propagation(
     node-sized label table, a (dst, label) partial-aggregate, and an argmax
     per node via max(struct(wsum, -label)) that folds map-side — two
     key-bounded exchanges per round, no driver participation.  The fixed
-    small budget stays ONE unrolled lazy plan with nothing persisted (no
-    storage pins — see pagerank_integer's snapshot mode for deep budgets)."""
+    small budget stays ONE unrolled lazy plan with nothing materialized (no
+    storage pins)."""
     sym = edges.filter(F.col("src") != F.col("dst"))
     uedges = (
         sym.select("src", "dst", "w")

@@ -478,7 +478,11 @@ def kmeans_fit(
     Deterministic: init = the k lowest-``id_col`` vectors; assignment ties
     break on centroid id; convergence is an integer count (vectors whose
     assignment changed).  Empty clusters keep their previous centroid.
-    ``localCheckpoint`` truncates lineage each round.
+    A registry-tracked eager ``localCheckpoint`` truncates lineage each
+    round, and round r-1's blocks are freed once round r is materialized
+    (the bounded-storage contract of connected_components); the returned
+    assignments and centroids stay pinned until the caller's
+    ``sources.registry.release_snapshots``.
 
     Returns ``(assignments, centroids, n_iters)`` — assignments as
     (id, centroid_id), centroids as (centroid_id, vec) with double
@@ -486,26 +490,31 @@ def kmeans_fit(
     """
     from pyspark.sql import Window as W
 
-    centroids = (
+    from airflow_cms_inpatient_etl_spark.sources.registry import (
+        release_snapshots,
+        tracked_localcheckpoint,
+    )
+
+    spark = embeddings.sparkSession
+    centroids, c_ids = tracked_localcheckpoint(
         embeddings.orderBy(id_col)
         .limit(k)
         .select(
             F.row_number().over(W.orderBy(id_col)).alias("centroid_id"),
             F.transform(F.col(vec_col), lambda x: x.cast("double")).alias(vec_col),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        eager=True,
     )
-    assignments = None
+    assignments, a_ids = None, frozenset()
     for it in range(1, max_iters + 1):
-        new_assign = (
+        new_assign, new_a_ids = tracked_localcheckpoint(
             ivf_assign(
                 embeddings,
                 centroids.withColumnRenamed("centroid_id", id_col),
                 id_col,
                 vec_col,
-            )
-            .select(F.col(id_col), "centroid_id")
-            .localCheckpoint(eager=True)
+            ).select(F.col(id_col), "centroid_id"),
+            eager=True,
         )
         if assignments is not None:
             changed = (
@@ -515,8 +524,10 @@ def kmeans_fit(
                 .count()
             )
             if changed == 0:
+                release_snapshots(spark, ids=new_a_ids)
                 return assignments, centroids, it - 1
-        assignments = new_assign
+        release_snapshots(spark, ids=a_ids)  # round r-1 dead once r is compared
+        assignments, a_ids = new_assign, new_a_ids
         member_dims = (
             embeddings.join(assignments, id_col)
             .select("centroid_id", F.posexplode(F.col(vec_col)).alias("pos", "v"))
@@ -532,22 +543,18 @@ def kmeans_fit(
             )
         )
         # empty clusters keep their previous centroid
-        centroids = (
+        centroids, new_c_ids = tracked_localcheckpoint(
             centroids.select("centroid_id", F.col(vec_col).alias("__old"))
             .join(new_centroids, "centroid_id", "left")
             .select(
                 "centroid_id",
                 F.coalesce(F.col(vec_col), F.col("__old")).alias(vec_col),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            eager=True,
         )
+        release_snapshots(spark, ids=c_ids)
+        c_ids = new_c_ids
     return assignments, centroids, max_iters
-
-
-def _registry_snapshot(df):
-    from airflow_cms_inpatient_etl_spark.sources.registry import snapshot
-
-    return snapshot(df)
 
 
 def semdedup_assign_prune(
@@ -602,24 +609,21 @@ def semdedup_assign_prune(
     rn = F.row_number().over(
         W.partitionBy(id_col).orderBy(F.desc("cos_c"), "centroid_id")
     )
-    # persist the assignment: three consumers (both pair-join sides + the
+    # snapshot the assignment: three consumers (both pair-join sides + the
     # final projection) share one computation instead of re-deriving the
-    # crossJoin+window each (Catalyst does not CSE sibling subplans).
-    a = (
-        # tracked snapshot, not persist: a persist here would pin one
-        # CacheManager entry per invocation with no unpersist hook; see
-        # sources.registry.snapshot / release_snapshots (lazily imported —
-        # operators/text.py convention)
-        _registry_snapshot(
-            scored.withColumn("rn", rn)
-            .filter(F.col("rn") == 1)
-            .select(
-                F.col(id_col),
-                F.col(vec_col),
-                norm(F.col(vec_col)).alias("vnorm"),
-                F.col("centroid_id").alias("cluster_id"),
-                "cos_c",
-            )
+    # crossJoin+window each (Catalyst does not CSE sibling subplans); the
+    # caller's sources.registry.release_snapshots frees it
+    from airflow_cms_inpatient_etl_spark.sources.registry import snapshot
+
+    a = snapshot(
+        scored.withColumn("rn", rn)
+        .filter(F.col("rn") == 1)
+        .select(
+            F.col(id_col),
+            F.col(vec_col),
+            norm(F.col(vec_col)).alias("vnorm"),
+            F.col("centroid_id").alias("cluster_id"),
+            "cos_c",
         )
     )
     x = a.select(

@@ -282,12 +282,6 @@ def bpe_train(
     return merges
 
 
-def _snapshot(df: DataFrame) -> DataFrame:
-    from airflow_cms_inpatient_etl_spark.sources.registry import snapshot
-
-    return snapshot(df)
-
-
 def unigram_viterbi_segment(words: DataFrame, max_piece_len: int = 4) -> DataFrame:
     """SentencePiece-style UNIGRAM Viterbi segmentation (Kudo, ACL'18) with an
     integer-deterministic objective — the tokenizer family's inference-side

@@ -58,12 +58,16 @@ _PRIORITY = [
     # top_k_per_group, exact_range_shards, temperature_mixture,               #
     # keep_first_by_key and the pipeline/quality/crawl stage helpers;         #
     # results hash-identical ×3 SFs, but no correctness round has checked     #
-    # the new code), stalest first; (b) the 21 round-10 rows of the old       #
-    # round-17 queue not already in (a) — docs_source_cap,                    #
-    # stratified_sample_exact_k, decontaminate_embedding_cosine and curation  #
-    # v3/v4/v5/v6 are r10 rows seated via (a); and (c) the stalest r11 row    #
-    # in registration order.  No r10 row is left unseated.  The next queue    #
-    # is the 38 unseated r11 cohort, stalest first, then registration order.  #
+    # the new code), stalest first, then the 5 queries whose pins moved to    #
+    # registry snapshots (the four PageRank queries and                       #
+    # dedup_cluster_canonical; hash-identical ×3 SFs, last checked r16);      #
+    # and (b) the first 17 round-10 rows of the old round-17 queue not        #
+    # already in (a) — docs_source_cap, stratified_sample_exact_k,            #
+    # decontaminate_embedding_cosine and curation v3/v4/v5/v6 are r10 rows    #
+    # seated via (a).  The next queue is the 4 unseated r10 rows              #
+    # (dedup_containment, bloom_semijoin_lineitem, quality_dsir_importance,   #
+    # quality_quantile_normalize), then the 39 unseated r11 cohort, stalest   #
+    # first, then registration order.                                         #
     # ======================================================================= #
     # -- a. rebuilt from the shared curation stages ------------------------- #
     "decontaminate_embedding_cosine",
@@ -94,7 +98,13 @@ _PRIORITY = [
     "split_cluster_aware",
     "corpus_curation_v2",
     "corpus_curation_v7",
-    # -- b. the remaining round-10 rows (registration order) ---------------- #
+    # -- a. pins moved from persist to registry snapshots ------------------- #
+    "graph_pagerank",
+    "graph_personalized_pagerank",
+    "text_textrank_keywords",
+    "crawl_linkgraph_pagerank",
+    "dedup_cluster_canonical",
+    # -- b. round-10 rows (registration order) ------------------------------ #
     "dedup_exact_distinct",
     "dedup_exact_text",
     "dedup_fingerprint",
@@ -112,14 +122,8 @@ _PRIORITY = [
     "doc_chunk_overlap",
     "semdedup_prune",
     "epoch_shuffle_order",
-    "dedup_containment",
-    "bloom_semijoin_lineitem",
-    "quality_dsir_importance",
-    "quality_quantile_normalize",
-    # -- c. stalest round-11 row -------------------------------------------- #
-    "projection_typed_cast",
     # ----------------------- window boundary (50) -------------------------- #
-    # (28 code-changed + 21 r10 + 1 r11 = 50.)  Remaining rows follow in      #
+    # (28 + 5 code-changed + 17 r10 = 50.)  Remaining rows follow in          #
     # registration order via _reorder_registry.                               #
 ]
 

@@ -820,9 +820,7 @@ def basket_association_rules(spark, sf_dir):
     li = load_table(spark, sf_dir, "lineitem")
     # the capped distinct item set feeds four consumers (supports, both pair
     # sides, order total) — snapshot it once so the fact scan + dedup shuffle
-    # run once.  Tracked snapshot, not .cache(): a CacheManager pin has no
-    # release hook in a lazily-returned plan (and silently serves repeat
-    # invocations); registry.release_snapshots frees the blocks.  The basket
+    # run once; registry.release_snapshots frees the blocks.  The basket
     # cap is a windowed count over one o-keyed exchange (optimization round
     # 16, guide §2.4 — the former groupBy(o) + join-back re-derived and
     # re-shuffled the item table; same rework as recsys_item_item_cosine).

@@ -15,17 +15,16 @@ class QuerySpec:
     name: str
     fn: QueryFn
     oracle: str | None  # ANSI SQL for DuckDB; None → driver does rows-only check
-    doc: str = ""
 
 
 QUERY_REGISTRY: dict[str, QuerySpec] = {}
 
 
-def register(name: str, oracle: str | None = None, doc: str = "") -> Callable[[QueryFn], QueryFn]:
+def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     def deco(fn: QueryFn) -> QueryFn:
         if name in QUERY_REGISTRY:
             raise ValueError(f"duplicate query name {name!r}")
-        QUERY_REGISTRY[name] = QuerySpec(name=name, fn=fn, oracle=oracle, doc=doc or (fn.__doc__ or ""))
+        QUERY_REGISTRY[name] = QuerySpec(name=name, fn=fn, oracle=oracle)
         return fn
 
     return deco

@@ -629,9 +629,7 @@ def crawl_linkgraph_pagerank(spark, sf_dir):
     `dags/cms_inpatient_download_unzip.py:22` (fixed-URL ingest — this is
     the stage that turns one URL into a ranked frontier)."""
     edges, nodes = _host_linkgraph(spark, sf_dir)
-    ranks = pagerank_integer(
-        edges, nodes, n_iter=_LG_ITERS, scale=_LG_SCALE, materialize_every=None
-    )
+    ranks = pagerank_integer(edges, nodes, n_iter=_LG_ITERS, scale=_LG_SCALE)
     outd = edges.groupBy("src").agg(F.sum("w").cast("long").alias("out_w"))
     ind = edges.groupBy("dst").agg(F.sum("w").cast("long").alias("in_w"))
     return (

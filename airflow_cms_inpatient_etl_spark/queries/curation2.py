@@ -384,13 +384,11 @@ def graph_pagerank(spark, sf_dir):
     rank units (1e-12) make the iteration bit-reproducible, so a 6-deep
     iterative algorithm hash-matches an independently-unrolled SQL oracle —
     see ``operators.graph.pagerank_integer`` for the scale contract (one
-    shuffle per iteration).  A fixed 6-iteration budget runs in the
-    operator's unrolled-lazy mode: one declarative plan, no per-round
-    materialization jobs; the snapshot mode exists for deep budgets."""
+    shuffle per iteration).  The fixed 6-iteration budget runs as one
+    unrolled lazy plan over snapshotted edges/nodes: no per-round
+    materialization jobs."""
     _, edges, nodes = _transition_graph(spark, sf_dir)
-    return pagerank_integer(
-        edges, nodes, n_iter=_PR_ITERS, scale=_PR_SCALE, materialize_every=None
-    )
+    return pagerank_integer(edges, nodes, n_iter=_PR_ITERS, scale=_PR_SCALE)
 
 
 # --------------------------------------------------------------------------- #
@@ -850,8 +848,7 @@ def graph_personalized_pagerank(spark, sf_dir):
     _, edges, nodes = _transition_graph(spark, sf_dir)
     seeds = nodes.filter(F.col("node") < _PPR_SEED_MAX)
     return pagerank_integer(
-        edges, nodes, n_iter=_PR_ITERS, scale=_PR_SCALE,
-        materialize_every=None, seeds=seeds,
+        edges, nodes, n_iter=_PR_ITERS, scale=_PR_SCALE, seeds=seeds
     )
 
 

@@ -679,15 +679,10 @@ def dedup_cluster_canonical(spark, sf_dir):
     from airflow_cms_inpatient_etl_spark.operators.graph import connected_components
 
     d = load_table(spark, sf_dir, "documents")
-    # persist the verified pairs: connected_components snapshots nodes AND
-    # edges from its input, which would otherwise run the whole MinHash
-    # pipeline twice (measured ~2 s of the query's cost at sf0.1)
-    pairs = minhash_lsh_pairs(d, "doc_id", "text", threshold=0.7).persist()
+    # no materialization here: connected_components snapshots its input once
+    # before deriving nodes AND edges, so the MinHash pipeline runs once
+    pairs = minhash_lsh_pairs(d, "doc_id", "text", threshold=0.7)
     labels = connected_components(pairs.select("id1", "id2"))
-    # CC's node/edge snapshots are EAGER localCheckpoints, so by the time it
-    # returns the pair cache has been consumed — release it immediately
-    # (repeated invocations would otherwise pin one cache entry per call)
-    pairs.unpersist()
     meta = d.select(F.col("doc_id"), "n_chars")
     clustered = labels.join(meta, labels["node"] == meta["doc_id"]).select(
         "doc_id", F.col("label").alias("cluster_id"), "n_chars"

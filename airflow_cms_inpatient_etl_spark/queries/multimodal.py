@@ -443,12 +443,9 @@ def multimodal_phash_neardup(spark, sf_dir):
         )
     )
     # bands feeds BOTH the occupancy census and the candidate join, so it
-    # must not recompute the decode pipeline twice — but a .persist() here
-    # would pin a CacheManager entry per invocation with no unpersist hook
-    # (the function returns lazily), and the plan-keyed cache silently serves
-    # REPEATED invocations (it made the round-8 bench sample a cache-hit
-    # time).  The tracked snapshot materializes on first action; callers
-    # free the blocks via sources.registry.release_snapshots.
+    # must not recompute the decode pipeline twice.  The tracked snapshot
+    # materializes on first action; callers free the blocks via
+    # sources.registry.release_snapshots.
     bands = snapshot(bands)
     small = (
         bands.groupBy("i", "key")

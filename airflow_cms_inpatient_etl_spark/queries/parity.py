@@ -21,12 +21,9 @@ from airflow_cms_inpatient_etl_spark.operators.text import hash60
 from airflow_cms_inpatient_etl_spark.queries.base import register
 from airflow_cms_inpatient_etl_spark.sources.registry import load_table
 
-register(
-    "flagship_patient_claims_plus",
-    oracle=FLAGSHIP_ORACLE_SQL,
-    doc="A15-A18: projection/rename + CASE decode + LEFT broadcast equi-join "
-    "(orders⋈customer analog of claims⋈beneficiary, reference :160-190).",
-)(flagship_testdata)
+# A15-A18: projection/rename + CASE decode + LEFT broadcast equi-join
+# (orders⋈customer analog of claims⋈beneficiary, reference :160-190).
+register("flagship_patient_claims_plus", oracle=FLAGSHIP_ORACLE_SQL)(flagship_testdata)
 
 
 @register(

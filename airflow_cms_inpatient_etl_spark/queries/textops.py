@@ -908,9 +908,7 @@ def text_textrank_keywords(spark, sf_dir):
         .agg(F.count(F.lit(1)).alias("w"))
     )
     nodes = edges.select(F.col("src").alias("node")).distinct()
-    ranks = pagerank_integer(
-        edges, nodes, n_iter=_TR_ITERS, scale=_TR_SCALE, materialize_every=None
-    )
+    ranks = pagerank_integer(edges, nodes, n_iter=_TR_ITERS, scale=_TR_SCALE)
     # Top-k via orderBy().limit() — plans TakeOrderedAndProject (per-partition
     # heaps + a k-row driver merge), NOT a single-partition sort of the whole
     # vocabulary; rn is derived AFTER the limit, so the only window runs over

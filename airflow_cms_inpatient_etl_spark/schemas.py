@@ -36,10 +36,6 @@ BENEFICIARY_KEEP_COLS = [
 ]
 
 
-def _lower(names: list[str]) -> list[str]:
-    return [n.lower() for n in names]
-
-
 CLAIMS_SCHEMA = T.StructType(
     [
         T.StructField("desynpuf_id", T.StringType()),

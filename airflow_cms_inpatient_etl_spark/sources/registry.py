@@ -150,7 +150,7 @@ def _assert_scan_shaped(df: DataFrame) -> None:
             stack.append(children.apply(i))
 
 
-def spread_scan(df: DataFrame, key_col: str, min_partitions: int | None = None) -> DataFrame:
+def spread_scan(df: DataFrame, key_col: str) -> DataFrame:
     """Hash-repartition a SMALL-PARALLELISM scan by ``key_col`` so expensive
     map-side work (per-token md5 pipelines, HOF gram hashing) uses every
     core — and do NOTHING when the scan is already parallel.
@@ -171,13 +171,11 @@ def spread_scan(df: DataFrame, key_col: str, min_partitions: int | None = None) 
     upstream stages as real jobs, so that shape is rejected loudly instead.
     """
     _assert_scan_shaped(df)
-    target = min_partitions
-    if target is None:
-        spark = df.sparkSession
-        target = min(
-            spark.sparkContext.defaultParallelism,
-            int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
-        )
+    spark = df.sparkSession
+    target = min(
+        spark.sparkContext.defaultParallelism,
+        int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
+    )
     if df.rdd.getNumPartitions() >= target:
         return df
     from pyspark.sql import functions as F
@@ -190,12 +188,14 @@ def spread_scan(df: DataFrame, key_col: str, min_partitions: int | None = None) 
 # --------------------------------------------------------------------------- #
 # Several queries materialize an expensive intermediate exactly once for 2-5
 # downstream consumers (LSH posting lists, band tables, per-doc score tables).
-# Neither storage primitive self-releases in a long-lived PySpark session:
-#   - ``.persist()``/``.cache()`` pins a CacheManager entry keyed by logical
-#     plan with no unpersist hook in a lazily-returned function — AND silently
-#     serves REPEATED invocations of the same query from the warm cache
-#     (measured: it faked the round-8 bench number for the pHash query).
-#   - ``.localCheckpoint()`` avoids the plan-keyed reuse, but its blocks are
+# This registry is the engine's ONLY way to pin data.  Neither Spark storage
+# primitive self-releases in a long-lived PySpark session:
+#   - persist/cache pins a CacheManager entry keyed by logical plan with no
+#     release hook in a lazily-returned function — AND silently serves
+#     REPEATED invocations of the same query from the warm cache (measured:
+#     it faked the round-8 bench number for the pHash query).  The engine
+#     never uses it.
+#   - ``localCheckpoint`` avoids the plan-keyed reuse, but its blocks are
 #     in practice never freed from Python either: the JVM-side RDD stays
 #     strongly reachable through the Py4J gateway bindings, so the
 #     ContextCleaner's weak references never fire (measured: blocks survive
@@ -212,8 +212,8 @@ def spread_scan(df: DataFrame, key_col: str, min_partitions: int | None = None) 
 # localCheckpoint cannot be recomputed: its lineage is truncated).  The
 # registry is keyed per SparkContext (ids from one context are invisible to
 # and unreleasable through another) and lock-guarded for threaded drivers.
-# Iterative operators (operators/graph.py) keep their own tighter per-round
-# tracking and are unaffected.
+# Iterative operators (operators/graph.py, kmeans_fit, bpe_train) use the id
+# handles to free round r-1 as soon as round r is materialized.
 
 _SNAPSHOT_LOCK = threading.Lock()
 _SNAPSHOT_RDD_IDS: dict[str, set[int]] = {}  # SparkContext applicationId -> ids

@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from airflow_cms_inpatient_etl_spark.operators.dedup import ngram_jaccard_pairs
-from airflow_cms_inpatient_etl_spark.sources.registry import load_table
+from airflow_cms_inpatient_etl_spark.sources.registry import load_table, release_snapshots
 from tests.conftest import SF_SMOKE
 
 
@@ -219,6 +219,8 @@ def test_kmeans_fit_converges_and_is_stable(spark):
 
     e = load_table(spark, SF_ORACLE, "embeddings")
     n = e.count()
+    release_snapshots(spark)
+    pinned_before = spark.sparkContext._jsc.getPersistentRDDs().size()
     assignments, centroids, iters = kmeans_fit(e, k=4, max_iters=20)
     assert 0 < iters < 20                      # actually iterated, then stopped
     assert assignments.count() == n            # every vector assigned
@@ -232,6 +234,8 @@ def test_kmeans_fit_converges_and_is_stable(spark):
         .count()
     )
     assert moved == 0                          # fixpoint reached
+    release_snapshots(spark)                   # frees every round's pins
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == pinned_before
 
 
 @pytest.mark.slow

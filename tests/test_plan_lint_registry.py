@@ -41,16 +41,7 @@ from tests.conftest import SF_SMOKE
 
 # live-streaming queries execute real micro-batch jobs at construction time;
 # their plan shapes are asserted by tests/test_streaming.py instead
-_SKIP = {
-    "streaming_tumbling_live",
-    "streaming_late_data_live",
-    "streaming_stream_stream_join_live",
-    "streaming_stateful_profile_live",
-    "streaming_dedup_gate_live",
-    "streaming_heavy_hitters_live",
-    "streaming_percentiles_live",
-    "streaming_asof_live",
-}
+_SKIP = {n for n in QUERY_REGISTRY if n.endswith("_live")}
 
 # the ONLY queries allowed to cross into Python, all Arrow-batched
 _ARROW_WHITELIST = {
@@ -172,6 +163,12 @@ _NEW_SINCE_GATE = [
     "text_html_strip_c4",
     "corpus_curation_v9",
     "corpus_curation_v7",
+    # code-changed — persist pins replaced by registry snapshots
+    "graph_pagerank",
+    "graph_personalized_pagerank",
+    "text_textrank_keywords",
+    "crawl_linkgraph_pagerank",
+    "dedup_cluster_canonical",
 ]
 
 
@@ -181,9 +178,9 @@ def _formatted(df) -> str:
 
 def _lint(spark, names):
     # Building snapshot-using queries pins localCheckpoint blocks (under AQE
-    # the subtree's shuffle stages run at construction); release them and any
-    # plan-keyed cache entries afterward so the lint is storage-neutral for
-    # the rest of the pytest session.
+    # the subtree's shuffle stages run at construction); release them
+    # afterward so the lint is storage-neutral for the rest of the pytest
+    # session.
     from airflow_cms_inpatient_etl_spark.sources.registry import release_snapshots
 
     violations = []
@@ -218,7 +215,6 @@ def _lint(spark, names):
                 )
     finally:
         release_snapshots(spark)
-        spark.catalog.clearCache()
     return violations
 
 

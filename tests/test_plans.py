@@ -8,6 +8,7 @@ from __future__ import annotations
 import pytest
 
 from airflow_cms_inpatient_etl_spark.queries import QUERY_REGISTRY
+from airflow_cms_inpatient_etl_spark.session import scoped_conf
 
 SF = "/root/testdata/sf0.01"
 
@@ -127,17 +128,13 @@ def test_runtime_bloom_filter_semi_join_reduction(spark):
         .filter(F.col("o_totalprice") > 500_000)
         .select("o_orderkey")
     )
-    saved = {
-        "spark.sql.autoBroadcastJoinThreshold": spark.conf.get("spark.sql.autoBroadcastJoinThreshold"),
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": spark.conf.get(
-            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold"
-        ),
-    }
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set(
-            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0"
-        )
+    with scoped_conf(
+        spark,
+        {
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
+        },
+    ):
         plan = (
             li.join(orders, li.l_orderkey == orders.o_orderkey)
             ._jdf.queryExecution()
@@ -145,9 +142,6 @@ def test_runtime_bloom_filter_semi_join_reduction(spark):
             .toString()
         )
         assert "might_contain" in plan  # bloom filter applied at the fact side
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
 
 
 def test_interval_attribution_avoids_nested_loop(spark):

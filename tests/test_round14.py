@@ -80,7 +80,6 @@ def linkgraph_rows(spark):
     from airflow_cms_inpatient_etl_spark.sources.registry import release_snapshots
 
     release_snapshots(spark)
-    spark.catalog.clearCache()
     return rows
 
 
@@ -228,7 +227,6 @@ def test_hits_normalized_mass_and_flags(spark):
     from airflow_cms_inpatient_etl_spark.sources.registry import release_snapshots
 
     release_snapshots(spark)
-    spark.catalog.clearCache()
 
 
 def test_frontier_schedule_is_total_order_with_bounded_budget(spark):
@@ -248,7 +246,6 @@ def test_frontier_schedule_is_total_order_with_bounded_budget(spark):
     from airflow_cms_inpatient_etl_spark.sources.registry import release_snapshots
 
     release_snapshots(spark)
-    spark.catalog.clearCache()
 
 
 # --------------------------------------------------------------------------- #
@@ -297,7 +294,6 @@ def test_bradley_terry_structure(spark):
     from airflow_cms_inpatient_etl_spark.sources.registry import release_snapshots
 
     release_snapshots(spark)
-    spark.catalog.clearCache()
 
 
 # --------------------------------------------------------------------------- #
@@ -338,7 +334,6 @@ def test_ivm_distinct_ledger_balances(spark):
     from airflow_cms_inpatient_etl_spark.sources.registry import release_snapshots
 
     release_snapshots(spark)
-    spark.catalog.clearCache()
 
 
 # --------------------------------------------------------------------------- #

@@ -169,18 +169,30 @@ def test_caption_align_gate_separates_engineered_mismatches(spark):
 
 def test_snapshot_release_is_deterministic_and_complete(spark):
     """Queries that snapshot an expensive intermediate (LSH posting lists,
-    band tables, per-doc score tables) must leave NO surviving executor
-    storage after release_snapshots — immediately, with no GC poll.  This is
-    the round-9 replacement for per-invocation .persist()/.cache(), which
+    band tables, per-doc score tables, PageRank's edge/node tables) must
+    leave NO surviving executor storage and an EMPTY CacheManager after
+    release_snapshots alone — immediately, with no GC poll and no
+    clearCache.  The tracked snapshot is the engine's only pin: persist/cache
     pinned one CacheManager entry per call forever AND silently served
     repeated invocations from the warm cache (it faked the round-8 bench
     number for multimodal_phash_neardup)."""
     from airflow_cms_inpatient_etl_spark.sources.registry import release_snapshots
 
     sc = spark.sparkContext
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
     release_snapshots(spark)  # isolate from earlier tests in the session
+    spark.catalog.clearCache()
     baseline = len(sc._jsc.sc().getRDDStorageInfo())
-    for name in ("dedup_minhash_lsh", "basket_association_rules", "corpus_curation_v4"):
+    for name in (
+        "dedup_minhash_lsh",
+        "basket_association_rules",
+        "corpus_curation_v4",
+        "graph_pagerank",
+        "graph_personalized_pagerank",
+        "text_textrank_keywords",
+        "crawl_linkgraph_pagerank",
+        "dedup_cluster_canonical",
+    ):
         n1 = QUERY_REGISTRY[name].fn(spark, SF_SMOKE).count()
         assert n1 > 0, name
         assert len(sc._jsc.sc().getRDDStorageInfo()) > baseline, (
@@ -191,6 +203,7 @@ def test_snapshot_release_is_deterministic_and_complete(spark):
         assert len(sc._jsc.sc().getRDDStorageInfo()) <= baseline, (
             f"{name}: snapshot blocks survived release_snapshots"
         )
+        assert cache_manager.isEmpty(), f"{name}: left a CacheManager entry"
         # a fresh invocation after release recomputes and matches (no stale
         # reuse, no lineage loss)
         assert QUERY_REGISTRY[name].fn(spark, SF_SMOKE).count() == n1, name

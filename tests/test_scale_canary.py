@@ -574,26 +574,6 @@ def test_top5_queries_complete_at_sf1(spark, sf1_dir):
 
 
 @pytest.mark.slow
-def test_minhash_uncached_path_completes_at_sf1(spark, sf1_dir):
-    """The cache_shingles=False path (callers who materialize exactly once and
-    refuse session-lifetime storage pinning) also completes at sf1 and pins
-    nothing."""
-    from airflow_cms_inpatient_etl_spark.operators.dedup import minhash_lsh_pairs
-
-    sc = spark.sparkContext
-    pinned_before = len(sc._jsc.sc().getRDDStorageInfo())
-    d = load_table(spark, sf1_dir, "documents")
-    n = minhash_lsh_pairs(d, "doc_id", "text", threshold=0.7, cache_shingles=False).count()
-    assert n > 0
-    # <= not ==: the preceding canary queries' released caches (basket/CF
-    # item sets, graph checkpoints) drain through the ContextCleaner
-    # asynchronously, so the session baseline may still SHRINK while this
-    # test runs; the property under test is only that the uncached path
-    # pins nothing NEW
-    assert len(sc._jsc.sc().getRDDStorageInfo()) <= pinned_before
-
-
-@pytest.mark.slow
 def test_connected_components_100k_path_logn_rounds(spark):
     """Verdict #7: the O(log n) large-star/small-star claim at canary scale —
     a 100 000-node PATH (the adversarial diameter case: naive propagation
@@ -702,11 +682,8 @@ def test_cluster_canonical_cc_rounds_bounded_at_sf1(spark, sf1_dir):
 
     d = load_table(spark, sf1_dir, "documents")
     n_docs = d.count()
-    pairs = minhash_lsh_pairs(
-        d, "doc_id", "text", threshold=0.7, cache_shingles=False
-    ).persist()
+    pairs = minhash_lsh_pairs(d, "doc_id", "text", threshold=0.7)
     labels, rounds = connected_components_with_rounds(pairs.select("id1", "id2"))
-    pairs.unpersist()
     assert rounds <= 2 * math.ceil(math.log2(n_docs)), \
         f"CC took {rounds} rounds on the 10× pair graph"
     n_labeled = labels.count()
@@ -1135,7 +1112,6 @@ def test_round13_queries_scale_invariants_at_sf1(spark, sf1_dir):
         )
     finally:
         release_snapshots(spark)
-        spark.catalog.clearCache()
 
 
 @pytest.mark.slow
@@ -1239,7 +1215,6 @@ def test_round14_queries_scale_invariants_at_sf1(spark, sf1_dir):
     assert sum(r["rank"] for r in lg) <= 10**12
 
     release_snapshots(spark)
-    spark.catalog.clearCache()
 
 
 @pytest.mark.slow
@@ -1284,4 +1259,3 @@ def test_rfm_sharded_rank_laws_at_sf1(spark, sf1_dir):
             assert max(sizes.values()) - min(sizes.values()) <= 1
 
     release_snapshots(spark)
-    spark.catalog.clearCache()

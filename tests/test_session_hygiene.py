@@ -64,6 +64,30 @@ def test_live_queries_leave_session_as_found(spark, tmp_path):
         assert after[key] == was, key
 
 
+def _storage_state(spark) -> tuple[int, bool]:
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    return _persistent_rdds(spark), cache_manager.isEmpty()
+
+
+@pytest.mark.slow
+def test_every_query_leaves_storage_as_found(spark):
+    """Every registered non-live query, run back to back in one tuned
+    session with ONLY ``release_snapshots`` after each (no clearCache),
+    leaves the persistent-RDD count and the CacheManager as it found them:
+    the tracked snapshot is the engine's one way to pin data."""
+    release_snapshots(spark)
+    spark.catalog.clearCache()
+    leaks = []
+    for name in (n for n in QUERY_REGISTRY if not n.endswith("_live")):
+        before = _storage_state(spark)
+        QUERY_REGISTRY[name].fn(spark, SF_SMOKE).write.format("noop").mode("overwrite").save()
+        release_snapshots(spark)
+        after = _storage_state(spark)
+        if after != before:
+            leaks.append(f"{name}: (persistent RDDs, CacheManager empty) {before} -> {after}")
+    assert not leaks, "\n".join(leaks)
+
+
 def test_stream_upsert_pins_nothing_per_batch(spark, tmp_path):
     """``stream_upsert_to_parquet`` replaces its own input every micro-batch;
     it must do so without pinning the merged rows (a long-running CDC stream

@@ -11,6 +11,7 @@ from airflow_cms_inpatient_etl_spark.operators.joins import (
     salted_aggregate,
     salted_join,
 )
+from airflow_cms_inpatient_etl_spark.session import scoped_conf
 from airflow_cms_inpatient_etl_spark.sources.registry import load_table
 from tests.conftest import SF_SMOKE
 
@@ -225,10 +226,7 @@ def test_aqe_splits_skewed_sort_merge_join_at_runtime(spark):
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": "64KB",
         "spark.sql.adaptive.coalescePartitions.enabled": "false",
     }
-    old = {k: spark.conf.get(k, None) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
+    with scoped_conf(spark, confs):
         left = spark.range(150_000).select(
             F.when(F.col("id") % 10 < 9, 0)
             .otherwise(F.col("id") % 100 + 1)
@@ -246,7 +244,3 @@ def test_aqe_splits_skewed_sort_merge_join_at_runtime(spark):
         assert "isFinalPlan=true" in plan
         assert "skew=true" in plan, plan[:800]
         assert "AQEShuffleRead skewed" in plan
-    finally:
-        for k, v in old.items():
-            if v is not None:
-                spark.conf.set(k, v)

@@ -10,6 +10,7 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
+from airflow_cms_inpatient_etl_spark.session import scoped_conf
 from airflow_cms_inpatient_etl_spark.sources.registry import load_table
 from airflow_cms_inpatient_etl_spark.streaming.jobs import (
     dedup_within_watermark,
@@ -494,9 +495,7 @@ def test_dedup_state_evicts_past_watermark(spark, tmp_path):
     stage([(i, t0 + H(hours=1), 1, "a", 0.0, "{}") for i in range(10, 20)], "b.parquet", 1e9 + 100)
     stage([(20, t0 + H(hours=2), 1, "a", 0.0, "{}")], "c.parquet", 1e9 + 200)
 
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "4"}):
         raw = (
             spark.readStream.schema(
                 "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
@@ -521,8 +520,6 @@ def test_dedup_state_evicts_past_watermark(spark, tmp_path):
             progresses = [p for p in q.recentProgress if p["stateOperators"]]
         finally:
             q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
 
     assert spark.table(name).count() == 21  # every key unique -> all emitted
     removed = sum(p["stateOperators"][0]["numRowsRemoved"] for p in progresses)

