@@ -1,4 +1,4 @@
-"""Data-quality assertions — the reference's DQ checks, made real.
+"""Data-quality checks — the reference's DQ checks, made real.
 
 The reference runs three ``SELECT CASE WHEN COUNT(*) > 0 THEN 1 ELSE 0 END``
 "checks" (``/root/reference/dags/patient_claims_plus_postgres.py:125-130,
@@ -6,11 +6,17 @@ The reference runs three ``SELECT CASE WHEN COUNT(*) > 0 THEN 1 ELSE 0 END``
 succeeds.  Here they raise (SURVEY.md A14), and we add the join-key uniqueness
 check the reference silently assumes (beneficiary must be ≤1 row per patient or
 the LEFT join fans out).
+
+The checks never re-scan: ``observe_dq`` attaches the metrics to a frame, they
+accumulate while the one action that consumes it runs (the CMS DAG's publish
+write), and ``check_non_empty`` / ``check_unique_key`` judge the observation
+afterwards.  The reference's literal 1/0 flag shape is the registry query
+``queries/parity.py:dq_rowcount_flag``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -18,52 +24,65 @@ class DataQualityError(AssertionError):
     pass
 
 
-def assert_non_empty(df: DataFrame, name: str) -> int:
-    n = df.count()
+# An action over an observed frame that may be empty runs under this conf.
+# AQE replaces a join whose materialized broadcast side is empty by its other
+# side, and the observed metrics of the pruned side are then never reported
+# (the observation completes with no metrics at all).
+OBSERVE_CONF = {
+    "spark.sql.adaptive.optimizer.excludedRules":
+        "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation"
+}
+
+
+def observe_dq(df: DataFrame, name: str, null_check_cols=(), unique_key: str | None = None):
+    """Single-pass DQ profiling via ``df.observe``: row count, per-column
+    null counts and, for ``unique_key``, its null and distinct counts are
+    accumulated AS the plan executes — no second scan.
+
+    At 100 TB this is the only affordable way to profile every pipeline
+    stage: a check that re-runs the plan (a ``count()`` or a group-by per
+    check) pays a full scan each, while observed metrics ride the existing
+    job like accumulators with SQL semantics (exactly-once per row even under
+    task retries, unlike raw accumulators).  The distinct count is a
+    ``collect_set`` of the key, merged on the driver, so ``unique_key`` is
+    for a side that is driver-sized anyway (a broadcast dimension).
+
+    Returns ``(df_with_observation, observation)``; read the observation
+    AFTER an action has materialized the returned frame.
+    """
+    cols = list(dict.fromkeys([*null_check_cols, *([unique_key] if unique_key else [])]))
+    obs = Observation(name)
+    metrics = [F.count(F.lit(1)).alias("n_rows")] + [
+        F.count_if(F.col(c).isNull()).alias(f"n_null_{c}") for c in cols
+    ]
+    if unique_key:
+        metrics.append(F.size(F.collect_set(unique_key)).alias(f"n_distinct_{unique_key}"))
+    return df.observe(obs, *metrics), obs
+
+
+def observed_metrics(obs: Observation, name: str) -> dict:
+    """The observation's metrics, failing closed: an observation completed
+    without metrics (its subtree was pruned from the executed plan) fails
+    the check instead of passing it."""
+    if obs._jo.getRow().length() == 0:  # blocks until the action has ended
+        raise DataQualityError(f"DQ failed: no metrics were observed for {name!r}")
+    return obs.get
+
+
+def check_non_empty(obs: Observation, name: str) -> int:
+    n = observed_metrics(obs, name)["n_rows"]
     if n == 0:
         raise DataQualityError(f"DQ failed: table {name!r} is empty")
     return n
 
 
-def assert_unique_key(df: DataFrame, key: str, name: str) -> None:
-    """Fail if any key value occurs more than once (single aggregate pass —
-    no driver-side collect of the data)."""
-    dup = (
-        df.groupBy(key).agg(F.count(F.lit(1)).alias("n")).filter(F.col("n") > 1).limit(1).count()
-    )
-    if dup:
+def check_unique_key(obs: Observation, key: str, name: str) -> None:
+    """Fail if any key value occurs more than once.  NULL keys count as one
+    value, as in a group-by: two NULL keys are a duplicate."""
+    m = observed_metrics(obs, name)
+    n_null = m[f"n_null_{key}"]
+    if n_null > 1 or m["n_rows"] - n_null != m[f"n_distinct_{key}"]:
         raise DataQualityError(f"DQ failed: key {key!r} not unique in {name!r}")
-
-
-def dq_flag(df: DataFrame) -> DataFrame:
-    """The reference's literal check shape: 1/0 non-empty flag plus the count
-    (kept for parity; `assert_non_empty` is the enforcing variant)."""
-    return df.agg(
-        F.when(F.count(F.lit(1)) > 0, 1).otherwise(0).alias("ok"),
-        F.count(F.lit(1)).alias("n"),
-    )
-
-
-def observe_dq(df: DataFrame, name: str, null_check_cols: list[str]):
-    """Single-pass DQ profiling via ``df.observe``: row count and per-column
-    null counts are accumulated AS the plan executes — no second scan.
-
-    At 100 TB this is the only affordable way to profile every pipeline
-    stage: ``assert_non_empty``-style checks each re-run the plan (fine for
-    gates, ruinous for monitoring), while observed metrics ride the existing
-    job like accumulators with SQL semantics (exactly-once per row even under
-    task retries, unlike raw accumulators).
-
-    Returns ``(df_with_observation, observation)``; read
-    ``observation.get`` AFTER an action has materialized the returned frame.
-    """
-    from pyspark.sql import Observation
-
-    obs = Observation(name)
-    metrics = [F.count(F.lit(1)).alias("n_rows")] + [
-        F.sum(F.col(c).isNull().cast("long")).alias(f"n_null_{c}") for c in null_check_cols
-    ]
-    return df.observe(obs, *metrics), obs
 
 
 def k_anonymity_profile(df, quasi_identifiers: list[str], k: int = 5):

@@ -6,7 +6,11 @@ The reference wires its work as Airflow task chains —
 ``retries=1, retry_delay=2min`` (``:14-19``) — where every task is a SQL
 round-trip to Postgres.  In the Spark-native engine, the *intra-job* chain
 collapses into one lazy Spark plan; what remains for an orchestrator are the
-coarse stages (ingest → transform/DQ → publish).
+coarse stages.  ``patient_claims_pipeline`` keeps the reference's six task
+names but reorders the edges so DQ gates readiness:
+``load_claims, load_beneficiary >> join_and_publish >> dq_claims,
+dq_beneficiary >> dq_final``.  The publish is staged, the checks read metrics
+observed during its one write, and ``dq_final`` swaps the checked table in.
 
 ``Pipeline`` is a dependency-ordered runner with per-task retries so the engine
 is orchestrator-agnostic (usable from a cron, a test, or a notebook);
@@ -92,10 +96,29 @@ class Pipeline:
 
 
 def patient_claims_pipeline(spark, claims_csv: str, beneficiary_csv: str, out_path: str) -> Pipeline:
-    """The reference DAG 2 as an engine pipeline: load → DQ → join → DQ → publish.
+    """The reference DAG 2 as an engine pipeline: load → join → stage →
+    DQ → publish, in one scan of each CSV.
 
     The drop/create/COPY triplet of the reference collapses into the Spark
-    load+cast scan; DQ checks actually raise (fixing A14)."""
+    load+cast scan, and DQ checks actually raise (fixing A14).  The checks
+    gate the publish instead of re-scanning its inputs:
+
+    * ``load_claims`` / ``load_beneficiary`` define the projected scans
+      (header read on the driver, no Spark job) and attach the metrics the
+      checks need (``dq.observe_dq``): row counts, and the beneficiary key's
+      null and distinct counts.
+    * ``join_and_publish`` observes the joined table's row count and writes
+      it ONCE, to ``<out_path>.next`` without the ``_SUCCESS`` marker.  That
+      write is the run's only scan and carries every metric: two Spark
+      jobs, the beneficiary broadcast and the write.
+    * ``dq_claims`` and ``dq_beneficiary`` (after ``join_and_publish``) and
+      ``dq_final`` (after both) check the observed metrics; ``dq_final`` then
+      marks the staged table ready and swaps it in (``files.commit_staged``).
+
+    A failing check drops the staged table, so the published table stays as
+    it was.  A crash before the swap leaves an unmarked staged dir that is
+    never promoted; a crash between the swap's delete and rename leaves a
+    marked one that the next run promotes before it stages."""
     from airflow_cms_inpatient_etl_spark.plans import dq
     from airflow_cms_inpatient_etl_spark.plans.patient_claims import build_patient_claims_plus
     from airflow_cms_inpatient_etl_spark.schemas import (
@@ -104,44 +127,72 @@ def patient_claims_pipeline(spark, claims_csv: str, beneficiary_csv: str, out_pa
         CLAIMS_KEEP_COLS,
         CLAIMS_SCHEMA,
     )
-    from airflow_cms_inpatient_etl_spark.sources.files import read_csv_projected, write_table
+    from airflow_cms_inpatient_etl_spark.session import scoped_conf
+    from airflow_cms_inpatient_etl_spark.sources.files import (
+        commit_staged,
+        discard_staged,
+        promote_staged,
+        read_csv_projected,
+        write_table_staged,
+    )
 
     state: dict[str, object] = {}
 
     def load_claims():
-        state["claims"] = read_csv_projected(spark, claims_csv, CLAIMS_KEEP_COLS, CLAIMS_SCHEMA)
-        return "loaded"
-
-    def load_beneficiary():
-        state["bene"] = read_csv_projected(
-            spark, beneficiary_csv, BENEFICIARY_KEEP_COLS, BENEFICIARY_SCHEMA
+        state["claims"], state["claims_dq"] = dq.observe_dq(
+            read_csv_projected(spark, claims_csv, CLAIMS_KEEP_COLS, CLAIMS_SCHEMA), "claims"
         )
         return "loaded"
 
-    def dq_claims():
-        return dq.assert_non_empty(state["claims"], "claims")
-
-    def dq_beneficiary():
-        dq.assert_unique_key(state["bene"], "desynpuf_id", "beneficiary")
-        return dq.assert_non_empty(state["bene"], "beneficiary")
+    def load_beneficiary():
+        state["bene"], state["bene_dq"] = dq.observe_dq(
+            read_csv_projected(spark, beneficiary_csv, BENEFICIARY_KEEP_COLS, BENEFICIARY_SCHEMA),
+            "beneficiary",
+            unique_key="desynpuf_id",
+        )
+        return "loaded"
 
     def join_and_publish():
-        out = build_patient_claims_plus(state["claims"], state["bene"])
-        write_table(out, out_path)
+        out, state["final_dq"] = dq.observe_dq(
+            build_patient_claims_plus(state["claims"], state["bene"]), "patient_claims_plus"
+        )
+        promote_staged(spark, out_path)
+        with scoped_conf(spark, dq.OBSERVE_CONF):
+            write_table_staged(out, out_path, ready=False)
         return out_path
 
+    def gate(check):
+        """A DQ task: a failing check drops the staged table."""
+
+        def task():
+            try:
+                return check()
+            except dq.DataQualityError:
+                discard_staged(spark, out_path)
+                raise
+
+        return task
+
+    def dq_claims():
+        return dq.check_non_empty(state["claims_dq"], "claims")
+
+    def dq_beneficiary():
+        dq.check_unique_key(state["bene_dq"], "desynpuf_id", "beneficiary")
+        return dq.check_non_empty(state["bene_dq"], "beneficiary")
+
     def dq_final():
-        final = spark.read.parquet(out_path)
-        return dq.assert_non_empty(final, "patient_claims_plus")
+        n = dq.check_non_empty(state["final_dq"], "patient_claims_plus")
+        commit_staged(spark, out_path)
+        return n
 
     return (
         Pipeline()
         .add("load_claims", load_claims)
         .add("load_beneficiary", load_beneficiary)
-        .add("dq_claims", dq_claims, upstream=["load_claims"])
-        .add("dq_beneficiary", dq_beneficiary, upstream=["load_beneficiary"])
-        .add("join_and_publish", join_and_publish, upstream=["dq_claims", "dq_beneficiary"])
-        .add("dq_final", dq_final, upstream=["join_and_publish"])
+        .add("join_and_publish", join_and_publish, upstream=["load_claims", "load_beneficiary"])
+        .add("dq_claims", gate(dq_claims), upstream=["join_and_publish"])
+        .add("dq_beneficiary", gate(dq_beneficiary), upstream=["join_and_publish"])
+        .add("dq_final", gate(dq_final), upstream=["dq_claims", "dq_beneficiary"])
     )
 
 

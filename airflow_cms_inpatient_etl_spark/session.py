@@ -53,6 +53,21 @@ def default_parallelism() -> int:
     return os.cpu_count() or 8
 
 
+def default_driver_memory() -> str:
+    """Local-mode driver heap: ``SPARK_GRAFT_DRIVER_MEM`` when set, else half
+    the machine's physical memory, capped at 20g.  In local mode the driver
+    JVM runs every task, and a heap larger than the machine lets the JVM grow
+    until the kernel kills it instead of collecting garbage."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        physical = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):  # no sysconf on this platform
+        return "20g"
+    return f"{min(20 * 1024, physical // 2 // 2**20)}m"
+
+
 def get_spark(
     app_name: str = DEFAULT_APP_NAME,
     master: str | None = None,
@@ -91,7 +106,7 @@ def get_spark(
         # that needs true-nanos semantics elsewhere must unset this.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # ---- local-mode memory (single JVM; ignored under a real cluster manager) -
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "20g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         # catalog tables (bucketed writes) land under /tmp, not the repo
         .config("spark.sql.warehouse.dir", "/tmp/spark-warehouse")

@@ -216,7 +216,8 @@ def stream_upsert_to_parquet(
     The merge is O(|target| + |batch|) per batch — at 100 TB the target
     would be bucketed on the key and the rewrite partition-scoped.
 
-    Commit by stage and swap: the merge is written to ``<target_dir>.next``,
+    Commit by stage and swap (``sources.files``' staged commit, shared with
+    the CMS DAG's publish): the merge is written to ``<target_dir>.next``,
     then the target is deleted and the staged dir renamed onto it, so the
     merge is computed once, inside its write, and nothing is pinned.  A crash
     while staging leaves the target intact (the replayed batch overwrites
@@ -234,17 +235,19 @@ def stream_upsert_to_parquet(
     """
     from pyspark.sql import Window as W
 
-    staging_dir = f"{target_dir}.next"
+    from airflow_cms_inpatient_etl_spark.sources.files import (
+        commit_staged,
+        hadoop_fs,
+        promote_staged,
+        write_table_staged,
+    )
+
     target_schema = None  # of the last write of this stream run
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         nonlocal target_schema
         spark = batch_df.sparkSession
-        hpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
-        target_path, staging_path = hpath(target_dir), hpath(staging_dir)
-        fs = target_path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-        if not fs.exists(target_path) and fs.exists(hpath(staging_path, "_SUCCESS")):
-            _rename(fs, staging_path, target_path)  # finish an interrupted swap
+        promote_staged(spark, target_dir)  # finish an interrupted swap
         w = W.partitionBy(*key_cols).orderBy(F.col(order_col).desc())
         compacted = (
             batch_df.withColumn("__rn", F.row_number().over(w))
@@ -256,6 +259,7 @@ def stream_upsert_to_parquet(
         # (corrupt footer, FS hiccup) must propagate so the batch fails and the
         # checkpoint replays it — swallowing it would silently replace the
         # accumulated table with just this micro-batch.
+        fs, target_path = hadoop_fs(spark, target_dir)
         if fs.exists(target_path):
             reader = spark.read if target_schema is None else spark.read.schema(target_schema)
             target = reader.parquet(target_dir)
@@ -264,9 +268,8 @@ def stream_upsert_to_parquet(
             )
         else:  # genuinely the first batch
             merged = compacted
-        merged.write.mode("overwrite").parquet(staging_dir)
-        fs.delete(target_path, True)
-        _rename(fs, staging_path, target_path)
+        write_table_staged(merged, target_dir)
+        commit_staged(spark, target_dir)
         target_schema = merged.schema
 
     return (
@@ -275,13 +278,6 @@ def stream_upsert_to_parquet(
         .outputMode("update")
         .start()
     )
-
-
-def _rename(fs, src, dst) -> None:
-    """Hadoop ``rename`` reports failure by returning False; raise instead,
-    so the batch fails and the checkpoint replays it."""
-    if not fs.rename(src, dst):
-        raise OSError(f"could not rename {src} to {dst}")
 
 
 def stream_qdigest_leaves(rows: DataFrame, value_col: str, bits: int) -> DataFrame:

@@ -16,9 +16,9 @@ import pytest
 
 from airflow_cms_inpatient_etl_spark.plans.dq import (
     DataQualityError,
-    assert_non_empty,
-    assert_unique_key,
-    dq_flag,
+    check_non_empty,
+    check_unique_key,
+    observe_dq,
 )
 from airflow_cms_inpatient_etl_spark.plans.patient_claims import build_patient_claims_plus
 from airflow_cms_inpatient_etl_spark.schemas import (
@@ -133,24 +133,29 @@ def test_sex_decode_and_unmatched_join(loaded):
 
 
 def test_dq_checks_raise(loaded, spark):
-    """SURVEY A14: the reference's DQ selects can never fail; ours raise."""
+    """SURVEY A14: the reference's DQ selects can never fail; ours raise.
+    The checks judge metrics observed while a write consumed the frame."""
     claims, bene = loaded
-    assert assert_non_empty(claims, "claims") == 4
-    assert_unique_key(bene, "desynpuf_id", "beneficiary")  # unique → ok
+
+    def observed(df, name, key=None):
+        df, obs = observe_dq(df, name, unique_key=key)
+        df.write.format("noop").mode("overwrite").save()
+        return obs
+
+    assert check_non_empty(observed(claims, "claims"), "claims") == 4
+    check_unique_key(observed(bene, "bene", "desynpuf_id"), "desynpuf_id", "beneficiary")  # unique → ok
     with pytest.raises(DataQualityError, match="empty"):
-        assert_non_empty(claims.filter(claims.clm_id == "nope"), "empty_slice")
+        empty_slice = claims.filter(claims.clm_id == "nope")
+        check_non_empty(observed(empty_slice, "empty_slice"), "empty_slice")
     with pytest.raises(DataQualityError, match="not unique"):
-        assert_unique_key(claims, "desynpuf_id", "claims")  # P001 twice
-    flag = dq_flag(claims).first()
-    assert flag["ok"] == 1 and flag["n"] == 4
+        # P001 twice
+        check_unique_key(observed(claims, "dup", "desynpuf_id"), "desynpuf_id", "claims")
 
 
 def test_observed_dq_metrics_single_pass(loaded, spark):
     """observe()-based DQ profiling: row count + null counts accumulate while
     the SAME job runs (no second scan — one job total), and the numbers match
     a direct computation."""
-    from airflow_cms_inpatient_etl_spark.plans.dq import observe_dq
-
     claims, bene = loaded
     joined = build_patient_claims_plus(claims, bene)
     observed, obs = observe_dq(joined, "pcp_dq", ["patient_death_date"])

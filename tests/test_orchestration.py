@@ -74,3 +74,132 @@ def test_airflow_dag_builder_gated():
 
     with pytest.raises(ImportError, match="not installed"):
         build_airflow_dag("x", Pipeline().add("a", lambda: 1))
+
+
+# --------------------------------------------------------------------------- #
+# the staged, DQ-gated publish                                                #
+# --------------------------------------------------------------------------- #
+
+CLAIMS_HEADER = CLAIMS_CSV.splitlines(keepends=True)[0]
+BENE_HEADER = BENEFICIARY_CSV.splitlines(keepends=True)[0]
+
+
+def _pipeline(spark, tmp_path, out, claims=CLAIMS_CSV, bene=BENEFICIARY_CSV):
+    """A patient_claims pipeline over its own copy of the given CSV texts."""
+    d = tmp_path / f"in{len(list(tmp_path.glob('in*')))}"
+    d.mkdir()
+    (d / "claims.csv").write_text(claims)
+    (d / "beneficiary.csv").write_text(bene)
+    return patient_claims_pipeline(spark, str(d / "claims.csv"), str(d / "beneficiary.csv"), out)
+
+
+def _tree_bytes(path) -> dict:
+    """Every file under ``path`` (marker and .crc files too) → its bytes."""
+    import os
+
+    return {
+        os.path.relpath(os.path.join(root, f), path): open(os.path.join(root, f), "rb").read()
+        for root, _, files in os.walk(path)
+        for f in files
+    }
+
+
+def _run_tasks(pipeline, *names):
+    """Run the named tasks by hand, in order — a run that stops after them."""
+    for name in names:
+        pipeline._tasks[name].fn()
+
+
+def test_warm_dag_runs_at_most_three_jobs_and_load_runs_none(spark, tmp_path):
+    """One DAG run scans each CSV once: the header read runs no job, and the
+    publish write carries every DQ metric — the beneficiary broadcast and the
+    write.  Jobs are counted by the range of ids the DAG scheduler hands out."""
+    from airflow_cms_inpatient_etl_spark.schemas import CLAIMS_KEEP_COLS, CLAIMS_SCHEMA
+    from airflow_cms_inpatient_etl_spark.sources.files import read_csv_projected
+
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    out = str(tmp_path / "patient_claims_plus")
+    _pipeline(spark, tmp_path, out).run(sleep=lambda s: None)  # warm-up
+    p = _pipeline(spark, tmp_path, out)
+    lo = scheduler.nextJobId()
+    results = p.run(sleep=lambda s: None)
+    assert scheduler.nextJobId() - lo <= 3
+    assert results["dq_claims"] == results["dq_final"] == 4
+    lo = scheduler.nextJobId()
+    read_csv_projected(spark, str(tmp_path / "in0" / "claims.csv"), CLAIMS_KEEP_COLS, CLAIMS_SCHEMA)
+    assert scheduler.nextJobId() - lo == 0
+
+
+DQ_FAILURES = {
+    "empty_claims": dict(claims=CLAIMS_HEADER),
+    # P003 has no claim, so the LEFT join cannot fan out: only the check sees it
+    "unreferenced_duplicate_key": dict(bene=BENEFICIARY_CSV + "P003,1,1,19600707,,1,y\n"),
+    "two_null_keys": dict(bene=BENEFICIARY_CSV + ",1,1,19500101,,1,y\n" * 2),
+    "empty_beneficiary": dict(bene=BENE_HEADER),
+    "empty_final_table": dict(),
+}
+
+
+@pytest.mark.parametrize("case", sorted(DQ_FAILURES))
+def test_dq_failure_leaves_published_table_untouched(spark, tmp_path, monkeypatch, case):
+    """A failing check drops the staged table: the table published by the
+    previous run stays byte-identical and no ``.next`` dir is left."""
+    import os
+
+    from airflow_cms_inpatient_etl_spark.plans import dq, patient_claims
+
+    out = str(tmp_path / "patient_claims_plus")
+    _pipeline(spark, tmp_path, out).run(sleep=lambda s: None)
+    before = _tree_bytes(out)
+    if case == "empty_final_table":
+        build = patient_claims.build_patient_claims_plus
+        monkeypatch.setattr(
+            patient_claims,
+            "build_patient_claims_plus",
+            lambda c, b: build(c, b).filter("claim_id = 'no such claim'"),
+        )
+    with pytest.raises(PipelineError) as err:
+        _pipeline(spark, tmp_path, out, **DQ_FAILURES[case]).run(sleep=lambda s: None)
+    assert isinstance(err.value.__cause__, dq.DataQualityError)
+    assert _tree_bytes(out) == before
+    assert not os.path.exists(out + ".next")
+
+
+def test_missing_column_fails_the_load_task(spark, tmp_path):
+    from airflow_cms_inpatient_etl_spark.sources.files import MissingColumnsError
+
+    out = str(tmp_path / "patient_claims_plus")
+    with pytest.raises(PipelineError, match="load_claims") as err:
+        _pipeline(spark, tmp_path, out, claims=BENEFICIARY_CSV).run(sleep=lambda s: None)
+    assert isinstance(err.value.__cause__, MissingColumnsError)
+
+
+def test_crash_before_checks_never_promotes_unchecked_stage(spark, tmp_path):
+    """First publish, crash after staging and before the checks: the staged
+    dir has no ``_SUCCESS``.  A later run must not promote it — here that
+    run fails its own checks, and no table is published at all."""
+    import os
+
+    out = str(tmp_path / "patient_claims_plus")
+    _run_tasks(_pipeline(spark, tmp_path, out), "load_claims", "load_beneficiary", "join_and_publish")
+    assert os.path.isdir(out + ".next") and not os.path.exists(out + ".next/_SUCCESS")
+    assert not os.path.exists(out)
+    with pytest.raises(PipelineError):
+        _pipeline(spark, tmp_path, out, claims=CLAIMS_HEADER).run(sleep=lambda s: None)
+    assert not os.path.exists(out) and not os.path.exists(out + ".next")
+
+
+def test_crash_between_delete_and_rename_promotes_checked_table(spark, tmp_path):
+    """Crash inside the swap: the table dir is gone and only the checked,
+    marked staged dir holds it.  The next run promotes it before staging,
+    so even when that run fails its checks the checked table is live."""
+    import os
+
+    out = str(tmp_path / "patient_claims_plus")
+    _pipeline(spark, tmp_path, out).run(sleep=lambda s: None)
+    before = _tree_bytes(out)
+    os.rename(out, out + ".next")
+    with pytest.raises(PipelineError):
+        _pipeline(spark, tmp_path, out, claims=CLAIMS_HEADER).run(sleep=lambda s: None)
+    assert _tree_bytes(out) == before
+    assert not os.path.exists(out + ".next")

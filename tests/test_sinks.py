@@ -78,6 +78,43 @@ def test_csv_roundtrip_preserves_nulls(spark, tmp_path):
     assert rows == {("a", None, 1.5), (None, "y", None)}  # empty cell -> NULL
 
 
+def _assert_header_parity(spark, path):
+    """The driver header read names and reads the same as Spark's inference."""
+    from airflow_cms_inpatient_etl_spark.sources.files import read_csv_header, read_csv_strings
+
+    inferred = spark.read.csv(path, header=True)
+    assert read_csv_header(spark, path) == inferred.columns
+    ours = read_csv_strings(spark, path)
+    assert ours.columns == inferred.columns
+    assert sorted(map(tuple, ours.collect()), key=repr) == sorted(
+        map(tuple, inferred.collect()), key=repr
+    )
+    return ours.columns
+
+
+def test_csv_header_read_matches_spark_inference(spark, tmp_path):
+    import gzip
+
+    spark_written = str(tmp_path / "csv_out")  # part files, _SUCCESS, .crc
+    spark.createDataFrame(
+        [("a", None, 1.5), (None, "y", None)], "s1 string, s2 string, d double"
+    ).write.mode("overwrite").option("header", True).csv(spark_written)
+    assert _assert_header_parity(spark, spark_written) == ["s1", "s2", "d"]
+
+    quoted = tmp_path / "quoted.csv"
+    quoted.write_text('"A,1","B x",C\n1,"2,5",3\n')
+    assert _assert_header_parity(spark, str(quoted)) == ["A,1", "B x", "C"]
+
+    gz = tmp_path / "claims.csv.gz"
+    with gzip.open(gz, "wt") as fh:
+        fh.write("\nID,AMT\nP1,10\nP2,\n")  # leading blank line: skipped, as by Spark
+    assert _assert_header_parity(spark, str(gz)) == ["ID", "AMT"]
+
+    odd = tmp_path / "odd.csv"
+    odd.write_text("A,,a,B,A\n1,2,3,4,5\n")
+    assert _assert_header_parity(spark, str(odd)) == ["A0", "_c1", "a2", "B", "A4"]
+
+
 def test_json_roundtrip_with_schema(spark, tmp_path):
     from pyspark.sql import types as T
 
