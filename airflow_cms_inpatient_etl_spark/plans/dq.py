@@ -19,19 +19,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from airflow_cms_inpatient_etl_spark.sources.files import quoted
+
 
 class DataQualityError(AssertionError):
     pass
-
-
-# An action over an observed frame that may be empty runs under this conf.
-# AQE replaces a join whose materialized broadcast side is empty by its other
-# side, and the observed metrics of the pruned side are then never reported
-# (the observation completes with no metrics at all).
-OBSERVE_CONF = {
-    "spark.sql.adaptive.optimizer.excludedRules":
-        "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation"
-}
 
 
 def observe_dq(df: DataFrame, name: str, null_check_cols=(), unique_key: str | None = None):
@@ -51,21 +43,27 @@ def observe_dq(df: DataFrame, name: str, null_check_cols=(), unique_key: str | N
     AFTER an action has materialized the returned frame.
     """
     cols = list(dict.fromkeys([*null_check_cols, *([unique_key] if unique_key else [])]))
-    obs = Observation(name)
-    metrics = [F.count(F.lit(1)).alias("n_rows")] + [
-        F.count_if(F.col(c).isNull()).alias(f"n_null_{c}") for c in cols
+    # SQL strings: one py4j call per metric, not one per Column method
+    metrics = ["count(1) AS n_rows"] + [
+        f"count_if({quoted(c)} IS NULL) AS {quoted('n_null_' + c)}" for c in cols
     ]
     if unique_key:
-        metrics.append(F.size(F.collect_set(unique_key)).alias(f"n_distinct_{unique_key}"))
-    return df.observe(obs, *metrics), obs
+        metrics.append(
+            f"size(collect_set({quoted(unique_key)})) AS {quoted('n_distinct_' + unique_key)}"
+        )
+    obs = Observation(name)
+    return df.observe(obs, *map(F.expr, metrics)), obs
 
 
 def observed_metrics(obs: Observation, name: str) -> dict:
     """The observation's metrics, failing closed: an observation completed
-    without metrics (its subtree was pruned from the executed plan) fails
-    the check instead of passing it."""
+    without metrics fails the check instead of passing it.  That happens
+    when AQE prunes the observed subtree from the executed plan, which it
+    does when a join input turns out empty (an empty broadcast side)."""
     if obs._jo.getRow().length() == 0:  # blocks until the action has ended
-        raise DataQualityError(f"DQ failed: no metrics were observed for {name!r}")
+        raise DataQualityError(
+            f"DQ failed: no metrics were observed for {name!r} (its input was empty and pruned)"
+        )
     return obs.get
 
 

@@ -104,13 +104,16 @@ def patient_claims_pipeline(spark, claims_csv: str, beneficiary_csv: str, out_pa
     gate the publish instead of re-scanning its inputs:
 
     * ``load_claims`` / ``load_beneficiary`` define the projected scans
-      (header read on the driver, no Spark job) and attach the metrics the
-      checks need (``dq.observe_dq``): row counts, and the beneficiary key's
-      null and distinct counts.
-    * ``join_and_publish`` observes the joined table's row count and writes
-      it ONCE, to ``<out_path>.next`` without the ``_SUCCESS`` marker.  That
-      write is the run's only scan and carries every metric: two Spark
-      jobs, the beneficiary broadcast and the write.
+      (header read on the driver, no Spark job).
+    * ``join_and_publish`` attaches the metrics the checks need
+      (``dq.observe_dq``): row counts of claims, beneficiary and the joined
+      table, and the beneficiary key's null and distinct counts.  It then
+      writes the joined table ONCE, to ``<out_path>.next`` without the
+      ``_SUCCESS`` marker.  That write is the run's only scan and carries
+      every metric: two Spark jobs, the beneficiary broadcast and the write.
+      An observation keeps only the first action's result, so every attempt
+      of the task attaches fresh ones: a retried publish is never judged
+      by a failed attempt's metrics.
     * ``dq_claims`` and ``dq_beneficiary`` (after ``join_and_publish``) and
       ``dq_final`` (after both) check the observed metrics; ``dq_final`` then
       marks the staged table ready and swaps it in (``files.commit_staged``).
@@ -127,7 +130,6 @@ def patient_claims_pipeline(spark, claims_csv: str, beneficiary_csv: str, out_pa
         CLAIMS_KEEP_COLS,
         CLAIMS_SCHEMA,
     )
-    from airflow_cms_inpatient_etl_spark.session import scoped_conf
     from airflow_cms_inpatient_etl_spark.sources.files import (
         commit_staged,
         discard_staged,
@@ -139,26 +141,23 @@ def patient_claims_pipeline(spark, claims_csv: str, beneficiary_csv: str, out_pa
     state: dict[str, object] = {}
 
     def load_claims():
-        state["claims"], state["claims_dq"] = dq.observe_dq(
-            read_csv_projected(spark, claims_csv, CLAIMS_KEEP_COLS, CLAIMS_SCHEMA), "claims"
-        )
+        state["claims"] = read_csv_projected(spark, claims_csv, CLAIMS_KEEP_COLS, CLAIMS_SCHEMA)
         return "loaded"
 
     def load_beneficiary():
-        state["bene"], state["bene_dq"] = dq.observe_dq(
-            read_csv_projected(spark, beneficiary_csv, BENEFICIARY_KEEP_COLS, BENEFICIARY_SCHEMA),
-            "beneficiary",
-            unique_key="desynpuf_id",
+        state["bene"] = read_csv_projected(
+            spark, beneficiary_csv, BENEFICIARY_KEEP_COLS, BENEFICIARY_SCHEMA
         )
         return "loaded"
 
     def join_and_publish():
+        claims, state["claims_dq"] = dq.observe_dq(state["claims"], "claims")
+        bene, state["bene_dq"] = dq.observe_dq(state["bene"], "beneficiary", unique_key="desynpuf_id")
         out, state["final_dq"] = dq.observe_dq(
-            build_patient_claims_plus(state["claims"], state["bene"]), "patient_claims_plus"
+            build_patient_claims_plus(claims, bene), "patient_claims_plus"
         )
         promote_staged(spark, out_path)
-        with scoped_conf(spark, dq.OBSERVE_CONF):
-            write_table_staged(out, out_path, ready=False)
+        write_table_staged(out, out_path)
         return out_path
 
     def gate(check):

@@ -61,10 +61,7 @@ def default_driver_memory() -> str:
     env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
     if env:
         return env
-    try:
-        physical = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
-    except (AttributeError, ValueError, OSError):  # no sysconf on this platform
-        return "20g"
+    physical = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
     return f"{min(20 * 1024, physical // 2 // 2**20)}m"
 
 

@@ -123,13 +123,14 @@ def read_csv_projected(
     # (col/cast/alias), tens of milliseconds of driver time per load
     return raw.selectExpr(
         *[
-            f"CAST({_quoted(src)} AS {field.dataType.simpleString()}) AS {_quoted(field.name)}"
+            f"CAST({quoted(src)} AS {field.dataType.simpleString()}) AS {quoted(field.name)}"
             for src, field in zip(keep_cols, schema.fields)
         ]
     )
 
 
-def _quoted(name: str) -> str:
+def quoted(name: str) -> str:
+    """``name`` as a backquoted SQL identifier."""
     return "`" + name.replace("`", "``") + "`"
 
 
@@ -155,12 +156,12 @@ def write_table(df: DataFrame, path: str, mode: str = "overwrite", partition_by:
 
 
 # Staged commit: a table is written next to its path and swapped in by
-# delete + rename.  ``_SUCCESS`` in the staged dir means "ready to swap":
-# writers with nothing to check keep the committer's marker, writers that
-# check the staged table first stage unmarked and mark it in
-# ``commit_staged``.  So a crash between delete and rename leaves a marked
-# staged dir that ``promote_staged`` finishes, and a crash before the mark
-# leaves one that is never promoted and is overwritten by the next stage.
+# delete + rename.  ``_SUCCESS`` in the staged dir means "checked and ready
+# to swap": the stage is written without the committer's marker, and only
+# ``commit_staged`` marks it, after the caller's checks.  So a crash before
+# the mark leaves a staged dir that is never promoted and is overwritten by
+# the next stage, and a crash between delete and rename leaves a marked one
+# that ``promote_staged`` finishes.
 STAGED_SUFFIX = ".next"
 _UNMARKED = {"mapreduce.fileoutputcommitter.marksuccessfuljobs": "false"}
 
@@ -175,13 +176,10 @@ def promote_staged(spark: SparkSession, path: str) -> None:
         _rename(fs, staged, target)
 
 
-def write_table_staged(df: DataFrame, path: str, ready: bool = True) -> None:
-    """``write_table`` into ``path``'s staged dir.  ``ready=False`` turns the
-    committer's ``_SUCCESS`` off, so the stage cannot be promoted until
-    ``commit_staged`` marks it."""
-    if ready:
-        write_table(df, path + STAGED_SUFFIX)
-        return
+def write_table_staged(df: DataFrame, path: str) -> None:
+    """``write_table`` into ``path``'s staged dir, with the committer's
+    ``_SUCCESS`` off: the stage cannot be promoted until ``commit_staged``
+    marks it."""
     with scoped_conf(df.sparkSession, _UNMARKED):
         write_table(df, path + STAGED_SUFFIX)
 

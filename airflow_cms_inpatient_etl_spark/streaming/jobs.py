@@ -221,8 +221,9 @@ def stream_upsert_to_parquet(
     then the target is deleted and the staged dir renamed onto it, so the
     merge is computed once, inside its write, and nothing is pinned.  A crash
     while staging leaves the target intact (the replayed batch overwrites
-    the staged dir); a crash between delete and rename leaves a staged dir
-    with the committer's ``_SUCCESS``, which the next batch promotes first.
+    the staged dir, which is never marked ready); a crash between delete
+    and rename leaves a staged dir marked ready (``_SUCCESS``, written by
+    ``commit_staged``), which the next batch promotes first.
     A replayed batch re-merges the same updates, and last-write-wins merging
     is idempotent, so the table converges to the same state (both crash
     windows: ``test_stream_upsert_promotes_committed_staging`` and

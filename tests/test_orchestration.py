@@ -203,3 +203,32 @@ def test_crash_between_delete_and_rename_promotes_checked_table(spark, tmp_path)
         _pipeline(spark, tmp_path, out, claims=CLAIMS_HEADER).run(sleep=lambda s: None)
     assert _tree_bytes(out) == before
     assert not os.path.exists(out + ".next")
+
+
+def test_retried_publish_is_judged_by_its_own_metrics(spark, tmp_path, monkeypatch):
+    """The first publish write fails inside its Spark job, after part of the
+    input has streamed through the observations.  A failed action still
+    completes an observation, with partial counts, and an observation keeps
+    only its first result: the retry must attach fresh ones, so the checks
+    pass with the full counts and the retried write is published."""
+    from pyspark.sql import functions as F
+
+    from airflow_cms_inpatient_etl_spark.sources import files
+
+    write = files.write_table
+    attempts = []
+
+    def flaky_write(df, path, *args, **kwargs):
+        attempts.append(path)
+        if len(attempts) == 1:
+            fail = F.raise_error(F.lit("transient write failure"))
+            df = df.withColumn("claim_id", F.when(F.col("claim_id") == "C4", fail).otherwise(F.col("claim_id")))
+        write(df, path, *args, **kwargs)
+
+    monkeypatch.setattr(files, "write_table", flaky_write)
+    out = str(tmp_path / "patient_claims_plus")
+    results = _pipeline(spark, tmp_path, out).run(sleep=lambda s: None)
+    assert len(attempts) == 2
+    assert results["dq_claims"] == results["dq_final"] == 4
+    assert results["dq_beneficiary"] == 3
+    assert sorted(r["claim_id"] for r in spark.read.parquet(out).collect()) == ["C1", "C2", "C3", "C4"]
