@@ -152,7 +152,9 @@ def patient_claims_pipeline(spark, claims_csv: str, beneficiary_csv: str, out_pa
 
     def join_and_publish():
         claims, state["claims_dq"] = dq.observe_dq(state["claims"], "claims")
-        bene, state["bene_dq"] = dq.observe_dq(state["bene"], "beneficiary", unique_key="desynpuf_id")
+        bene, state["bene_dq"] = dq.observe_dq(
+            state["bene"], "beneficiary", unique_key="desynpuf_id"
+        )
         out, state["final_dq"] = dq.observe_dq(
             build_patient_claims_plus(claims, bene), "patient_claims_plus"
         )

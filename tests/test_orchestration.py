@@ -222,7 +222,8 @@ def test_retried_publish_is_judged_by_its_own_metrics(spark, tmp_path, monkeypat
         attempts.append(path)
         if len(attempts) == 1:
             fail = F.raise_error(F.lit("transient write failure"))
-            df = df.withColumn("claim_id", F.when(F.col("claim_id") == "C4", fail).otherwise(F.col("claim_id")))
+            claim_id = F.when(F.col("claim_id") == "C4", fail).otherwise(F.col("claim_id"))
+            df = df.withColumn("claim_id", claim_id)
         write(df, path, *args, **kwargs)
 
     monkeypatch.setattr(files, "write_table", flaky_write)
@@ -231,4 +232,5 @@ def test_retried_publish_is_judged_by_its_own_metrics(spark, tmp_path, monkeypat
     assert len(attempts) == 2
     assert results["dq_claims"] == results["dq_final"] == 4
     assert results["dq_beneficiary"] == 3
-    assert sorted(r["claim_id"] for r in spark.read.parquet(out).collect()) == ["C1", "C2", "C3", "C4"]
+    published = sorted(r["claim_id"] for r in spark.read.parquet(out).collect())
+    assert published == ["C1", "C2", "C3", "C4"]
