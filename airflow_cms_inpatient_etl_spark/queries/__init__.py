@@ -60,12 +60,16 @@ _PRIORITY = [
     # results hash-identical ×3 SFs, but no correctness round has checked     #
     # the new code), stalest first, then the 5 queries whose pins moved to    #
     # registry snapshots (the four PageRank queries and                       #
-    # dedup_cluster_canonical; hash-identical ×3 SFs, last checked r16);      #
-    # and (b) the first 17 round-10 rows of the old round-17 queue not        #
+    # dedup_cluster_canonical; hash-identical ×3 SFs, last checked r16),     #
+    # then the 5 live queries re-staged through                               #
+    # streaming.jobs.stage_micro_batches (hash-identical ×3 SFs);             #
+    # and (b) the first 12 round-10 rows of the old round-17 queue not        #
     # already in (a) — docs_source_cap, stratified_sample_exact_k,            #
     # decontaminate_embedding_cosine and curation v3/v4/v5/v6 are r10 rows    #
-    # seated via (a).  The next queue is the 4 unseated r10 rows              #
-    # (dedup_containment, bloom_semijoin_lineitem, quality_dsir_importance,   #
+    # seated via (a).  The next queue is the 9 unseated r10 rows              #
+    # (tokenizer_vocab_coverage, corpus_datacard, doc_chunk_overlap,          #
+    # semdedup_prune, epoch_shuffle_order, dedup_containment,                 #
+    # bloom_semijoin_lineitem, quality_dsir_importance,                       #
     # quality_quantile_normalize), then the 39 unseated r11 cohort, stalest   #
     # first, then registration order.                                         #
     # ======================================================================= #
@@ -104,6 +108,12 @@ _PRIORITY = [
     "text_textrank_keywords",
     "crawl_linkgraph_pagerank",
     "dedup_cluster_canonical",
+    # -- a. re-staged through stage_micro_batches --------------------------- #
+    "streaming_late_data_live",
+    "streaming_dedup_within_watermark_live",
+    "streaming_dedup_gate_live",
+    "streaming_heavy_hitters_live",
+    "streaming_percentiles_live",
     # -- b. round-10 rows (registration order) ------------------------------ #
     "dedup_exact_distinct",
     "dedup_exact_text",
@@ -117,13 +127,8 @@ _PRIORITY = [
     "multimodal_caption_align",
     "decontaminate_ngram_overlap",
     "bpe_apply_encode",
-    "tokenizer_vocab_coverage",
-    "corpus_datacard",
-    "doc_chunk_overlap",
-    "semdedup_prune",
-    "epoch_shuffle_order",
     # ----------------------- window boundary (50) -------------------------- #
-    # (28 + 5 code-changed + 17 r10 = 50.)  Remaining rows follow in          #
+    # (28 + 5 + 5 code-changed + 12 r10 = 50.)  Remaining rows follow in      #
     # registration order via _reorder_registry.                               #
 ]
 

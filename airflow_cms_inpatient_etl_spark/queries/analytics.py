@@ -23,6 +23,7 @@ from airflow_cms_inpatient_etl_spark.functions.exact import dec
 from airflow_cms_inpatient_etl_spark.operators.text import bpe_train, hash60, unigram_viterbi_segment
 from airflow_cms_inpatient_etl_spark.operators.stages import temperature_mixture
 from airflow_cms_inpatient_etl_spark.queries.base import fill_doc, register
+from airflow_cms_inpatient_etl_spark.queries.sketch_oracles import QDIGEST_QUANTILES_ORACLE
 from airflow_cms_inpatient_etl_spark.sources.registry import load_table, snapshot, spread_scan
 
 
@@ -3393,17 +3394,7 @@ _QD_BOUND_NUM = (_QD_LEVELS + 1) * (1 << _QD_RADIX)  # bound = NUM*n/eps_den
 _QD_QUANTILES = [("q25", 0.25), ("q50", 0.50), ("q75", 0.75), ("q90", 0.90), ("q99", 0.99)]
 
 
-@register(
-    "sketch_qdigest_quantiles",
-    oracle="""
-    WITH nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_rows FROM lineitem)
-    SELECT t.q_label, nn.n_rows,
-           TRUE AS rank_not_below_target,
-           TRUE AS rank_within_bound,
-           TRUE AS sketch_bounded
-    FROM (VALUES ('q25'), ('q50'), ('q75'), ('q90'), ('q99')) AS t(q_label), nn
-    """,
-)
+@register("sketch_qdigest_quantiles", oracle=QDIGEST_QUANTILES_ORACLE)
 def sketch_qdigest_quantiles(spark, sf_dir):
     """Quantiles from a q-digest-style dyadic rank sketch (operators/sketch.py)
     over l_extendedprice cents — the mergeable-percentile gap in the sketch

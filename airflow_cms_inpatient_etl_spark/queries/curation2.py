@@ -18,6 +18,7 @@ from airflow_cms_inpatient_etl_spark.operators.graph import kcore_peel, pagerank
 from airflow_cms_inpatient_etl_spark.operators.sketch import cms_build, cms_estimate
 from airflow_cms_inpatient_etl_spark.operators.stages import temperature_mixture, top_k_per_group
 from airflow_cms_inpatient_etl_spark.queries.base import fill_doc, register
+from airflow_cms_inpatient_etl_spark.queries.sketch_oracles import HEAVY_HITTERS_CMS_ORACLE
 from airflow_cms_inpatient_etl_spark.operators.text import hash60
 from airflow_cms_inpatient_etl_spark.queries.similarity import _cosine
 from airflow_cms_inpatient_etl_spark.sources.registry import load_table, snapshot
@@ -237,19 +238,7 @@ def text_entropy_quality(spark, sf_dir):
 _CMS_DEPTH, _CMS_WIDTH = 4, 64
 
 
-@register(
-    "heavy_hitters_cms",
-    oracle="""
-    WITH e AS (
-        SELECT CAST(props->>'k' AS BIGINT) AS item FROM events
-    )
-    SELECT item,
-           CAST(COUNT(*) AS BIGINT) AS exact_count,
-           TRUE AS est_ge_exact,
-           TRUE AS within_bound
-    FROM e WHERE item IS NOT NULL GROUP BY item
-    """,
-)
+@register("heavy_hitters_cms", oracle=HEAVY_HITTERS_CMS_ORACLE)
 def heavy_hitters_cms(spark, sf_dir):
     """Count-min-sketch frequency estimation over the event property ``k``,
     accountability-checked against the exact counts in the same plan: the

@@ -311,9 +311,9 @@ def dedup_levenshtein_block(spark, sf_dir):
     return levenshtein_block_pairs(d, "doc_id", "text", rel_threshold=0.2, prefix_len=30)
 
 
-@register(
-    "dedup_incremental_index",
-    oracle=f"""
+# also the oracle of queries.streaming_live.streaming_dedup_gate_live, whose
+# drained sink is this table
+INCREMENTAL_INDEX_ORACLE = f"""
     WITH {_SHINGLES_CTE},
     delta AS (SELECT doc_id FROM documents WHERE doc_id % 10 = 0),
     dsh AS (SELECT doc_id, h FROM ex WHERE doc_id % 10 = 0),
@@ -328,8 +328,10 @@ def dedup_levenshtein_block(spark, sf_dir):
            COALESCE(n_shared, 0) / GREATEST(COALESCE(n_shingles, 0), 1) >= 0.5
                AS near_dup_of_corpus
     FROM delta d LEFT JOIN tot USING (doc_id) LEFT JOIN hit USING (doc_id)
-    """,
-)
+    """
+
+
+@register("dedup_incremental_index", oracle=INCREMENTAL_INDEX_ORACLE)
 def dedup_incremental_index(spark, sf_dir):
     """Incremental dedup of a NEW batch against the standing corpus — the
     shape a daily crawl ingest actually runs: never re-shingle the whole

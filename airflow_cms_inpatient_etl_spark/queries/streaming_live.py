@@ -1,11 +1,16 @@
 """Live Structured Streaming queries in the graded registry.
 
-The tumbling and late-data runs are deterministic functions of the fixture
-(complete-mode retention / pinned file order + integer-µs quantile cuts), so
-their final sink tables ARE batch-SQL-expressible and carry real DuckDB
-oracles.  The stream-stream join and the custom stateful operator keep
-rows-only checks (their incremental emission has no SQL form); their
-batch-equivalence is asserted in tests/test_streaming.py instead.
+Every query here drains a file-source stream to a final table that is a
+deterministic function of the fixture, so each carries a DuckDB oracle (the
+three sketch/dedup twins register their batch twin's oracle by name).
+
+A stream is fed one of two ways.  The six whole-file queries copy the events
+fixture into a staging dir and read it with ``streaming.jobs.stream_events``
+(one micro-batch; a copy runs no Spark job).  The five multi-batch queries
+label each row with its micro-batch and hand the frame to
+``streaming.jobs.stage_micro_batches``, which stages every batch in one
+Spark job and returns the stream that reads them back in a pinned order, one
+file per trigger.
 
 Contract: a live query leaves the session as it found it — no temp view,
 conf change, active stream or staging dir outlives the call.  Every drain
@@ -18,16 +23,21 @@ the result is consumed."""
 
 from __future__ import annotations
 
-import glob
 import os
 import shutil
 import tempfile
 
 from airflow_cms_inpatient_etl_spark.queries.base import register
+from airflow_cms_inpatient_etl_spark.queries.dedup import INCREMENTAL_INDEX_ORACLE
+from airflow_cms_inpatient_etl_spark.queries.sketch_oracles import (
+    HEAVY_HITTERS_CMS_ORACLE,
+    QDIGEST_QUANTILES_ORACLE,
+)
 from airflow_cms_inpatient_etl_spark.session import scoped_conf
 from airflow_cms_inpatient_etl_spark.streaming.jobs import (
     DRAIN_CONF,
     run_stream_to_memory,
+    stage_micro_batches,
     stream_events,
     tumbling_counts,
 )
@@ -57,63 +67,6 @@ def streaming_tumbling_live(spark, sf_dir):
         return run_stream_to_memory(
             tumbling_counts(stream_events(spark, stage_dir)), output_mode="complete"
         )
-
-
-def _stage_single_parquet(df, stage_dir: str, name: str, mtime: float) -> None:
-    """Write df as ONE parquet file at stage_dir/name with a controlled mtime
-    (the file stream source picks files oldest-mtime-first, which is how the
-    late batch is forced to arrive second)."""
-    tmp = os.path.join(stage_dir, f"_tmp_{name}")
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-    dest = os.path.join(stage_dir, name)
-    shutil.move(part, dest)
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.utime(dest, (mtime, mtime))
-
-
-def _stage_split_parquet(df, split_col, splits, stage_dir: str) -> None:
-    """Stage every micro-batch file of a split fixture in ONE job (guide §6:
-    one pass over the input instead of one full scan + coalesce(1) write per
-    split — the round-15 deferred item).
-
-    ``split_col`` is an expression labeling each row with its split;
-    ``splits`` maps each label to ``(file_name, mtime)``.  A single
-    ``coalesce(1)`` task writes one file per label via ``partitionBy`` (the
-    label column lives in the directory name, never in the file, so the
-    staged schema is identical to the per-split ``_stage_single_parquet``
-    output), and each file is then moved/mtime-stamped exactly as before.
-    Falls back to the per-split path for any label the partitioned write
-    produced no directory for (an empty split writes nothing under
-    ``partitionBy``; ``coalesce(1)`` always writes a schema-only file)."""
-    from pyspark.sql import functions as F
-
-    tmp = os.path.join(stage_dir, "_tmp_split")
-    spark = df.sparkSession
-    # dynamic-partition writes sort by the partition column first unless the
-    # writer may keep one open file per partition; with 2-3 splits the
-    # concurrent writers are free and the sort is a pure extra pass
-    # (measured: it cost back the saved scan on the 600k-row lineitem split)
-    with scoped_conf(spark, {"spark.sql.maxConcurrentOutputFileWriters": str(len(splits) + 1)}):
-        (
-            df.withColumn("_split", split_col)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .partitionBy("_split")
-            .parquet(tmp)
-        )
-    for label, (name, mtime) in splits.items():
-        parts = glob.glob(os.path.join(tmp, f"_split={label}", "part-*.parquet"))
-        if not parts:
-            _stage_single_parquet(
-                df.filter(split_col == F.lit(label)).drop("_split"),
-                stage_dir, name, mtime,
-            )
-            continue
-        dest = os.path.join(stage_dir, name)
-        shutil.move(parts[0], dest)
-        os.utime(dest, (mtime, mtime))
-    shutil.rmtree(tmp, ignore_errors=True)
 
 
 @register(
@@ -153,10 +106,11 @@ def streaming_late_data_live(spark, sf_dir):
     (numRowsDroppedByWatermark = full late file) — bounded state, the whole
     point of watermarks at 100 TB stream scale.  Append mode then emits
     exactly the closed windows with on-time-only counts.  Deterministic
-    because file order is pinned via mtime and each file is one micro-batch —
-    which is what makes the run SQL-oracle-able: on-time membership is an
-    integer-µs range predicate and the emitted set is the windows whose end
-    precedes the final watermark (max on-time ts − 10 min)."""
+    because ``stage_micro_batches`` pins the batch order and each batch is
+    one file, read in one trigger — which is what makes the run
+    SQL-oracle-able: on-time membership is an integer-µs range predicate and
+    the emitted set is the windows whose end precedes the final watermark
+    (max on-time ts − 10 min)."""
     from pyspark.sql import functions as F
 
     from airflow_cms_inpatient_etl_spark.sources.registry import load_table
@@ -170,34 +124,19 @@ def streaming_late_data_live(spark, sf_dir):
     lo_us, hi_us = ev.agg(
         F.unix_micros(F.min("ts")), F.unix_micros(F.max("ts"))
     ).collect()[0]
+    ts_us = F.unix_micros("ts")
+    arrival = (
+        F.when(ts_us < lo_us + (hi_us - lo_us) // 5, "late")
+        .when(ts_us < lo_us + (hi_us - lo_us) * 3 // 5, "ontime1")
+        .otherwise("ontime2")
+    )
     with tempfile.TemporaryDirectory(prefix="events_late_") as stage_dir:
-        # staged files carry ts as µs longs so the stream schema is explicit
-        as_long = ev.withColumn("ts", F.unix_micros("ts"))
-        cut_us = F.lit(lo_us + (hi_us - lo_us) // 5)
-        mid_us = F.lit(lo_us + (hi_us - lo_us) * 3 // 5)
-        # all three micro-batch files staged in ONE pass over events
-        # (was three filtered coalesce(1) jobs — guide §6, round-15 deferred)
-        _stage_split_parquet(
-            as_long,
-            F.when(F.col("ts") < cut_us, "c")
-            .when(F.col("ts") < mid_us, "a")
-            .otherwise("b"),
-            {
-                "a": ("a_ontime1.parquet", 1_000_000_000.0),
-                "b": ("b_ontime2.parquet", 1_000_000_100.0),
-                "c": ("c_late.parquet", 1_000_000_200.0),
-            },
+        events = stage_micro_batches(
+            ev.withColumn("arrival", arrival),
+            "arrival",
+            ["ontime1", "ontime2", "late"],
             stage_dir,
         )
-        raw = (
-            spark.readStream.schema(
-                "event_id long, ts long, user_id long, event_type string, "
-                "value double, props string"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage_dir)
-        )
-        events = raw.withColumn("ts", F.timestamp_micros("ts"))
         return run_stream_to_memory(tumbling_counts(events), output_mode="append")
 
 
@@ -296,25 +235,17 @@ def streaming_dedup_within_watermark_live(spark, sf_dir):
     ).collect()[0]
     horizon_min = (hi_us - lo_us) // 60_000_000 + 11
     with tempfile.TemporaryDirectory(prefix="events_dedup_") as stage_dir:
-        as_long = ev.withColumn("ts", F.unix_micros("ts"))
-        # the redelivery file is byte-identical to the first — write once,
-        # copy the file (was two identical full-scan coalesce(1) jobs)
-        _stage_single_parquet(as_long, stage_dir, "a_first.parquet", 1_000_000_000.0)
-        first = os.path.join(stage_dir, "a_first.parquet")
-        redeliver = os.path.join(stage_dir, "b_redelivery.parquet")
-        shutil.copy(first, redeliver)
-        os.utime(redeliver, (1_000_000_100.0, 1_000_000_100.0))
-        raw = (
-            spark.readStream.schema(
-                "event_id long, ts long, user_id long, event_type string, "
-                "value double, props string"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage_dir)
+        # both deliveries staged by one write: each row is exploded into
+        # its two copies, one per micro-batch
+        delivery = F.explode(F.array(F.lit("first"), F.lit("redelivery")))
+        raw = stage_micro_batches(
+            ev.withColumn("delivery", delivery),
+            "delivery",
+            ["first", "redelivery"],
+            stage_dir,
         )
         deduped = (
-            raw.withColumn("ts", F.timestamp_micros("ts"))
-            .withWatermark("ts", f"{horizon_min} minutes")
+            raw.withWatermark("ts", f"{horizon_min} minutes")
             .dropDuplicatesWithinWatermark(["event_id"])
             .select("event_id", "ts", "event_type", "value")
         )
@@ -417,20 +348,17 @@ def streaming_sliding_window_live(spark, sf_dir):
         return run_stream_to_memory(agg, output_mode="complete")
 
 
-@register(
-    "streaming_dedup_gate_live",
-    # the drained sink equals the BATCH incremental-dedup query exactly (the
-    # gate is per-document and documents arrive whole, so micro-batching
-    # cannot change the result) — reuse its oracle verbatim
-    oracle=None,  # filled below from the registered batch query
-)
+# the drained sink equals the BATCH incremental-dedup query exactly (the gate
+# is per-document and documents arrive whole, so micro-batching cannot change
+# the result) — its oracle applies verbatim
+@register("streaming_dedup_gate_live", oracle=INCREMENTAL_INDEX_ORACLE)
 def streaming_dedup_gate_live(spark, sf_dir):
     """LIVE streaming ingest dedup — `dedup_incremental_index` as a running
     stream: the delta documents (doc_id % 10 == 0) arrive as a file-source
-    stream in TWO forced micro-batches (maxFilesPerTrigger=1, mtime-ordered
-    files), each batch is shingled and gated against the STANDING corpus
-    shingle index (a tracked snapshot — materialized once, NOT re-derived
-    per batch), and foreachBatch appends the per-doc gate rows to a parquet
+    stream in TWO forced micro-batches (``stage_micro_batches``), each batch
+    is shingled and gated against the STANDING corpus shingle index (a
+    tracked snapshot — materialized once, NOT re-derived per batch), and
+    foreachBatch appends the per-doc gate rows to a parquet
     sink.  The drained sink is batching-invariant, so this live incremental
     run keeps the batch query's full DuckDB oracle — same contract as
     `streaming_tumbling_live`.  The two-batch split is the proof of
@@ -453,17 +381,11 @@ def streaming_dedup_gate_live(spark, sf_dir):
     delta = d.filter(F.col("doc_id") % 10 == 0)
     with tempfile.TemporaryDirectory(prefix="dedup_gate_") as tmp:
         stage_dir, out_dir, ckpt_dir = (os.path.join(tmp, sub) for sub in ("stage", "out", "ckpt"))
-        # both micro-batch files staged in ONE pass over the delta (guide §6)
-        _stage_split_parquet(
-            delta,
-            F.when(F.col("doc_id") % 20 == 0, "a").otherwise("b"),
-            {"a": ("batch_a.parquet", 1_000), "b": ("batch_b.parquet", 2_000)},
+        stream = stage_micro_batches(
+            delta.withColumn("half", F.when(F.col("doc_id") % 20 == 0, "a").otherwise("b")),
+            "half",
+            ["a", "b"],
             stage_dir,
-        )
-        stream = (
-            spark.readStream.schema(delta.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage_dir)
         )
         # the per-micro-batch gate joins drain under the same conf as every
         # memory-sink drain; foreachBatch creates out_dir on its first batch
@@ -485,31 +407,15 @@ def streaming_dedup_gate_live(spark, sf_dir):
         )
 
 
-# wire the batch query's oracle onto the live run (same final table by
-# construction); dedup is imported before this module by queries/__init__,
-# and a direct import keeps standalone module loading working too
-import dataclasses as _dc  # noqa: E402
-
-from airflow_cms_inpatient_etl_spark.queries import dedup as _dedup  # noqa: E402,F401
-from airflow_cms_inpatient_etl_spark.queries.base import QUERY_REGISTRY as _REG  # noqa: E402
-
-_REG["streaming_dedup_gate_live"] = _dc.replace(
-    _REG["streaming_dedup_gate_live"], oracle=_REG["dedup_incremental_index"].oracle
-)
-
-
-@register(
-    "streaming_heavy_hitters_live",
-    # the drained COMPLETE-mode grid is CELL-EXACT equal to the batch sketch
-    # (cell updates are associative integer adds, so micro-batching cannot
-    # change the final grid) — the estimate/accountability tail is therefore
-    # identical to heavy_hitters_cms and its oracle is reused verbatim below
-    oracle=None,  # filled below from the registered batch query
-)
+# the drained COMPLETE-mode grid is CELL-EXACT equal to the batch sketch (cell
+# updates are associative integer adds, so micro-batching cannot change the
+# final grid) — the estimate/accountability tail is therefore identical to
+# heavy_hitters_cms and so is its oracle
+@register("streaming_heavy_hitters_live", oracle=HEAVY_HITTERS_CMS_ORACLE)
 def streaming_heavy_hitters_live(spark, sf_dir):
     """LIVE streaming count-min sketch — `heavy_hitters_cms` as a running
     stream: events arrive as a file-source stream in TWO forced micro-batches
-    (event_id-parity split, mtime-ordered, maxFilesPerTrigger=1), and
+    (event_id-parity split, ``stage_micro_batches``), and
     `stream_cms_cells` maintains the depth x width grid as streaming
     aggregation STATE (bounded at 256 counters no matter how many distinct
     items flow — the whole reason CMS is the streaming heavy-hitters
@@ -527,20 +433,11 @@ def streaming_heavy_hitters_live(spark, sf_dir):
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "props")
     with tempfile.TemporaryDirectory(prefix="events_cms_") as stage_dir:
-        # both micro-batch files staged in ONE pass over events (guide §6)
-        _stage_split_parquet(
-            ev,
-            F.when(F.col("event_id") % 2 == 0, "a").otherwise("b"),
-            {
-                "a": ("a_even.parquet", 1_000_000_000.0),
-                "b": ("b_odd.parquet", 1_000_000_100.0),
-            },
+        raw = stage_micro_batches(
+            ev.withColumn("parity", F.when(F.col("event_id") % 2 == 0, "even").otherwise("odd")),
+            "parity",
+            ["even", "odd"],
             stage_dir,
-        )
-        raw = (
-            spark.readStream.schema("event_id long, props string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage_dir)
         )
         sketch = run_stream_to_memory(stream_cms_cells(raw), output_mode="complete")
 
@@ -569,30 +466,22 @@ def streaming_heavy_hitters_live(spark, sf_dir):
     )
 
 
-# pipeline before curation2: pipeline's v6 oracle loads analytics, whose
-# sketch_qdigest_quantiles oracle streaming_percentiles_live borrows below,
-# and the import order fixes the registration order of the registry tail
+# imported only to fix the registration order of the registry tail: pipeline
+# (which registers analytics through its v6 oracle) and curation2 register
+# between the queries above and the two below
 from airflow_cms_inpatient_etl_spark.queries import pipeline as _pipeline  # noqa: E402,F401
 from airflow_cms_inpatient_etl_spark.queries import curation2 as _curation2  # noqa: E402,F401
 
-_REG["streaming_heavy_hitters_live"] = _dc.replace(
-    _REG["streaming_heavy_hitters_live"], oracle=_REG["heavy_hitters_cms"].oracle
-)
 
-
-@register(
-    "streaming_percentiles_live",
-    # the drained COMPLETE-mode census is CELL-EXACT equal to the batch
-    # dyadic tree (cell updates are associative integer adds), so the
-    # prune/CDF/quantile/verification tail — and the batch query's DuckDB
-    # bounds-oracle — apply verbatim; filled below from the registered query
-    oracle=None,
-)
+# the drained COMPLETE-mode census is CELL-EXACT equal to the batch dyadic tree
+# (cell updates are associative integer adds), so the prune/CDF/quantile/
+# verification tail — and the batch query's DuckDB bounds-oracle — apply verbatim
+@register("streaming_percentiles_live", oracle=QDIGEST_QUANTILES_ORACLE)
 def streaming_percentiles_live(spark, sf_dir):
     """LIVE streaming percentiles — `sketch_qdigest_quantiles` as a running
     stream (the round-13 verdict's stretch #8): lineitem prices arrive as a
     file-source stream in TWO forced micro-batches (l_orderkey-parity split,
-    mtime-ordered, maxFilesPerTrigger=1), and `stream_qdigest_leaves`
+    ``stage_micro_batches``), and `stream_qdigest_leaves`
     maintains the LEAF histogram (cents -> count) as streaming aggregation
     STATE — the minimal state that determines the whole sketch; the drain
     derives the (level, node) census with the batch ancestor explode
@@ -620,21 +509,11 @@ def streaming_percentiles_live(spark, sf_dir):
 
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice")
     with tempfile.TemporaryDirectory(prefix="lineitem_qd_") as stage_dir:
-        # both micro-batch files staged in ONE pass over lineitem (guide §6:
-        # one scan+write instead of two — the round-15 deferred item)
-        _stage_split_parquet(
-            li,
-            F.when(F.col("l_orderkey") % 2 == 0, "a").otherwise("b"),
-            {
-                "a": ("a_even.parquet", 1_000_000_000.0),
-                "b": ("b_odd.parquet", 1_000_000_100.0),
-            },
+        raw = stage_micro_batches(
+            li.withColumn("parity", F.when(F.col("l_orderkey") % 2 == 0, "even").otherwise("odd")),
+            "parity",
+            ["even", "odd"],
             stage_dir,
-        )
-        raw = (
-            spark.readStream.schema("l_orderkey long, l_extendedprice double")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage_dir)
         )
         cents_stream = raw.select(
             F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents")
@@ -656,11 +535,6 @@ def streaming_percentiles_live(spark, sf_dir):
         "l_orderkey",
     ).select("cents")
     return _qdigest_flags_from_tree(spark, tree, vals)
-
-
-_REG["streaming_percentiles_live"] = _dc.replace(
-    _REG["streaming_percentiles_live"], oracle=_REG["sketch_qdigest_quantiles"].oracle
-)
 
 
 @register(

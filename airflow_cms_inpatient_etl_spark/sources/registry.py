@@ -35,42 +35,49 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one testdata table (columnar parquet scan; Catalyst prunes/pushes).
 
-    ``events.ts`` is stored as parquet TIMESTAMP(NANOS), which Spark rejects by
-    default (PARQUET_TYPE_ILLEGAL).  We read it as raw nanos via the legacy
-    conf and convert to a microsecond timestamp — lossless for this data (the
-    generator emits whole microseconds) and identical to what DuckDB sees.
-    The conf is set at scan time so the fix works under any caller's session,
-    and deliberately never restored: lazy plans capture SQL confs at execution
-    time, so a save/restore around the read would break any not-yet-
-    materialized events scan.  The tuned factory (session.get_spark) sets the
-    same conf up front and documents it as a session-wide invariant; a session
-    that needs true-nanos parquet semantics elsewhere must unset it.
+    ``events.ts`` arrives in one of two encodings (``normalize_events_ts``);
+    the ns one needs the legacy ``nanosAsLong`` conf, which Spark otherwise
+    rejects (PARQUET_TYPE_ILLEGAL).  The conf is set at scan time so the fix
+    works under any caller's session, and deliberately never restored: lazy
+    plans capture SQL confs at execution time, so a save/restore around the
+    read would break any not-yet-materialized events scan.  The tuned factory
+    (session.get_spark) sets the same conf up front and documents it as a
+    session-wide invariant; a session that needs true-nanos parquet semantics
+    elsewhere must unset it.
     """
     if name not in TESTDATA_TABLES:
         raise KeyError(f"unknown testdata table {name!r}; expected one of {TESTDATA_TABLES}")
     path = f"{sf_dir}/{name}.parquet"
     if name == "events":
-        from pyspark.sql import functions as F
-
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        if dict(df.dtypes).get("ts") == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-        return _normalize_ntz(df)
+        return normalize_events_ts(spark.read.parquet(path))
     return _normalize_ntz(spark.read.parquet(path))
+
+
+def normalize_events_ts(df: DataFrame) -> DataFrame:
+    """The events-timestamp rule, shared by batch reads (``load_table``) and
+    streams (``streaming.jobs.stream_events``): ``ts`` becomes a µs TIMESTAMP.
+
+    The testdata (TESTDATA.md) stores ``ts`` as TIMESTAMP(MICROS) without a zone
+    (read as TIMESTAMP_NTZ); the perfbench generator stores TIMESTAMP(NANOS),
+    read as raw-nanos bigint under ``nanosAsLong`` and converted here —
+    lossless, since both emit whole microseconds, and identical to what
+    DuckDB sees."""
+    from pyspark.sql import functions as F
+
+    if dict(df.dtypes).get("ts") == "bigint":
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
+    return _normalize_ntz(df)
 
 
 def _normalize_ntz(df: DataFrame) -> DataFrame:
     """Cast any TIMESTAMP_NTZ column to session-tz TIMESTAMP.
 
-    The fixture generator has shipped ``events.ts`` as TIMESTAMP(NANOS)
-    (bigint under ``nanosAsLong``), tz-aware TIMESTAMP(MICROS), and naive
-    TIMESTAMP(MICROS) (inferred as TIMESTAMP_NTZ) across rounds.  The engine
-    standardizes on TIMESTAMP_LTZ with the session timezone pinned to UTC
-    (session.py), under which this cast is wall-clock-preserving and matches
-    DuckDB's naive-timestamp arithmetic — and functions like ``unix_micros``
-    that require LTZ keep working regardless of which variant the generator
-    produced."""
+    The engine standardizes on TIMESTAMP_LTZ with the session timezone pinned
+    to UTC (session.py), under which this cast is wall-clock-preserving and
+    matches DuckDB's naive-timestamp arithmetic — and functions like
+    ``unix_micros`` that require LTZ keep working whichever encoding a table
+    was written with."""
     from pyspark.sql import functions as F
 
     for cname, dtype in df.dtypes:

@@ -14,48 +14,71 @@ store would back this on a real cluster.
 
 from __future__ import annotations
 
+import glob
+import os
+import shutil
 import uuid
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from airflow_cms_inpatient_etl_spark.session import scoped_conf
-
-EVENTS_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.LongType()),  # raw nanos (nanosAsLong read path)
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),
-    ]
-)
+from airflow_cms_inpatient_etl_spark.sources.registry import normalize_events_ts
 
 
 def stream_events(spark: SparkSession, path: str) -> DataFrame:
-    """File-source stream over events parquet, normalized to a µs TIMESTAMP.
+    """File-source stream over the events parquet files under ``path``, with
+    ``ts`` normalized by the batch read's rule
+    (``sources.registry.normalize_events_ts``).
 
-    The fixture generator has shipped ``ts`` as TIMESTAMP(NANOS) (bigint under
-    the ``nanosAsLong`` conf), naive TIMESTAMP(MICROS) (TIMESTAMP_NTZ), and
-    tz-aware micros.  The file source needs a declared schema, so probe the
-    already-staged footer with a batch read and adapt; every variant lands as
-    session-tz TIMESTAMP (UTC — wall-clock-preserving for naive inputs)."""
+    The file source needs a declared schema, so one batch read probes the
+    footer of the already-staged files (one Spark job) and the stream
+    declares what it found, in either ``ts`` encoding."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    ts_type = dict(spark.read.parquet(path).dtypes).get("ts", "bigint")
-    if ts_type == "bigint":
-        raw = spark.readStream.schema(EVENTS_SCHEMA).parquet(path)
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    fields = [
-        T.StructField(f.name, T.TimestampNTZType() if f.name == "ts" else f.dataType)
-        for f in EVENTS_SCHEMA.fields
-    ] if ts_type == "timestamp_ntz" else [
-        T.StructField(f.name, T.TimestampType() if f.name == "ts" else f.dataType)
-        for f in EVENTS_SCHEMA.fields
-    ]
-    raw = spark.readStream.schema(T.StructType(fields)).parquet(path)
-    return raw.withColumn("ts", F.col("ts").cast("timestamp"))
+    schema = spark.read.parquet(path).schema
+    return normalize_events_ts(spark.readStream.schema(schema).parquet(path))
+
+
+def stage_micro_batches(
+    df: DataFrame, batch: str, order: Sequence, stage_dir: str
+) -> DataFrame:
+    """Stage ``df`` as a file-source feed, one micro-batch per value of its
+    ``batch`` column, and return the stream that reads it back in ``order``.
+
+    One Spark job writes every batch: ``batch`` is the partition column of a
+    single ``coalesce(1)`` write, so each value's rows land in one parquet
+    file and the column is in neither the files nor the stream's schema.
+    Each file moves into ``stage_dir`` with an mtime that follows ``order``
+    (the file source reads oldest first), and the stream reads one file per
+    trigger under ``df``'s own schema, so no schema-inference job runs.  A
+    value with no rows stages no file, and so no micro-batch; a row whose
+    value is not in ``order`` fails the staging.  Values are named by their
+    text, as in a partition directory (``batch=a``)."""
+    spark = df.sparkSession
+    tmp = os.path.join(stage_dir, "_batches")
+    # dynamic-partition writes sort by the partition column first unless the
+    # writer may keep one open file per partition; with a few batches the
+    # concurrent writers are free and the sort is a pure extra pass (measured:
+    # it cost back the saved scan on the 600k-row lineitem split)
+    with scoped_conf(spark, {"spark.sql.maxConcurrentOutputFileWriters": str(len(order) + 1)}):
+        df.coalesce(1).write.partitionBy(batch).parquet(tmp)
+    for i, value in enumerate(order):
+        files = glob.glob(os.path.join(tmp, f"{batch}={value}", "*.parquet"))
+        if files:
+            (part,) = files  # one task writes one file per value
+            dest = os.path.join(stage_dir, f"batch-{i:05d}.parquet")
+            os.rename(part, dest)
+            os.utime(dest, (1_000_000_000 + i, 1_000_000_000 + i))
+    unstaged = glob.glob(os.path.join(tmp, "*", "*.parquet"))
+    if unstaged:
+        raise ValueError(f"rows whose {batch!r} is not in order {list(order)}: {unstaged}")
+    shutil.rmtree(tmp)
+    return (
+        spark.readStream.schema(df.drop(batch).schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(stage_dir)
+    )
 
 
 def tumbling_counts(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:

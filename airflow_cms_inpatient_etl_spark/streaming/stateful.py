@@ -11,6 +11,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
+from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 OUTPUT_SCHEMA = "user_id bigint, n_events bigint, sum_value double"
@@ -118,51 +119,43 @@ def sessionize_with_timeout(events: DataFrame, gap: str = "30 minutes") -> DataF
 # transformWithState — the Spark-4 arbitrary-state API (SPARK-46815)           #
 # --------------------------------------------------------------------------- #
 
-try:  # the new API (4.0+); import-gated so older deployments still load this module
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 
-    class RunningProfileProcessor(StatefulProcessor):
-        """transformWithStateInPandas twin of `running_user_profile`: one
-        ValueState tuple per user (count + running sum), updated per Arrow
-        batch, emitted per micro-batch.  The new API is the forward path for
-        custom state: typed state handles (value/list/map), timers, TTL, and
-        it REQUIRES the RocksDB state-store provider — i.e. the spillable
-        backend by construction.  Runtime deps: the state-server protocol
-        speaks protobuf, so the Python `protobuf` package must be installed
-        on driver and executors (the test gates on it)."""
+class RunningProfileProcessor(StatefulProcessor):
+    """transformWithStateInPandas twin of `running_user_profile`: one
+    ValueState tuple per user (count + running sum), updated per Arrow
+    batch, emitted per micro-batch.  The new API is the forward path for
+    custom state: typed state handles (value/list/map), timers, TTL, and
+    it REQUIRES the RocksDB state-store provider — i.e. the spillable
+    backend by construction.  Runtime deps: the state-server protocol
+    speaks protobuf, so the Python `protobuf` package must be installed
+    wherever the session and its Python workers run (the test gates on
+    it)."""
 
-        def init(self, handle: "StatefulProcessorHandle") -> None:
-            self._state = handle.getValueState("profile", "n bigint, total double")
+    def init(self, handle: "StatefulProcessorHandle") -> None:
+        self._state = handle.getValueState("profile", "n bigint, total double")
 
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
+    def handleInputRows(self, key, rows, timerValues):
+        import pandas as pd
 
-            n, total = self._state.get() if self._state.exists() else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._state.update((n, total))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "sum_value": [total]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    def running_user_profile_tws(events: DataFrame) -> DataFrame:
-        """`running_user_profile` on the transformWithState API (requires
-        spark.sql.streaming.stateStore.providerClass = RocksDB)."""
-        return events.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=RunningProfileProcessor(),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
+        n, total = self._state.get() if self._state.exists() else (0, 0.0)
+        for pdf in rows:
+            n += len(pdf)
+            total += float(pdf["value"].sum())
+        self._state.update((n, total))
+        yield pd.DataFrame(
+            {"user_id": [key[0]], "n_events": [n], "sum_value": [total]}
         )
 
-except ImportError:  # pragma: no cover - pyspark < 4.0
-    RunningProfileProcessor = None  # type: ignore[assignment]
+    def close(self) -> None:
+        pass
 
-    def running_user_profile_tws(events: DataFrame) -> DataFrame:  # type: ignore[misc]
-        raise NotImplementedError(
-            "transformWithStateInPandas requires pyspark >= 4.0"
-        )
+
+def running_user_profile_tws(events: DataFrame) -> DataFrame:
+    """`running_user_profile` on the transformWithState API (requires
+    spark.sql.streaming.stateStore.providerClass = RocksDB)."""
+    return events.groupBy("user_id").transformWithStateInPandas(
+        statefulProcessor=RunningProfileProcessor(),
+        outputStructType=OUTPUT_SCHEMA,
+        outputMode="Update",
+        timeMode="None",
+    )

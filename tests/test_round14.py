@@ -158,31 +158,17 @@ def test_revisit_policy_internal_consistency(spark):
 # change the final grid)                                                       #
 # --------------------------------------------------------------------------- #
 def test_stream_qdigest_census_equals_batch_tree(spark, tmp_path):
-    import os
-
     from airflow_cms_inpatient_etl_spark.operators.sketch import dyadic_tree
-    from airflow_cms_inpatient_etl_spark.queries.streaming_live import (
-        _stage_single_parquet,
-    )
     from airflow_cms_inpatient_etl_spark.sources.registry import load_table
     from airflow_cms_inpatient_etl_spark.streaming.jobs import (
         run_stream_to_memory,
+        stage_micro_batches,
         stream_qdigest_leaves,
     )
 
     li = load_table(spark, SF_SMOKE, "lineitem").select("l_orderkey", "l_extendedprice")
-    stage = str(tmp_path / "stage")
-    os.makedirs(stage)
-    _stage_single_parquet(
-        li.filter(F.col("l_orderkey") % 2 == 0), stage, "a.parquet", 1_000_000_000.0
-    )
-    _stage_single_parquet(
-        li.filter(F.col("l_orderkey") % 2 == 1), stage, "b.parquet", 1_000_000_100.0
-    )
-    raw = (
-        spark.readStream.schema("l_orderkey long, l_extendedprice double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    raw = stage_micro_batches(
+        li.withColumn("parity", F.col("l_orderkey") % 2), "parity", [0, 1], str(tmp_path / "stage")
     )
     cents = raw.select(F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"))
     drained = run_stream_to_memory(stream_qdigest_leaves(cents, "cents", 24), "complete")

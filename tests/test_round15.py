@@ -253,41 +253,31 @@ def test_streaming_asof_multi_batch_equals_batch(spark, tmp_path):
     the join state carries early clicks across the batch boundary and the
     watermark never sees out-of-order files).  The drained-and-reduced
     result must equal the batch as-of-with-tolerance."""
-    import shutil
-
-    from airflow_cms_inpatient_etl_spark.queries.streaming_live import (
-        _stage_single_parquet,
-    )
     from airflow_cms_inpatient_etl_spark.sources.registry import load_table
     from airflow_cms_inpatient_etl_spark.streaming.jobs import (
         run_stream_to_memory,
+        stage_micro_batches,
         stream_asof_candidates,
-        stream_events,
     )
 
     e = load_table(spark, SF_SMOKE, "events")
     lo, hi = e.agg(F.min("ts"), F.max("ts")).first()
     cut = lo + (hi - lo) * 3 // 5
-    stage = str(tmp_path / "stage")
-    import os
-
-    os.makedirs(stage)
-    _stage_single_parquet(e.filter(F.col("ts") <= F.lit(cut)), stage, "a.parquet", 1_000)
-    _stage_single_parquet(e.filter(F.col("ts") > F.lit(cut)), stage, "b.parquet", 2_000)
-    try:
-        drained = run_stream_to_memory(
-            stream_asof_candidates(stream_events(spark, stage), stream_events(spark, stage)),
-            output_mode="append",
-        )
-        streamed = {
-            (r["event_id"], r["user_id"], r["ts"], r["last_click_ts"])
-            for r in drained
-            .groupBy("event_id", "user_id", "ts")
-            .agg(F.max("click_ts").alias("last_click_ts"))
-            .collect()
-        }
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+    stream = stage_micro_batches(
+        e.withColumn("late", F.col("ts") > F.lit(cut)),
+        "late", ["false", "true"], str(tmp_path / "stage"),
+    )
+    drained = run_stream_to_memory(
+        stream_asof_candidates(stream, stream),
+        output_mode="append",
+    )
+    streamed = {
+        (r["event_id"], r["user_id"], r["ts"], r["last_click_ts"])
+        for r in drained
+        .groupBy("event_id", "user_id", "ts")
+        .agg(F.max("click_ts").alias("last_click_ts"))
+        .collect()
+    }
     p = e.filter(F.col("event_type") == "purchase").select("event_id", "user_id", "ts")
     c = e.filter(F.col("event_type") == "click").select(
         F.col("user_id").alias("cu"), F.col("ts").alias("cts")

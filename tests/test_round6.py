@@ -958,37 +958,21 @@ def test_streaming_session_window_eviction_append_mode(spark, tmp_path):
     end precedes the final watermark."""
     import pyspark.sql.functions as F
 
-    from airflow_cms_inpatient_etl_spark.streaming.jobs import run_stream_to_memory
+    from airflow_cms_inpatient_etl_spark.streaming.jobs import (
+        run_stream_to_memory,
+        stage_micro_batches,
+    )
 
     # batch 1: two events at t0 (one session); batch 2: events 10 hours later
     # (watermark jumps past session 1's end -> session 1 must emit)
-    d = str(tmp_path / "sess_stream")
-    import os
-
-    os.makedirs(d)
-    rows1 = [(1, "2024-01-01 00:00:00", 1.0), (1, "2024-01-01 00:10:00", 2.0)]
-    rows2 = [(1, "2024-01-01 10:00:00", 3.0)]
-    spark.createDataFrame(rows1, "user_id long, ts_s string, value double").coalesce(
-        1
-    ).write.parquet(d + "/b1")
-    spark.createDataFrame(rows2, "user_id long, ts_s string, value double").coalesce(
-        1
-    ).write.parquet(d + "/b2")
-    import glob as g
-    import shutil as sh
-
-    os.makedirs(d + "/in")
-    f1 = g.glob(d + "/b1/part-*.parquet")[0]
-    f2 = g.glob(d + "/b2/part-*.parquet")[0]
-    sh.copy(f1, d + "/in/a.parquet")
-    os.utime(d + "/in/a.parquet", (1_000_000_000, 1_000_000_000))
-    sh.copy(f2, d + "/in/b.parquet")
-    os.utime(d + "/in/b.parquet", (1_000_000_100, 1_000_000_100))
-
-    raw = (
-        spark.readStream.schema("user_id long, ts_s string, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d + "/in")
+    rows = [
+        (1, 1, "2024-01-01 00:00:00", 1.0),
+        (1, 1, "2024-01-01 00:10:00", 2.0),
+        (2, 1, "2024-01-01 10:00:00", 3.0),
+    ]
+    raw = stage_micro_batches(
+        spark.createDataFrame(rows, "b int, user_id long, ts_s string, value double"),
+        "b", [1, 2], str(tmp_path / "sess_stream"),
     )
     agg = (
         raw.withColumn("ts", F.to_timestamp("ts_s"))

@@ -15,6 +15,7 @@ from airflow_cms_inpatient_etl_spark.sources.registry import load_table
 from airflow_cms_inpatient_etl_spark.streaming.jobs import (
     dedup_within_watermark,
     run_stream_to_memory,
+    stage_micro_batches,
     stream_events,
     tumbling_counts,
 )
@@ -192,23 +193,15 @@ def test_kill_mid_batch_recovery_no_loss_no_dup(spark, tmp_path):
     1 with the SAME batch id over the SAME files, so the idempotent
     overwrite-by-epoch sink repairs the torn write — final output equals the
     input exactly: no loss, no duplicates."""
-    import os
-
-    src = tmp_path / "src"
-    src.mkdir()
     ckpt = str(tmp_path / "ckpt")
     out = str(tmp_path / "out")
 
     # three disjoint, covering slices -> three single-file micro-batches
     ids = load_table(spark, SF_SMOKE, "events").select("event_id")
-    for i in range(3):
-        staging = str(tmp_path / f"staging{i}")
-        ids.filter(F.pmod("event_id", F.lit(3)) == i).coalesce(1).write.parquet(staging)
-        part = next(p for p in os.listdir(staging) if p.endswith(".parquet"))
-        dest = src / f"slice{i}.parquet"
-        os.rename(os.path.join(staging, part), dest)
-        os.utime(dest, (1_700_000_000 + i, 1_700_000_000 + i))  # stable mtime order
-
+    stream = stage_micro_batches(
+        ids.withColumn("slice", F.pmod("event_id", F.lit(3))),
+        "slice", [0, 1, 2], str(tmp_path / "src"),
+    )
     attempts = []
 
     def make_sink(crash_on_epoch):
@@ -223,10 +216,7 @@ def test_kill_mid_batch_recovery_no_loss_no_dup(spark, tmp_path):
 
     def run(sink):
         q = (
-            spark.readStream.schema("event_id long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src))
-            .writeStream.outputMode("append")
+            stream.writeStream.outputMode("append")
             .option("checkpointLocation", ckpt)
             .foreachBatch(sink)
             .start()
@@ -300,31 +290,17 @@ def test_stream_upsert_to_parquet_matches_batch_merge(spark, tmp_path):
     into a parquet table via foreachBatch + type-1 upsert must land the same
     final state as merging the batches offline — including within-batch
     compaction (two updates for one key in one batch keep the later seq)."""
-    import os
-
     from airflow_cms_inpatient_etl_spark.streaming.jobs import stream_upsert_to_parquet
 
-    src = tmp_path / "src"
-    src.mkdir()
     target = str(tmp_path / "target")
     ckpt = str(tmp_path / "ckpt")
 
     b1 = [(1, "a1", 1), (2, "b1", 2), (3, "c1", 3), (4, "d1", 4)]
     b2 = [(3, "c2", 10), (4, "d2", 11), (5, "e1", 12), (5, "e2", 13), (6, "f1", 14)]
-    for i, rows in enumerate([b1, b2]):
-        staging = str(tmp_path / f"staging{i}")
-        spark.createDataFrame(rows, "key long, val string, seq long").coalesce(1).write.parquet(
-            staging
-        )
-        part = next(p for p in os.listdir(staging) if p.endswith(".parquet"))
-        dest = src / f"batch{i}.parquet"
-        os.rename(os.path.join(staging, part), dest)
-        os.utime(dest, (1_700_000_000 + i, 1_700_000_000 + i))
-
-    updates = (
-        spark.readStream.schema("key long, val string, seq long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
+    rows = [(i, *r) for i, b in enumerate([b1, b2]) for r in b]
+    updates = stage_micro_batches(
+        spark.createDataFrame(rows, "b int, key long, val string, seq long"),
+        "b", [0, 1], str(tmp_path / "src"),
     )
     q = stream_upsert_to_parquet(updates, target, ckpt, ["key"], "seq")
     try:
@@ -348,14 +324,10 @@ def test_stateful_sessionize_with_timeout(spark, tmp_path):
     """EventTimeTimeout sessionization: sessions close (and emit exactly once)
     when the watermark passes last-event + gap; open sessions emit nothing;
     timed-out state is removed (bounded memory)."""
-    import os
-
     from pyspark.sql import functions as SF
 
     from airflow_cms_inpatient_etl_spark.streaming.stateful import sessionize_with_timeout
 
-    src = tmp_path / "src"
-    src.mkdir()
     t0 = 1_700_000_000_000_000  # µs
     minute = 60_000_000
     batches = [
@@ -366,19 +338,12 @@ def test_stateful_sessionize_with_timeout(spark, tmp_path):
         # any further batch triggers the timed-out emissions
         [(3, t0 + 240 * minute)],
     ]
-    for i, rows in enumerate(batches):
-        staging = str(tmp_path / f"staging{i}")
-        spark.createDataFrame(rows, "user_id long, ts long").coalesce(1).write.parquet(staging)
-        part = next(p for p in os.listdir(staging) if p.endswith(".parquet"))
-        dest = src / f"b{i}.parquet"
-        os.rename(os.path.join(staging, part), dest)
-        os.utime(dest, (1_700_000_000 + i, 1_700_000_000 + i))
-
-    stream = (
-        spark.readStream.schema("user_id long, ts long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-        .withColumn("ts", SF.timestamp_micros("ts"))
+    rows = [(i, *r) for i, b in enumerate(batches) for r in b]
+    stream = stage_micro_batches(
+        spark.createDataFrame(rows, "b int, user_id long, ts long").withColumn(
+            "ts", SF.timestamp_micros("ts")
+        ),
+        "b", [0, 1, 2], str(tmp_path / "src"),
     )
     drained = run_stream_to_memory(
         sessionize_with_timeout(stream, gap="30 minutes"), output_mode="append"
@@ -405,15 +370,11 @@ def test_stream_upsert_corrupt_target_fails_batch(spark, tmp_path):
     (corrupt file, FS hiccup) must fail the batch for checkpoint replay — the
     old catch-all silently replaced the accumulated table with just the
     current micro-batch.  Only a genuinely-absent target is 'first batch'."""
-    import os
-
     from py4j.protocol import Py4JJavaError
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
     from airflow_cms_inpatient_etl_spark.streaming.jobs import stream_upsert_to_parquet
 
-    src = tmp_path / "src"
-    src.mkdir()
     target = tmp_path / "target"
     ckpt = str(tmp_path / "ckpt")
 
@@ -421,17 +382,9 @@ def test_stream_upsert_corrupt_target_fails_batch(spark, tmp_path):
     target.mkdir()
     (target / "part-00000.parquet").write_bytes(b"not a parquet file")
 
-    staging = str(tmp_path / "staging")
-    spark.createDataFrame(
-        [(1, "a1", 1)], "key long, val string, seq long"
-    ).coalesce(1).write.parquet(staging)
-    part = next(p for p in os.listdir(staging) if p.endswith(".parquet"))
-    os.rename(os.path.join(staging, part), src / "batch0.parquet")
-
-    updates = (
-        spark.readStream.schema("key long, val string, seq long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
+    updates = stage_micro_batches(
+        spark.createDataFrame([(0, 1, "a1", 1)], "b int, key long, val string, seq long"),
+        "b", [0], str(tmp_path / "src"),
     )
     q = stream_upsert_to_parquet(updates, str(target), ckpt, ["key"], "seq")
     try:
@@ -471,38 +424,23 @@ def test_dedup_state_evicts_past_watermark(spark, tmp_path):
     batch 2 advances the watermark an hour, so by batch 3 the store holds
     only the keys still inside the horizon."""
     import datetime as dt
-    import glob as _glob
-    import os as _os
-    import shutil as _sh
-
-    d = tmp_path / "evict"
-    d.mkdir()
-
-    def stage(rows, name, mtime):
-        df = spark.createDataFrame(
-            rows, "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-        )
-        tmp = str(tmp_path / f"_tmp_{name}")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = _glob.glob(tmp + "/part-*.parquet")[0]
-        dest = str(d / name)
-        _sh.move(part, dest)
-        _os.utime(dest, (mtime, mtime))
 
     t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
     H = dt.timedelta
-    stage([(i, t0, 1, "a", 0.0, "{}") for i in range(10)], "a.parquet", 1e9)
-    stage([(i, t0 + H(hours=1), 1, "a", 0.0, "{}") for i in range(10, 20)], "b.parquet", 1e9 + 100)
-    stage([(20, t0 + H(hours=2), 1, "a", 0.0, "{}")], "c.parquet", 1e9 + 200)
-
+    rows = (
+        [(0, i, t0, 1, "a", 0.0, "{}") for i in range(10)]
+        + [(1, i, t0 + H(hours=1), 1, "a", 0.0, "{}") for i in range(10, 20)]
+        + [(2, 20, t0 + H(hours=2), 1, "a", 0.0, "{}")]
+    )
+    raw = stage_micro_batches(
+        spark.createDataFrame(
+            rows,
+            "b int, event_id long, ts timestamp, user_id long, event_type string, "
+            "value double, props string",
+        ),
+        "b", [0, 1, 2], str(tmp_path / "evict"),
+    )
     with scoped_conf(spark, {"spark.sql.shuffle.partitions": "4"}):
-        raw = (
-            spark.readStream.schema(
-                "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(d))
-        )
         deduped = (
             raw.withWatermark("ts", "10 minutes")
             .dropDuplicatesWithinWatermark(["event_id"])
@@ -526,3 +464,68 @@ def test_dedup_state_evicts_past_watermark(spark, tmp_path):
     final_total = progresses[-1]["stateOperators"][0]["numRowsTotal"]
     assert removed >= 10, removed  # batch-1 keys left the store
     assert final_total <= 11, final_total  # only keys inside the horizon remain
+
+
+def test_stage_micro_batches_one_job_three_batches_in_order(spark, tmp_path):
+    """The staging helper writes every micro-batch in ONE Spark job, builds
+    its stream without any (the schema is declared, never inferred), and
+    the drain sees one micro-batch per value, in ``order`` — not in the
+    values' sort order.  The ``batch`` column is not in the stream.  Jobs
+    are counted by the range of ids the DAG scheduler hands out."""
+    order = ["z", "x", "y"]
+    rows = [(b, b, k) for b in ("x", "y", "z") for k in range(3)]
+    feed = spark.createDataFrame(rows, "b string, tag string, k long")
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    lo = scheduler.nextJobId()
+    stream = stage_micro_batches(feed, "b", order, str(tmp_path / "stage"))
+    assert scheduler.nextJobId() - lo == 1
+    lo = scheduler.nextJobId()
+    assert stream.isStreaming and stream.columns == ["tag", "k"]
+    assert scheduler.nextJobId() - lo == 0
+
+    seen = []
+
+    def sink(batch_df, batch_id):
+        seen.append((batch_id, sorted((r["tag"], r["k"]) for r in batch_df.collect())))
+
+    q = stream.writeStream.foreachBatch(sink).start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert seen == [(i, [(b, k) for k in range(3)]) for i, b in enumerate(order)]
+
+
+@pytest.mark.parametrize(
+    "name, stateful_ops",
+    [
+        (
+            "streaming_session_window_live",
+            ("SessionWindowStateStoreRestore", "MergingSessions", "SessionWindowStateStoreSave"),
+        ),
+        ("streaming_sliding_window_live", ("StateStoreRestore", "StateStoreSave")),
+        ("streaming_dedup_within_watermark_live", ("StreamingDeduplicateWithinWatermark",)),
+    ],
+)
+def test_live_query_plan_has_its_stateful_operator(spark, monkeypatch, name, stateful_ops):
+    """The streaming physical plan of each drain, captured as the drain
+    stops its query, carries the stateful operator the query is named for,
+    and none of the scale killers the registry-wide plan lint rejects
+    (which skips the live queries: they run micro-batches when built)."""
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    from airflow_cms_inpatient_etl_spark.queries import QUERY_REGISTRY
+
+    plans = []
+    stop = StreamingQuery.stop
+
+    def capture_then_stop(q):
+        plans.append(q._jsq.explainInternal(False))
+        stop(q)
+
+    monkeypatch.setattr(StreamingQuery, "stop", capture_then_stop)
+    QUERY_REGISTRY[name].fn(spark, SF_SMOKE).collect()
+    (plan,) = plans
+    for op in stateful_ops:
+        assert op in plan, (op, plan)
+    assert "CartesianProduct" not in plan and "BatchEvalPython" not in plan, plan
