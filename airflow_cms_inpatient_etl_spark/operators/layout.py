@@ -101,12 +101,11 @@ def compact_small_files(
     """
     import math
 
-    from py4j.java_gateway import java_import
+    from airflow_cms_inpatient_etl_spark.session import jvm_class
+    from airflow_cms_inpatient_etl_spark.sources.files import hadoop_fs
 
-    jvm = spark.sparkContext._jvm
-    java_import(jvm, "org.apache.hadoop.fs.Path")
-    hadoop_path = jvm.Path(path)
-    fs = hadoop_path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    Path = jvm_class(spark, "org.apache.hadoop.fs.Path")
+    fs, hadoop_path = hadoop_fs(spark, path)
     total_bytes = fs.getContentSummary(hadoop_path).getLength()
     n_files = max(1, math.ceil(total_bytes / target_file_bytes))
 
@@ -123,15 +122,15 @@ def compact_small_files(
     tmp = path.rstrip("/") + "__compact_tmp"
     old = path.rstrip("/") + "__compact_old"
     out.write.mode("overwrite").parquet(tmp)
-    if fs.exists(jvm.Path(old)):
-        fs.delete(jvm.Path(old), True)  # leftover from a previous crash
-    if not fs.rename(hadoop_path, jvm.Path(old)):
+    if fs.exists(Path(old)):
+        fs.delete(Path(old), True)  # leftover from a previous crash
+    if not fs.rename(hadoop_path, Path(old)):
         raise IOError(f"compaction aside-rename failed: {path} -> {old}")
-    if not fs.rename(jvm.Path(tmp), hadoop_path):
+    if not fs.rename(Path(tmp), hadoop_path):
         # roll back so the table stays live at its original path
-        fs.rename(jvm.Path(old), hadoop_path)
+        fs.rename(Path(old), hadoop_path)
         raise IOError(f"compaction rename failed: {tmp} -> {path}")
-    fs.delete(jvm.Path(old), True)
+    fs.delete(Path(old), True)
     return n_files
 
 

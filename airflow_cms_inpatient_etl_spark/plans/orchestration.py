@@ -108,20 +108,21 @@ def patient_claims_pipeline(spark, claims_csv: str, beneficiary_csv: str, out_pa
     * ``join_and_publish`` attaches the metrics the checks need
       (``dq.observe_dq``): row counts of claims, beneficiary and the joined
       table, and the beneficiary key's null and distinct counts.  It then
-      writes the joined table ONCE, to ``<out_path>.next`` without the
-      ``_SUCCESS`` marker.  That write is the run's only scan and carries
+      writes the joined table ONCE, to the staged dir ``<out_path>.next``
+      (no ``_SUCCESS`` marker).  That write is the run's only scan and carries
       every metric: two Spark jobs, the beneficiary broadcast and the write.
       An observation keeps only the first action's result, so every attempt
       of the task attaches fresh ones: a retried publish is never judged
       by a failed attempt's metrics.
     * ``dq_claims`` and ``dq_beneficiary`` (after ``join_and_publish``) and
       ``dq_final`` (after both) check the observed metrics; ``dq_final`` then
-      marks the staged table ready and swaps it in (``files.commit_staged``).
+      approves the staged table by renaming it to ``<out_path>.ready`` and
+      swaps it in (``files.commit_staged``).
 
     A failing check drops the staged table, so the published table stays as
-    it was.  A crash before the swap leaves an unmarked staged dir that is
-    never promoted; a crash between the swap's delete and rename leaves a
-    marked one that the next run promotes before it stages."""
+    it was.  A crash before the approval leaves a ``.next`` dir that is
+    never promoted; a crash after it leaves a ``.ready`` dir, beside the old
+    table or in its place, that the next run promotes before it stages."""
     from airflow_cms_inpatient_etl_spark.plans import dq
     from airflow_cms_inpatient_etl_spark.plans.patient_claims import build_patient_claims_plus
     from airflow_cms_inpatient_etl_spark.schemas import (

@@ -151,25 +151,25 @@ def streaming_late_data_live(spark, sf_dir):
     """,
 )
 def streaming_stream_stream_join_live(spark, sf_dir):
-    """LIVE stream-stream inner join (two independent file-source streams over
-    the events fixture): views attributed to same-user clicks within 6
-    hours, watermarked on both sides so join state is evictable — the
-    feature that makes stream-stream joins viable at 100 TB (unbounded state
-    otherwise).  HASH-ORACLED (new in round 7): a streaming INNER join emits
-    each match eagerly in the micro-batch where both rows are present (the
-    watermark only bounds state, it never gates inner-join emission), so a
-    single-batch drain deterministically produces the complete interval
-    join — which is plain SQL.  Batch-equivalence under multi-batch
-    arrival stays covered in tests/test_streaming.py."""
+    """LIVE stream-stream inner join (one file-source stream over the events
+    fixture feeds both sides: one footer probe and one source to list, though
+    each side still scans the micro-batch): views attributed to same-user
+    clicks within 6 hours, watermarked on both sides so join state is
+    evictable — the feature that makes stream-stream joins viable at 100 TB
+    (unbounded state otherwise).  HASH-ORACLED (new in round 7): a streaming
+    INNER join emits each match eagerly in the micro-batch where both rows
+    are present (the watermark only bounds state, it never gates inner-join
+    emission), so a single-batch drain deterministically produces the
+    complete interval join — which is plain SQL.  Batch-equivalence under
+    multi-batch arrival stays covered in tests/test_streaming.py."""
     from airflow_cms_inpatient_etl_spark.streaming.jobs import (
         stream_stream_click_view_join,
     )
 
     with tempfile.TemporaryDirectory(prefix="events_ssj_") as stage_dir:
         shutil.copy(f"{sf_dir}/events.parquet", f"{stage_dir}/part-0.parquet")
-        joined = stream_stream_click_view_join(
-            stream_events(spark, stage_dir), stream_events(spark, stage_dir)
-        )
+        events = stream_events(spark, stage_dir)  # one source feeds both sides
+        joined = stream_stream_click_view_join(events, events)
         return run_stream_to_memory(joined, output_mode="append")
 
 
@@ -554,7 +554,7 @@ def streaming_asof_live(spark, sf_dir):
     """LIVE streaming AS-OF join — the one streaming twin §2.B's batch
     family was missing (`events_asof_last_click` had no live form): for
     each purchase, the most recent same-user click at-or-before it, within
-    a declared 6-hour tolerance.  Two independent file-source streams feed
+    a declared 6-hour tolerance.  One file-source stream feeds both sides of
     a watermarked stream-stream inner join whose time condition is bounded
     in BOTH directions (evictable join state — the tolerance is exactly
     what makes a streaming as-of well-posed; unbounded lookback would pin
@@ -571,9 +571,8 @@ def streaming_asof_live(spark, sf_dir):
 
     with tempfile.TemporaryDirectory(prefix="events_asof_") as stage_dir:
         shutil.copy(f"{sf_dir}/events.parquet", f"{stage_dir}/part-0.parquet")
-        cand = stream_asof_candidates(
-            stream_events(spark, stage_dir), stream_events(spark, stage_dir)
-        )
+        events = stream_events(spark, stage_dir)  # one source feeds both sides
+        cand = stream_asof_candidates(events, events)
         drained = run_stream_to_memory(cand, output_mode="append")
     return drained.groupBy("event_id", "user_id", "ts").agg(
         F.max("click_ts").alias("last_click_ts")

@@ -16,8 +16,10 @@ here are what we would ship to a real cluster, modulo local-mode sizing:
 from __future__ import annotations
 
 import os
+import weakref
 from contextlib import contextmanager
 
+from py4j.java_gateway import JavaClass
 from pyspark.sql import SparkSession
 
 DEFAULT_APP_NAME = "airflow-cms-inpatient-etl-spark"
@@ -40,6 +42,24 @@ def scoped_conf(spark: SparkSession, conf: dict[str, str]):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, old)
+
+
+_JVM_CLASSES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def jvm_class(spark: SparkSession, name: str) -> JavaClass:
+    """The JVM class ``name`` (fully qualified), resolved once per py4j
+    gateway.  A dotted walk such as ``_jvm.org.apache.hadoop.fs.Path`` costs
+    one round trip per name part, most of them failed class lookups over the
+    whole classpath (about 1 ms); the held handle costs none."""
+    gateway = spark.sparkContext._gateway
+    classes = _JVM_CLASSES.setdefault(gateway, {})
+    if name not in classes:
+        cls = getattr(spark.sparkContext._jvm, name)  # one lookup of the full name
+        if not isinstance(cls, JavaClass):
+            raise TypeError(f"{name} is not a class on the JVM's classpath")
+        classes[name] = cls
+    return classes[name]
 
 
 def default_parallelism() -> int:

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from airflow_cms_inpatient_etl_spark.session import scoped_conf
+from airflow_cms_inpatient_etl_spark.session import jvm_class, scoped_conf
 
 
 class MissingColumnsError(ValueError):
@@ -36,7 +36,7 @@ class MissingColumnsError(ValueError):
 
 def hadoop_fs(spark: SparkSession, path: str):
     """``(FileSystem, Path)`` for ``path`` under the session's Hadoop conf."""
-    jpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    jpath = jvm_class(spark, "org.apache.hadoop.fs.Path")(path)
     return jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), jpath
 
 
@@ -52,14 +52,13 @@ def read_csv_header(spark: SparkSession, path: str) -> list[str]:
     duplicate names get their index appended (Spark's
     ``CSVUtils.makeSafeHeader``).  Files are listed one directory level
     deep; no visible line gives no columns."""
-    jvm = spark.sparkContext._jvm
     fs, pattern = hadoop_fs(spark, path)
     files = []
     for st in fs.globStatus(pattern) or []:
         for f in fs.listStatus(st.getPath()) if st.isDirectory() else [st]:
             if f.isFile() and not f.getPath().getName().startswith(("_", ".")):
                 files.append(f)
-    codecs = jvm.org.apache.hadoop.io.compress.CompressionCodecFactory(
+    codecs = jvm_class(spark, "org.apache.hadoop.io.compress.CompressionCodecFactory")(
         spark.sparkContext._jsc.hadoopConfiguration()
     )
     for f in sorted(files, key=lambda f: -f.getLen()):
@@ -67,7 +66,9 @@ def read_csv_header(spark: SparkSession, path: str) -> list[str]:
         codec = codecs.getCodec(f.getPath())
         if codec is not None:
             stream = codec.createInputStream(stream)
-        reader = jvm.java.io.BufferedReader(jvm.java.io.InputStreamReader(stream, "UTF-8"))
+        reader = jvm_class(spark, "java.io.BufferedReader")(
+            jvm_class(spark, "java.io.InputStreamReader")(stream, "UTF-8")
+        )
         try:
             line = reader.readLine()
             while line is not None and not line.strip(_JAVA_TRIM):
@@ -93,12 +94,20 @@ def _safe_header(names: list[str], case_sensitive: bool) -> list[str]:
     ]
 
 
-def read_csv_strings(spark: SparkSession, path: str) -> DataFrame:
+def read_csv_strings(spark: SparkSession, path: str, names: list[str] | None = None) -> DataFrame:
     """``spark.read.csv(path, header=True)`` without its inference job: the
-    header is read on the driver and the scan declares it as an all-string
-    schema (Spark drops each file's header line, as with inference)."""
-    schema = T.StructType([T.StructField(c, T.StringType()) for c in read_csv_header(spark, path)])
-    return spark.read.schema(schema).csv(path, header=True)
+    header (``names`` when the caller has read it already) is read on the
+    driver and the scan declares it as an all-string schema (Spark drops each
+    file's header line, as with inference).
+
+    One reader chain: ``load`` takes the path as is, where ``csv`` converts
+    it to a JVM list first.  The schema goes over as a ``StructType`` (JSON);
+    a DDL string goes through the SQL parser, which is slower and leaves its
+    parser state on the JVM heap."""
+    if names is None:
+        names = read_csv_header(spark, path)
+    schema = T.StructType([T.StructField(c, T.StringType()) for c in names])
+    return spark.read.format("csv").schema(schema).option("header", True).load(path)
 
 
 def read_csv_projected(
@@ -112,16 +121,16 @@ def read_csv_projected(
     ``keep_cols`` are the (possibly uppercase) source header names; ``schema``
     declares the lowercase target names and types positionally aligned with
     ``keep_cols``.  The header check reads one file header on the driver —
-    O(1), no Spark job — not the data.
+    O(1), no Spark job — not the data, and runs before the scan is declared.
     """
-    raw = read_csv_strings(spark, path)
-    have = {c.lower() for c in raw.columns}
+    names = read_csv_header(spark, path)
+    have = {c.lower() for c in names}
     missing = [c for c in keep_cols if c.lower() not in have]
     if missing:
         raise MissingColumnsError(f"CSV {path} missing expected columns: {missing}")
     # one SQL-string projection: a py4j call per column instead of three
     # (col/cast/alias), tens of milliseconds of driver time per load
-    return raw.selectExpr(
+    return read_csv_strings(spark, path, names).selectExpr(
         *[
             f"CAST({quoted(src)} AS {field.dataType.simpleString()}) AS {quoted(field.name)}"
             for src, field in zip(keep_cols, schema.fields)
@@ -156,43 +165,46 @@ def write_table(df: DataFrame, path: str, mode: str = "overwrite", partition_by:
 
 
 # Staged commit: a table is written next to its path and swapped in by
-# delete + rename.  ``_SUCCESS`` in the staged dir means "checked and ready
-# to swap": the stage is written without the committer's marker, and only
-# ``commit_staged`` marks it, after the caller's checks.  So a crash before
-# the mark leaves a staged dir that is never promoted and is overwritten by
-# the next stage, and a crash between delete and rename leaves a marked one
-# that ``promote_staged`` finishes.
+# rename.  Approval is a rename too, so no marker file is written:
+#
+#   write_table_staged   df          -> <path>.next   (unchecked; the
+#                                                      committer's _SUCCESS off)
+#   commit_staged        <path>.next -> <path>.ready  (approved, after the
+#                                                      caller's checks)
+#                        delete <path>, <path>.ready -> <path>
+#
+# A crash before the approval leaves a ``.next`` that is never promoted and
+# is overwritten by the next stage.  A crash after it leaves a ``.ready``,
+# next to ``<path>`` or in its place, that ``promote_staged`` finishes; both
+# callers (the CMS DAG's publish and ``stream_upsert_to_parquet``) promote
+# before they stage, so a commit never finds a ``.ready`` in its way (a
+# rename onto an existing dir would move the stage inside it).
 STAGED_SUFFIX = ".next"
+READY_SUFFIX = ".ready"
 _UNMARKED = {"mapreduce.fileoutputcommitter.marksuccessfuljobs": "false"}
 
 
 def promote_staged(spark: SparkSession, path: str) -> None:
-    """Finish a swap interrupted between delete and rename: when ``path`` is
-    missing and its staged dir is marked ready, rename it into place."""
+    """Finish an interrupted swap: when ``path``'s approved dir exists,
+    replace ``path`` with it (``path`` may or may not still exist)."""
     fs, target = hadoop_fs(spark, path)
-    staged = target.suffix(STAGED_SUFFIX)
-    jpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
-    if not fs.exists(target) and fs.exists(jpath(staged, "_SUCCESS")):
-        _rename(fs, staged, target)
+    _swap_ready(fs, target)
 
 
 def write_table_staged(df: DataFrame, path: str) -> None:
-    """``write_table`` into ``path``'s staged dir, with the committer's
-    ``_SUCCESS`` off: the stage cannot be promoted until ``commit_staged``
-    marks it."""
+    """``write_table`` into ``path``'s staged dir, unchecked until
+    ``commit_staged`` approves it.  The committer's ``_SUCCESS`` stays off:
+    it approves nothing, and without Hadoop's native IO the local file
+    system forks a ``chmod`` for the marker and for its ``.crc``."""
     with scoped_conf(df.sparkSession, _UNMARKED):
         write_table(df, path + STAGED_SUFFIX)
 
 
 def commit_staged(spark: SparkSession, path: str) -> None:
-    """Mark the staged dir ready, then swap it in: delete ``path``, rename."""
+    """Approve the staged dir (rename it to ``.ready``), then swap it in."""
     fs, target = hadoop_fs(spark, path)
-    staged = target.suffix(STAGED_SUFFIX)
-    marker = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(staged, "_SUCCESS")
-    if not fs.exists(marker):
-        fs.create(marker).close()
-    fs.delete(target, True)
-    _rename(fs, staged, target)
+    _rename(fs, target.suffix(STAGED_SUFFIX), target.suffix(READY_SUFFIX))
+    _swap_ready(fs, target)
 
 
 def discard_staged(spark: SparkSession, path: str) -> None:
@@ -200,10 +212,20 @@ def discard_staged(spark: SparkSession, path: str) -> None:
     fs.delete(target.suffix(STAGED_SUFFIX), True)
 
 
+def _swap_ready(fs, target) -> None:
+    ready = target.suffix(READY_SUFFIX)
+    if fs.exists(ready):
+        fs.delete(target, True)
+        _rename(fs, ready, target)
+
+
 def _rename(fs, src, dst) -> None:
     """Hadoop ``rename`` reports failure by returning False; raise instead."""
     if not fs.rename(src, dst):
         raise OSError(f"could not rename {src} to {dst}")
+
+
+_DATA_SOURCE = "org.apache.spark.sql.execution.datasources.DataSource"
 
 
 def avro_available(spark: SparkSession) -> bool:
@@ -214,7 +236,7 @@ def avro_available(spark: SparkSession) -> bool:
         # the authoritative resolution Spark itself performs for format("avro");
         # a bare Class.forName probe false-positives because catalyst bundles
         # some avro helper classes without the DataSource provider
-        spark._jvm.org.apache.spark.sql.execution.datasources.DataSource.lookupDataSource(
+        jvm_class(spark, _DATA_SOURCE).lookupDataSource(
             "avro", spark._jsparkSession.sessionState().conf()
         )
         return True
@@ -252,7 +274,7 @@ def lakehouse_format_available(spark: SparkSession, fmt: str) -> bool:
     resolution Spark performs for ``format(fmt)`` (see ``avro_available``).
     """
     try:
-        spark._jvm.org.apache.spark.sql.execution.datasources.DataSource.lookupDataSource(
+        jvm_class(spark, _DATA_SOURCE).lookupDataSource(
             fmt, spark._jsparkSession.sessionState().conf()
         )
         return True

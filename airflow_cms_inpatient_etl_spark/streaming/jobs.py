@@ -241,15 +241,16 @@ def stream_upsert_to_parquet(
 
     Commit by stage and swap (``sources.files``' staged commit, shared with
     the CMS DAG's publish): the merge is written to ``<target_dir>.next``,
-    then the target is deleted and the staged dir renamed onto it, so the
-    merge is computed once, inside its write, and nothing is pinned.  A crash
-    while staging leaves the target intact (the replayed batch overwrites
-    the staged dir, which is never marked ready); a crash between delete
-    and rename leaves a staged dir marked ready (``_SUCCESS``, written by
-    ``commit_staged``), which the next batch promotes first.
-    A replayed batch re-merges the same updates, and last-write-wins merging
-    is idempotent, so the table converges to the same state (both crash
-    windows: ``test_stream_upsert_promotes_committed_staging`` and
+    renamed to ``<target_dir>.ready`` (approved), and swapped in by deleting
+    the target and renaming ``.ready`` onto it, so the merge is computed
+    once, inside its write, and nothing is pinned.  A crash while staging
+    leaves the target intact (the replayed batch overwrites the ``.next``
+    dir, which is never approved); a crash after the approval leaves a
+    ``.ready`` dir, beside the target or in its place, which the next batch
+    promotes first.  A replayed batch re-merges the same updates, and
+    last-write-wins merging is idempotent, so the table converges to the
+    same state (the crash windows: ``test_stream_upsert_promotes_committed_staging``,
+    ``test_stream_upsert_promotes_approved_staging_beside_target`` and
     ``test_stream_upsert_overwrites_uncommitted_staging`` in
     tests/test_session_hygiene.py).  The sink owns the table, so only the
     first read of a stream run infers its schema; later reads declare the

@@ -130,6 +130,41 @@ def test_warm_dag_runs_at_most_three_jobs_and_load_runs_none(spark, tmp_path):
     assert scheduler.nextJobId() - lo == 0
 
 
+# Gateway commands of a warm DAG run, garbage releases left out, when this
+# guard was set (PySpark 4.1.2, py4j's pinned-thread client)
+WARM_DAG_PY4J_COMMANDS = 247
+
+
+def test_warm_dag_sends_few_py4j_commands_and_walks_no_package(spark, tmp_path, monkeypatch):
+    """Every command to the JVM is a round trip, and a dotted class path such
+    as ``_jvm.org.apache.hadoop.fs.Path`` is one command per name part, all
+    but the last a failed class lookup over the whole classpath.  A warm DAG
+    run (313 commands before class handles were held, 80 of them such walks)
+    sends no ``reflect-unknown`` command for ``org``, ``java`` or ``scala``,
+    and at most 1.25x the commands it sent when this guard was set.
+    Commands that release JVM objects are not counted: Python's garbage
+    collector sends them, whenever it runs."""
+    import py4j.clientserver
+
+    out = str(tmp_path / "patient_claims_plus")
+    _pipeline(spark, tmp_path, out).run(sleep=lambda s: None)  # warm-up
+    p = _pipeline(spark, tmp_path, out)
+    sent = []
+    send = py4j.clientserver.ClientServerConnection.send_command
+
+    def counted(self, command):
+        sent.append(command)
+        return send(self, command)
+
+    with monkeypatch.context() as m:
+        m.setattr(py4j.clientserver.ClientServerConnection, "send_command", counted)
+        p.run(sleep=lambda s: None)
+    unknown = [c.split("\n")[2] for c in sent if c.startswith("r\nu\n")]  # reflect-unknown
+    assert not {"org", "java", "scala"} & set(unknown), unknown
+    commands = [c for c in sent if not c.startswith("m\nd\n")]
+    assert 0 < len(commands) <= 1.25 * WARM_DAG_PY4J_COMMANDS
+
+
 DQ_FAILURES = {
     "empty_claims": dict(claims=CLAIMS_HEADER),
     # P003 has no claim, so the LEFT join cannot fan out: only the check sees it
@@ -162,7 +197,7 @@ def test_dq_failure_leaves_published_table_untouched(spark, tmp_path, monkeypatc
         _pipeline(spark, tmp_path, out, **DQ_FAILURES[case]).run(sleep=lambda s: None)
     assert isinstance(err.value.__cause__, dq.DataQualityError)
     assert _tree_bytes(out) == before
-    assert not os.path.exists(out + ".next")
+    assert _no_stage_left(out)
 
 
 def test_missing_column_fails_the_load_task(spark, tmp_path):
@@ -174,35 +209,75 @@ def test_missing_column_fails_the_load_task(spark, tmp_path):
     assert isinstance(err.value.__cause__, MissingColumnsError)
 
 
+def _no_stage_left(out) -> bool:
+    import os
+
+    return not os.path.exists(out + ".next") and not os.path.exists(out + ".ready")
+
+
 def test_crash_before_checks_never_promotes_unchecked_stage(spark, tmp_path):
     """First publish, crash after staging and before the checks: the staged
-    dir has no ``_SUCCESS``.  A later run must not promote it — here that
-    run fails its own checks, and no table is published at all."""
+    dir is a ``.next``, never approved to ``.ready``.  A later run must not
+    promote it — here that run fails its own checks, and no table is
+    published at all."""
     import os
 
     out = str(tmp_path / "patient_claims_plus")
     _run_tasks(_pipeline(spark, tmp_path, out), "load_claims", "load_beneficiary", "join_and_publish")
-    assert os.path.isdir(out + ".next") and not os.path.exists(out + ".next/_SUCCESS")
+    assert os.path.isdir(out + ".next") and not os.path.exists(out + ".ready")
     assert not os.path.exists(out)
     with pytest.raises(PipelineError):
         _pipeline(spark, tmp_path, out, claims=CLAIMS_HEADER).run(sleep=lambda s: None)
-    assert not os.path.exists(out) and not os.path.exists(out + ".next")
+    assert not os.path.exists(out) and _no_stage_left(out)
 
 
 def test_crash_between_delete_and_rename_promotes_checked_table(spark, tmp_path):
-    """Crash inside the swap: the table dir is gone and only the checked,
-    marked staged dir holds it.  The next run promotes it before staging,
-    so even when that run fails its checks the checked table is live."""
+    """Crash inside the swap: the table dir is gone and only the approved
+    ``.ready`` dir holds it.  The next run promotes it before staging, so
+    even when that run fails its checks the checked table is live."""
     import os
 
     out = str(tmp_path / "patient_claims_plus")
     _pipeline(spark, tmp_path, out).run(sleep=lambda s: None)
     before = _tree_bytes(out)
-    os.rename(out, out + ".next")
+    os.rename(out, out + ".ready")
     with pytest.raises(PipelineError):
         _pipeline(spark, tmp_path, out, claims=CLAIMS_HEADER).run(sleep=lambda s: None)
     assert _tree_bytes(out) == before
-    assert not os.path.exists(out + ".next")
+    assert _no_stage_left(out)
+
+
+@pytest.mark.parametrize("next_run_passes", [True, False])
+def test_crash_between_approval_and_delete_promotes_approved_table(
+    spark, tmp_path, next_run_passes
+):
+    """Crash after the approval rename and before the delete: the old table
+    and the approved ``.ready`` dir both exist.  The next run replaces the
+    old table with the approved one before it stages, so no approved row is
+    lost if that run fails its checks, and a run that passes publishes its
+    own table, not the approved one (its stage renamed into the leftover
+    ``.ready`` would land inside it)."""
+    import os
+
+    out = str(tmp_path / "patient_claims_plus")
+    three_claims = "".join(CLAIMS_CSV.splitlines(keepends=True)[:-1])
+    _pipeline(spark, tmp_path, out, claims=three_claims).run(sleep=lambda s: None)
+    _run_tasks(
+        _pipeline(spark, tmp_path, out),
+        *("load_claims", "load_beneficiary", "join_and_publish", "dq_claims", "dq_beneficiary"),
+    )
+    os.rename(out + ".next", out + ".ready")  # the approval, then the crash
+    approved = _tree_bytes(out + ".ready")
+    assert _tree_bytes(out) != approved
+    if next_run_passes:
+        _pipeline(spark, tmp_path, out, claims=three_claims).run(sleep=lambda s: None)
+        assert spark.read.parquet(out).count() == 3
+        assert not any(os.path.isdir(os.path.join(out, f)) for f in os.listdir(out))
+    else:
+        with pytest.raises(PipelineError):
+            _pipeline(spark, tmp_path, out, claims=CLAIMS_HEADER).run(sleep=lambda s: None)
+        assert _tree_bytes(out) == approved
+    assert _no_stage_left(out)
 
 
 def test_retried_publish_is_judged_by_its_own_metrics(spark, tmp_path, monkeypatch):

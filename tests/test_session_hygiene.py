@@ -125,6 +125,7 @@ def test_stream_upsert_pins_nothing_per_batch(spark, tmp_path):
         q.stop()
     assert _persistent_rdds(spark) == before
     assert not os.path.exists(str(tmp_path / "target") + ".next")
+    assert not os.path.exists(str(tmp_path / "target") + ".ready")
     got = {r["key"]: r["val"] for r in spark.read.parquet(str(tmp_path / "target")).collect()}
     assert got == {k: f"v{n_batches - 1}" for k in range(5)}
 
@@ -151,6 +152,7 @@ class _ChangeFeed:
         self.src.mkdir()
         self.target = str(tmp_path / "target")
         self.staging = self.target + ".next"
+        self.ready = self.target + ".ready"
         self.pending = [(self._write(i, rows), rows) for i, rows in enumerate(batches)]
         self.delivered = []
 
@@ -200,28 +202,55 @@ class _ChangeFeed:
         rows = sorted((r for b in self.delivered for r in b), key=lambda r: r[2])
         return {k: (v, seq) for k, v, seq in rows}
 
+    def no_stage_left(self) -> bool:
+        return not os.path.exists(self.staging) and not os.path.exists(self.ready)
+
 
 def test_stream_upsert_promotes_committed_staging(spark, tmp_path):
     """Crash between the swap's delete and its rename: the table dir is gone
-    and only the committed staged copy (with ``_SUCCESS``) holds the data.
-    The next micro-batch promotes it before merging, so no row is lost and
-    no staged dir is left."""
+    and only the approved ``.ready`` copy holds the data.  The next
+    micro-batch promotes it before merging, so no row is lost and no staged
+    dir is left.  The commit writes no marker file."""
     feed = _ChangeFeed(spark, tmp_path, CHANGES)
     feed.deliver()
     feed.deliver()
     feed.drain()
-    os.rename(feed.target, feed.staging)
-    assert os.path.exists(os.path.join(feed.staging, "_SUCCESS"))
+    assert not os.path.exists(os.path.join(feed.target, "_SUCCESS"))
+    os.rename(feed.target, feed.ready)
     feed.deliver()
     feed.drain()
     assert feed.table() == feed.last_write_wins()
-    assert not os.path.exists(feed.staging)
+    assert feed.no_stage_left()
+
+
+def test_stream_upsert_promotes_approved_staging_beside_target(spark, tmp_path):
+    """Crash between the approval and the delete: an older table and the
+    approved ``.ready`` copy both exist.  The next micro-batch must merge
+    into the approved copy: merged into the older table, the second batch's
+    rows (key 4, and key 2's update) would be lost."""
+    import shutil
+
+    feed = _ChangeFeed(spark, tmp_path, CHANGES)
+    feed.deliver()
+    feed.drain()
+    older = str(tmp_path / "older")
+    shutil.copytree(feed.target, older)
+    feed.deliver()
+    feed.drain()
+    os.rename(feed.target, feed.ready)
+    os.rename(older, feed.target)
+    feed.deliver()
+    feed.drain()
+    assert feed.table() == feed.last_write_wins()
+    assert feed.no_stage_left()
 
 
 def test_stream_upsert_overwrites_uncommitted_staging(spark, tmp_path):
-    """Crash while staging: the table is intact and the staged dir holds a
-    partial write without ``_SUCCESS``.  It must never be promoted; the next
-    micro-batch overwrites it and swaps in its own merge."""
+    """Crash while staging: the table is intact and the staged ``.next`` dir
+    holds a partial write, here with the committer's ``_SUCCESS`` in it: only
+    the rename to ``.ready`` approves a stage, never a marker.  It must never
+    be promoted; the next micro-batch overwrites it and swaps in its own
+    merge."""
     feed = _ChangeFeed(spark, tmp_path, CHANGES)
     feed.deliver()
     feed.deliver()
@@ -229,11 +258,11 @@ def test_stream_upsert_overwrites_uncommitted_staging(spark, tmp_path):
     spark.createDataFrame([(99, "torn", 99)], "key long, val string, seq long").write.parquet(
         feed.staging
     )
-    os.remove(os.path.join(feed.staging, "_SUCCESS"))
+    assert os.path.exists(os.path.join(feed.staging, "_SUCCESS"))
     feed.deliver()
     feed.drain()
     assert feed.table() == feed.last_write_wins()
-    assert not os.path.exists(feed.staging)
+    assert feed.no_stage_left()
 
 
 def test_stream_upsert_runs_at_most_three_jobs_per_batch(spark, tmp_path):
